@@ -77,6 +77,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from kafka_workers_spark import store
+
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Symmetrized distinct adjacency ``(__s, __d)`` built in ONE pass
@@ -130,24 +132,17 @@ def checkpointed_rdd_ids(df: DataFrame) -> set[int]:
         return set()
 
 
-#: Internal knobs for the CC loop, A/B'd in r16 (scripts/probe_r16.py
-#: cc_ab, interleaved same-session reps, identical label checksums): how
-#: many propagate steps each action batches, and whether the batched
-#: intermediate is lazily checkpointed so its downstream references
-#: share one materialization instead of re-running the step's join+agg
-#: per reference. Measured at sf0.1 (min/med of 3):
+#: Propagate steps batched per CC action, A/B'd in r16 (interleaved
+#: same-session reps, identical label checksums). Measured at sf0.1
+#: (min/med of 3; "pin" = the batched intermediate lazily checkpointed):
 #:   steps=1            9.34 / 10.41 s, 14 actions
 #:   steps=2 pin=True   9.45 /  9.55 s,  8 actions   <- adopted
 #:   steps=2 pin=False 12.13 / 12.81 s,  8 actions   (3x step recompute)
 #:   steps=3 pin=True  10.56 / 10.67 s,  6 actions   (plan depth > savings)
-#: Locally 2/True is median-neutral-to-better; the adoption argument is
-#: the action count — every action is a driver round-trip locally and a
-#: full cluster barrier at 10^9 edges, and batching halves it. The
-#: intermediate lazy checkpoint materializes INSIDE the round's single
-#: job (no extra action); its RDD pin is freed with the round's other
-#: superseded pins.
+#: Locally 2 is median-neutral-to-better; the adoption argument is the
+#: action count — every action is a driver round-trip locally and a full
+#: cluster barrier at 10^9 edges, and batching halves it.
 _CC_STEPS_PER_ACTION = 2
-_CC_PIN_INTERMEDIATE = True
 
 
 def connected_components(
@@ -439,12 +434,13 @@ def connected_components(
             propagated = _step(labels)
             inter_ids: set[int] = set()
             for _ in range(steps_per_action - 1):
-                if _CC_PIN_INTERMEDIATE:
-                    # lazy: materializes inside the round's single job;
-                    # freed right after the action (it only exists to
-                    # serve this round's downstream references)
-                    propagated = _pin(propagated)
-                    inter_ids |= _pinned_ids(propagated)
+                # the batched step's downstream references share one
+                # materialization inside the round's single job; it is
+                # round scratch, freed right after the action, so it is
+                # always a LOCAL checkpoint — a reliable one would grow
+                # the checkpoint dir by one RDD per round
+                propagated = propagated.localCheckpoint(eager=False)
+                inter_ids |= _pinned_ids(propagated)
                 propagated = _step(propagated)
             new_labels = _pin(propagated)
             new_ids = _pinned_ids(new_labels)
@@ -461,8 +457,10 @@ def connected_components(
                 return labels
             prev_sum = cur_sum
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds "
-            "(component diameter exceeds max_rounds); raise max_rounds"
+            f"connected_components did not converge in {max_rounds} actions "
+            f"({max_rounds * steps_per_action} propagate steps, "
+            f"{steps_per_action} per action); the component diameter exceeds "
+            "that — raise max_rounds"
         )
     finally:
         if restore_parts is not None:
@@ -1090,7 +1088,6 @@ def neighbor_jaccard(
 # Stored components artifact (compute once, consume many — VERDICT r12 #4)
 # ---------------------------------------------------------------------------
 
-#: layout version stamped into the meta table; bumped on any schema change
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1275,6 +1272,7 @@ def shortest_paths(
     return dist
 
 
+#: layout version stamped into the meta table; bumped on any schema change
 _COMPONENTS_STORE_VERSION = 1
 
 
@@ -1304,13 +1302,15 @@ def components_write(
     from the one the reader expects, so a stale artifact fails loudly
     instead of silently serving old groups. ``mode`` passes through to
     the parquet writer (``overwrite`` for re-ingest)."""
-    spark = comp.sparkSession
     comp.select(node_col, comp_col).write.mode(mode).parquet(f"{path}/mapping")
-    meta = spark.createDataFrame(
-        [(node_col, comp_col, fingerprint, _COMPONENTS_STORE_VERSION)],
-        "node_col string, comp_col string, fingerprint string, version int",
+    store.write_meta(
+        comp.sparkSession,
+        path,
+        "node_col string, comp_col string, fingerprint string",
+        (node_col, comp_col, fingerprint),
+        _COMPONENTS_STORE_VERSION,
+        mode,
     )
-    meta.write.mode(mode).parquet(f"{path}/meta")
 
 
 def components_read(
@@ -1322,17 +1322,10 @@ def components_read(
     filters on the node id still pushes its predicate into the scan.
     With ``expect_fingerprint``, a store built from a different input
     snapshot raises instead of serving stale groups."""
-    row = spark.read.parquet(f"{path}/meta").collect()
-    if len(row) != 1:
-        raise ValueError(f"components_read: expected one meta row, got {len(row)}")
-    if row[0].version != _COMPONENTS_STORE_VERSION:
+    meta = store.read_meta(spark, path, _COMPONENTS_STORE_VERSION, "components_read")
+    if expect_fingerprint is not None and meta.fingerprint != expect_fingerprint:
         raise ValueError(
-            f"components_read: layout version {row[0].version} != "
-            f"{_COMPONENTS_STORE_VERSION} — rebuild the store with this package"
-        )
-    if expect_fingerprint is not None and row[0].fingerprint != expect_fingerprint:
-        raise ValueError(
-            f"components_read: store fingerprint {row[0].fingerprint!r} != "
+            f"components_read: store fingerprint {meta.fingerprint!r} != "
             f"expected {expect_fingerprint!r} — the store is stale for this "
             "input; rebuild it"
         )

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kafka_workers_spark import store
 from kafka_workers_spark.operators.dedup import (
     cosine_from_fixed,
     embedding_fixed,
@@ -52,19 +53,6 @@ def train_ivf(
         .drop("__features", "__list")
     )
     return model, assigned
-
-
-#: Pin the widened training frame so the per-iteration assignment passes
-#: and the final assignment read ONE materialization instead of
-#: re-running the widen aggregate per consumer (the exchange below it is
-#: runtime-reused; the aggregate above is not). r16 interleaved A/B at
-#: sf0.1, min/med of 3 (scripts/probe_r16.py kmeans_ab):
-#:   text_cluster_topics 8.35/10.31 -> 7.74/7.90, ann_ivf_topk
-#:   5.18/6.33 -> 5.05/5.29, ann_semantic_dedup 5.59/7.45 -> 6.02/6.21.
-#: Adopted: medians improve across all consumers; the pinned frame is
-#: the TRAINING side (a sample at scale), docs x one-array rows, and
-#: generation_pin releases the previous training's pin.
-_KMEANS_PIN_WIDE = True
 
 
 def kmeans_fixed(
@@ -150,9 +138,11 @@ def kmeans_fixed(
         )
 
     wide_train = widen(train)
-    if _KMEANS_PIN_WIDE and iters > 0:
+    if iters > 0:
         from kafka_workers_spark.operators.dedup import generation_pin
 
+        # one materialization for every assignment pass and the final
+        # read: the widen aggregate is not runtime-reused (r16 A/B)
         wide_train = generation_pin(wide_train, "similarity.kmeans_fixed.wide")
     seeds = train.select(id_col).distinct().orderBy(id_col).limit(k)
     cents_row = one_row_cents(
@@ -1047,9 +1037,10 @@ def pq_train(
         )
 
     wide_t = widen(tcomp)
-    if _KMEANS_PIN_WIDE and iters > 0:
+    if iters > 0:
         from kafka_workers_spark.operators.dedup import generation_pin
 
+        # one materialization for every assignment pass (kmeans_fixed's pin)
         wide_t = generation_pin(wide_t, "similarity.pq_train.wide")
     cents_row = cents_row_of(cents)
     for _ in range(iters):
@@ -1319,16 +1310,18 @@ def ann_write_index(index: IvfPqIndex, path: str, mode: str = "error") -> None:
     layout version). Build at ingest (kmeans_fixed → assign_lists →
     pq_train), write once; every later search starts from
     :func:`ann_read_index` without re-training or re-encoding."""
-    spark = index.ivf_cents.sparkSession
     index.ivf_cents.write.mode(mode).parquet(f"{path}/ivf_cents")
     index.pq_cents.write.mode(mode).parquet(f"{path}/pq_cents")
     index.codes.write.mode(mode).parquet(f"{path}/codes")
     index.assign.write.mode(mode).parquet(f"{path}/assign")
-    meta = spark.createDataFrame(
-        [(index.id_col, index.dsub, _ANN_INDEX_VERSION)],
-        "id_col string, dsub int, version int",
+    store.write_meta(
+        index.ivf_cents.sparkSession,
+        path,
+        "id_col string, dsub int",
+        (index.id_col, index.dsub),
+        _ANN_INDEX_VERSION,
+        mode,
     )
-    meta.write.mode(mode).parquet(f"{path}/meta")
 
 
 def ann_read_index(spark, path: str) -> IvfPqIndex:
@@ -1337,21 +1330,14 @@ def ann_read_index(spark, path: str) -> IvfPqIndex:
     pattern); the four data frames stay lazy parquet scans — a probed
     search's broadcast list filter reaches the codes scan as a
     partition-prunable join."""
-    row = spark.read.parquet(f"{path}/meta").collect()
-    if len(row) != 1:
-        raise ValueError(f"ann_read_index: expected one meta row, got {len(row)}")
-    if row[0].version != _ANN_INDEX_VERSION:
-        raise ValueError(
-            f"ann_read_index: layout version {row[0].version} != "
-            f"{_ANN_INDEX_VERSION} — rebuild the index with this package"
-        )
+    meta = store.read_meta(spark, path, _ANN_INDEX_VERSION, "ann_read_index")
     return IvfPqIndex(
         ivf_cents=spark.read.parquet(f"{path}/ivf_cents"),
         pq_cents=spark.read.parquet(f"{path}/pq_cents"),
         codes=spark.read.parquet(f"{path}/codes"),
         assign=spark.read.parquet(f"{path}/assign"),
-        dsub=row[0].dsub,
-        id_col=row[0].id_col,
+        dsub=meta.dsub,
+        id_col=meta.id_col,
     )
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kafka_workers_spark import store
+
 # Tiny public stopword lexicons (top function words per language) — the
 # standard lexicon-overlap language-ID heuristic. Extend per deployment.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -988,15 +990,18 @@ def bm25_write_index(index: Bm25Index, path: str, mode: str = "error") -> None:
     (impl/offsets/DefaultOffsetsState.java — state that survives process
     restart). ``mode`` passes through to the parquet writer
     (``overwrite`` for re-ingest)."""
-    spark = index.stats.sparkSession
     index.tf.write.mode(mode).parquet(f"{path}/tf")
     index.dl.write.mode(mode).parquet(f"{path}/dl")
     index.df.write.mode(mode).parquet(f"{path}/df")
     index.stats.write.mode(mode).parquet(f"{path}/stats")
-    meta = spark.createDataFrame(
-        [(index.id_col, _BM25_INDEX_VERSION)], "id_col string, version int"
+    store.write_meta(
+        index.stats.sparkSession,
+        path,
+        "id_col string",
+        (index.id_col,),
+        _BM25_INDEX_VERSION,
+        mode,
     )
-    meta.write.mode(mode).parquet(f"{path}/meta")
 
 
 def bm25_read_index(spark, path: str) -> Bm25Index:
@@ -1006,20 +1011,13 @@ def bm25_read_index(spark, path: str) -> Bm25Index:
     frames stay lazy parquet scans, so a search that prunes terms via
     ``max_df_fraction`` still pushes its filters into the postings
     scan."""
-    row = spark.read.parquet(f"{path}/meta").collect()
-    if len(row) != 1:
-        raise ValueError(f"bm25_read_index: expected one meta row, got {len(row)}")
-    if row[0].version != _BM25_INDEX_VERSION:
-        raise ValueError(
-            f"bm25_read_index: layout version {row[0].version} != "
-            f"{_BM25_INDEX_VERSION} — rebuild the index with this package"
-        )
+    meta = store.read_meta(spark, path, _BM25_INDEX_VERSION, "bm25_read_index")
     return Bm25Index(
         tf=spark.read.parquet(f"{path}/tf"),
         dl=spark.read.parquet(f"{path}/dl"),
         df=spark.read.parquet(f"{path}/df"),
         stats=spark.read.parquet(f"{path}/stats"),
-        id_col=row[0].id_col,
+        id_col=meta.id_col,
     )
 
 
@@ -1868,13 +1866,6 @@ def bpe_train(
     return merges
 
 
-#: Lazily checkpoint the initial symbol frame so round 1's two references
-#: (argmax broadcast + merge fold) share one corpus word-count
-#: materialization. r16 interleaved A/B at sf0.1 (scripts/probe_r16.py
-#: bpe_ab, min/med of 3): off 4.78/5.59 s, on 4.03/5.07 s — adopted.
-_BPE_PIN_SYMS0 = True
-
-
 def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
     """Fixed-round BPE training as ONE lazy Spark plan — zero driver
     collects: round k's argmax pair is a 1-row ``orderBy(cnt DESC,
@@ -1898,12 +1889,10 @@ def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
     property. Production rule counts use :func:`bpe_train`'s driver
     loop."""
     wc = bpe_word_counts(docs, text_col)
+    # round 1 references syms twice (argmax broadcast + merge fold); the
+    # lazy pin stops the corpus word count re-deriving per reference
     syms = wc.select(F.split("word", "").alias("symbols"), "n")
-    if _BPE_PIN_SYMS0:
-        # round 1 references syms twice (the argmax broadcast and the
-        # merge fold); the corpus-wide word-count aggregate re-derives
-        # per reference when runtime exchange reuse does not cover it
-        syms = syms.localCheckpoint(eager=False)
+    syms = syms.localCheckpoint(eager=False)
     rounds = []
     for k in range(1, n_merges + 1):
         top = (
@@ -2270,12 +2259,10 @@ def posindex_write(index, path: str, id_col: str = "doc_id", mode: str = "error"
     analog: the stored offsets contract
     (impl/offsets/DefaultOffsetsState.java — state that survives process
     restart). ``mode`` passes through to the parquet writer."""
-    spark = index.sparkSession
     index.select(id_col, "pos", "term").write.mode(mode).parquet(f"{path}/postings")
-    meta = spark.createDataFrame(
-        [(id_col, _POSINDEX_VERSION)], "id_col string, version int"
+    store.write_meta(
+        index.sparkSession, path, "id_col string", (id_col,), _POSINDEX_VERSION, mode
     )
-    meta.write.mode(mode).parquet(f"{path}/meta")
 
 
 def posindex_read(spark, path: str):
@@ -2285,15 +2272,8 @@ def posindex_read(spark, path: str):
     stays a lazy parquet scan, so a phrase query's ``term = 'x'``
     predicate still pushes into the postings scan and prunes it to the
     queried terms' posting lists."""
-    row = spark.read.parquet(f"{path}/meta").collect()
-    if len(row) != 1:
-        raise ValueError(f"posindex_read: expected one meta row, got {len(row)}")
-    if row[0].version != _POSINDEX_VERSION:
-        raise ValueError(
-            f"posindex_read: layout version {row[0].version} != "
-            f"{_POSINDEX_VERSION} — rebuild the index with this package"
-        )
-    return spark.read.parquet(f"{path}/postings"), row[0].id_col
+    meta = store.read_meta(spark, path, _POSINDEX_VERSION, "posindex_read")
+    return spark.read.parquet(f"{path}/postings"), meta.id_col
 
 
 def posindex_merge(a, b, id_col: str = "doc_id"):

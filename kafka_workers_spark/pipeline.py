@@ -36,6 +36,7 @@ from kafka_workers_spark.operators.text import (
     tokenize_stage,
     tokens,
 )
+from kafka_workers_spark.store import swap_output  # noqa: F401 — re-exported
 
 
 def quality_filter(
@@ -732,71 +733,6 @@ def compact_landed_corpus(
         id_col
     )
     return chunks.join(survivors, id_col, "left_semi")
-
-
-def swap_output(tmp_dir: str, final_dir: str) -> None:
-    """Crash-safe publish of a rewritten corpus directory — the "atomically
-    swap the compacted output in" step of :func:`compact_landed_corpus`,
-    made concrete: write the compacted table to ``tmp_dir`` first (Spark's
-    committer leaves a ``_SUCCESS`` marker on a completed job), then call
-    this to move it over ``final_dir`` such that NO crash point loses the
-    old corpus before the new one is fully in place.
-
-    Recipe (single-filesystem renames, each one atomic):
-      1. refuse a ``tmp_dir`` without ``_SUCCESS`` (half-written job);
-      2. park the old corpus: rename ``final_dir`` → ``final_dir.pre-swap``;
-      3. rename ``tmp_dir`` → ``final_dir``;
-      4. delete the parked backup.
-    A crash between any two steps is recoverable, and RERUNNING this
-    function completes the swap: backup-present/final-missing restores
-    then redoes the swap; backup-present/final-complete (crash between
-    3 and 4) just finishes the cleanup. Readers either see the old
-    corpus or the new one, never a MIX — but each individual rename is
-    atomic, not the pair: between park (2) and publish (3),
-    ``final_dir`` transiently does not exist, so a reader racing the
-    swap can get ENOENT (retry-on-ENOENT on the read path, or use the
-    manifest-repoint variant below where absence is unacceptable). The
-    swap itself must be SERIALIZED — one scheduler slot, no concurrent
-    invocations: two racing swaps can each rename ``final_dir``/backup
-    and clobber the other's parked state (ADVICE r05). The crash-safety
-    claim is "any absence is one this function's RERUN repairs", not
-    "readers never observe an absence".
-
-    On an object store without atomic directory rename, publish by
-    repointing a manifest/view at the new prefix instead — the step
-    structure (complete marker → repoint → reap old) is the same, and
-    the repoint variant also closes the transient-absence window.
-    """
-    import os
-    import shutil
-
-    backup = final_dir.rstrip("/") + ".pre-swap"
-    tmp_complete = os.path.exists(os.path.join(tmp_dir, "_SUCCESS"))
-    final_complete = os.path.exists(os.path.join(final_dir, "_SUCCESS"))
-    if not tmp_complete:
-        if final_complete and os.path.exists(backup) and not os.path.exists(tmp_dir):
-            # a prior swap crashed between steps 3 and 4: the new corpus
-            # is live, only the parked backup remains — finish cleanup
-            shutil.rmtree(backup)
-            return
-        raise ValueError(
-            f"swap_output: {tmp_dir} has no _SUCCESS marker — refusing to "
-            "publish a potentially half-written job output"
-        )
-    if os.path.exists(backup):
-        if os.path.exists(final_dir):
-            # a prior completed swap left its backup (or a stale one):
-            # reap it before parking the current corpus
-            shutil.rmtree(backup)
-        else:
-            # a prior swap crashed between steps 2 and 3: restore the
-            # parked corpus, then redo the swap from a clean state
-            os.rename(backup, final_dir)
-    if os.path.exists(final_dir):
-        os.rename(final_dir, backup)
-    os.rename(tmp_dir, final_dir)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
 
 
 def split_corpus(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_workers_spark import store
 from kafka_workers_spark.operators.dedup import (
 
     barrier,
@@ -576,9 +577,6 @@ def _cc_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stored components artifact (compute once, consume many — VERDICT r12 #4)
 # ---------------------------------------------------------------------------
 
-_CC_STORE_LOCK = __import__("threading").Lock()
-
-
 def _cc_store_root() -> str:
     """Store root: tmpfs when available (the pytest basetemp rationale —
     the mapping is MBs at test SFs), overridable for a real deployment
@@ -652,22 +650,23 @@ def _cc_store(
     and the driver's DuckDB oracle replays the full recursive closure
     against whatever the consumer returns.
 
-    Concurrency: in-process builds serialize on a lock (the EXTRA oracle
-    sweep runs queries on 6 threads) plus an fcntl file lock so builds
-    in SEPARATE processes serialize too (ADVICE r13 #2 — without it a
-    cross-process rebuild could prune a generation backing another
-    process's lazy scan), and publishing is an ATOMIC symlink repoint
-    over immutable generation dirs — ``root/fp`` is a symlink to
-    ``root/fp.v-*``; a rebuild writes a fresh generation and repoints in
-    one rename, so a concurrent lazy scan of the previous generation
-    never sees a half-swapped dir or vanishing files. Pruning keeps the
-    just-published generation, the generation the symlink pointed to
-    BEFORE the repoint (it may back an in-flight scan), and the newest
-    survivor by mtime — never the resolved link target, even when a
-    crashed rebuild left an orphaned newer generation that was never
-    published (ADVICE r13 #2: mtime order alone would then delete the
-    generation the link still serves). mtimes of concurrently-removed
-    dirs read as 0 instead of raising.
+    Concurrency: the check-then-build runs under one ``store.lock`` file
+    lock, which serializes builds across threads (the EXTRA oracle
+    sweep runs queries on 6 threads) and across processes (ADVICE r13
+    #2 — without it a cross-process rebuild could prune a generation
+    backing another process's lazy scan). Publishing is an ATOMIC
+    symlink repoint over immutable generation dirs — ``root/fp`` is a
+    symlink to ``root/fp.v-*``; a rebuild writes a fresh generation and
+    repoints in one rename, so a concurrent lazy scan of the previous
+    generation never sees a half-swapped dir or vanishing files (the
+    reason this store does not use store.py's rename swap). Pruning
+    keeps the just-published generation, the generation the symlink
+    pointed to BEFORE the repoint (it may back an in-flight scan), and
+    the newest survivor by mtime — never the resolved link target, even
+    when a crashed rebuild left an orphaned newer generation that was
+    never published (ADVICE r13 #2: mtime order alone would then delete
+    the generation the link still serves). mtimes of
+    concurrently-removed dirs read as 0 instead of raising.
 
     ``snapshot_id`` selects the production zero-I/O fingerprint mode
     (see :func:`_corpus_fingerprint`); ``force_rebuild`` bypasses the
@@ -691,61 +690,56 @@ def _cc_store(
         except OSError:
             return 0.0  # removed by a concurrent pruner: sorts oldest
 
-    with _CC_STORE_LOCK:
+    with store.lock(f"{root}/.{fp}.buildlock"):
         if force_rebuild or not os.path.isdir(f"{link}/meta"):
-            os.makedirs(root, exist_ok=True)
-            import fcntl
-
-            with open(f"{root}/.{fp}.buildlock", "w") as lockf:
-                fcntl.flock(lockf, fcntl.LOCK_EX)
-                try:
-                    # the generation the CURRENT link serves — immune to
-                    # pruning regardless of mtime order (an unpublished
-                    # orphan from a crashed rebuild may be newer)
-                    served = os.readlink(link) if os.path.islink(link) else None
-                except OSError:
-                    served = None
-                comp = _cc_groups(spark, sf_dir).select(
-                    F.col("doc_id").alias("node"), F.col("group_id").alias("comp")
+            try:
+                # the generation the CURRENT link serves — immune to
+                # pruning regardless of mtime order (an unpublished
+                # orphan from a crashed rebuild may be newer)
+                served = os.readlink(link) if os.path.islink(link) else None
+            except OSError:
+                served = None
+            comp = _cc_groups(spark, sf_dir).select(
+                F.col("doc_id").alias("node"), F.col("group_id").alias("comp")
+            )
+            gens = sorted(
+                (d for d in os.listdir(root) if d.startswith(f"{fp}.v-")),
+                key=lambda d: _mtime(f"{root}/{d}"),
+            )
+            # ADVICE r14 #1: the sequence number must come from
+            # max(existing suffixes)+1, NOT len(gens) — pruning holds
+            # the population at ~2, so len() repeats and the repeated
+            # name can be the SERVED generation, which a
+            # mode='overwrite' write would then rewrite in place under
+            # a concurrent lazy reader (breaking the immutable-
+            # generation invariant). max()+1 never reuses a name even
+            # after pruning; the build lock serializes writers so two
+            # processes cannot draw the same number.
+            seq = 1 + max(
+                (int(d.rsplit("-", 1)[1]) for d in gens if d.rsplit("-", 1)[1].isdigit()),
+                default=-1,
+            )
+            gen = f"{fp}.v-{os.getpid()}-{threading.get_ident()}-{seq}"
+            if os.path.exists(f"{root}/{gen}"):  # never overwrite a live dir
+                raise RuntimeError(
+                    f"components store: generation name {gen!r} already "
+                    "exists — refusing to rewrite an immutable generation"
                 )
-                gens = sorted(
-                    (d for d in os.listdir(root) if d.startswith(f"{fp}.v-")),
-                    key=lambda d: _mtime(f"{root}/{d}"),
-                )
-                # ADVICE r14 #1: the sequence number must come from
-                # max(existing suffixes)+1, NOT len(gens) — pruning holds
-                # the population at ~2, so len() repeats and the repeated
-                # name can be the SERVED generation, which a
-                # mode='overwrite' write would then rewrite in place under
-                # a concurrent lazy reader (breaking the immutable-
-                # generation invariant). max()+1 never reuses a name even
-                # after pruning; the fcntl lock serializes writers so two
-                # processes cannot draw the same number.
-                seq = 1 + max(
-                    (int(d.rsplit("-", 1)[1]) for d in gens if d.rsplit("-", 1)[1].isdigit()),
-                    default=-1,
-                )
-                gen = f"{fp}.v-{os.getpid()}-{threading.get_ident()}-{seq}"
-                if os.path.exists(f"{root}/{gen}"):  # never overwrite a live dir
-                    raise RuntimeError(
-                        f"components store: generation name {gen!r} already "
-                        "exists — refusing to rewrite an immutable generation"
-                    )
-                components_write(
-                    comp, f"{root}/{gen}", mode="overwrite", fingerprint=fp
-                )
-                # atomic publish: symlink rename replaces the pointer in
-                # one syscall; readers resolve either the old or the new
-                # generation, never a partial state
-                tmplink = f"{root}/.{gen}.link"
-                if os.path.islink(tmplink) or os.path.exists(tmplink):
-                    os.unlink(tmplink)
-                os.symlink(gen, tmplink)
-                os.rename(tmplink, link)
-                keep = {gen, served, gens[-1] if gens else None}
-                for stale in gens:
-                    if stale not in keep:
-                        shutil.rmtree(f"{root}/{stale}", ignore_errors=True)
+            components_write(
+                comp, f"{root}/{gen}", mode="overwrite", fingerprint=fp
+            )
+            # atomic publish: symlink rename replaces the pointer in
+            # one syscall; readers resolve either the old or the new
+            # generation, never a partial state
+            tmplink = f"{root}/.{gen}.link"
+            if os.path.islink(tmplink) or os.path.exists(tmplink):
+                os.unlink(tmplink)
+            os.symlink(gen, tmplink)
+            os.rename(tmplink, link)
+            keep = {gen, served, gens[-1] if gens else None}
+            for stale in gens:
+                if stale not in keep:
+                    shutil.rmtree(f"{root}/{stale}", ignore_errors=True)
     return components_read(spark, link, expect_fingerprint=fp).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("group_id")
     )

@@ -19,14 +19,11 @@ binary is merge-order-sensitive across its sparse/dense mode boundary,
 which would reduce every pin to "estimates roughly agree" — the
 maintenance folds pin equality, not plausibility.
 
-Discipline inherited from streaming/maintenance.py (the stored-offsets
-contract, reference impl/offsets/DefaultOffsetsState.java): the batch
-marker (batch id + checkpoint lineage) commits ATOMICALLY with the data
-via the swap_output rename dance, a replayed batch id is a no-op, a
-foreign lineage fails loudly, and a torn swap heals before any read.
-Like the components merge — and unlike merge_scd2 — the KMV fold is
+Publish, replay marker, lineage and torn-swap heal are the
+replace-publish protocol of :mod:`kafka_workers_spark.store`. Like the
+components merge — and unlike merge_scd2 — the KMV fold is
 replay-IDEMPOTENT by construction (set union is idempotent), so the
-marker is belt-and-suspenders; a mixed-``k`` fold into an existing
+marker only skips redundant work; a mixed-``k`` fold into an existing
 store raises in-plan (kmv_merge's guard), the blocking-parameter
 discipline of the dedup band index. Reference analog: the accumulated
 per-sensor counters that survive across punctuations
@@ -51,7 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_workers_spark.functions.sketches import kmv_build, kmv_merge
-from kafka_workers_spark.streaming.maintenance import _heal_torn_swap
+from kafka_workers_spark.streaming.sketch_store import (
+    read_sketch_store,
+    sketch_store_fold,
+)
 
 
 def cardinality_fold(
@@ -73,11 +73,9 @@ def cardinality_fold(
     the exactly-mergeable-sketch maintenance contract, alongside the
     HDR quantile and CMS frequency stores. Store layout: parquet
     ``(*partition_cols, hashes, n_distinct_capped, k)`` + the
-    ``_kw_batch`` marker."""
+    store.py batch marker."""
     if not partition_cols:
         raise ValueError("partition_cols must be non-empty")
-    from kafka_workers_spark.streaming.sketch_store import sketch_store_fold
-
     # mixed k (a fold with different params than the store was built
     # with) raises inside kmv_merge before anything lands
     return sketch_store_fold(
@@ -97,8 +95,7 @@ def read_cardinality_store(
     estimate column when the caller states the expected ``k`` (validated
     in-plan against the stored rows by ``kmv_distinct_estimate``'s
     saturation arithmetic; a mismatched k raises on the next fold)."""
-    _heal_torn_swap(store_dir)
-    df = spark.read.parquet(store_dir)
+    df = read_sketch_store(spark, store_dir)
     if k is not None:
         from kafka_workers_spark.functions.sketches import kmv_distinct_estimate
 

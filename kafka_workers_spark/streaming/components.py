@@ -14,39 +14,29 @@ deltas), and each batch folds into the labeling via
 star contraction makes the merge O(|nodes| + |batch pairs|) edges
 converging in ~2-3 rounds, never a closure over history.
 
-Discipline inherited from streaming/maintenance.py (the stored-offsets
-contract, reference impl/offsets/DefaultOffsetsState.java): the batch
-marker (batch id + checkpoint lineage) commits ATOMICALLY with the data
-via the swap_output rename dance, a replayed batch id is a no-op, a
-foreign lineage fails loudly, and a torn swap heals before any read.
-One divergence worth naming: unlike merge_scd2, the components merge is
-REPLAY-IDEMPOTENT by construction (edge union is commutative and
-idempotent, labels are a pure function of the accumulated edge set), so
-the marker here is belt-and-suspenders — it skips redundant work and
-keeps the lineage contract identical across all maintenance folds, but
-a double-applied batch could never corrupt the labeling.
+Publish, replay marker, lineage and torn-swap heal are the
+replace-publish protocol of :mod:`kafka_workers_spark.store`. Unlike
+merge_scd2, the components merge is REPLAY-IDEMPOTENT by construction
+(edge union is commutative and idempotent, labels are a pure function
+of the accumulated edge set), so the marker here only skips redundant
+work and keeps the lineage contract identical across all maintenance
+folds; a double-applied batch could never corrupt the labeling.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_workers_spark import store
 from kafka_workers_spark.operators.components import (
     components_merge,
     components_read,
     components_write,
     connected_components,
-)
-from kafka_workers_spark.pipeline import swap_output
-from kafka_workers_spark.streaming.maintenance import (
-    _heal_torn_swap,
-    _last_applied,
-    _MARKER,
 )
 
 
@@ -65,7 +55,7 @@ def components_fold(
     republishes the full (node, comp) mapping with one atomic swap.
 
     The published store is the components_write layout (``mapping`` +
-    version-checked ``meta``) plus the maintenance ``_kw_batch`` marker
+    version-checked ``meta``) plus the store.py batch marker
     and a top-level ``_SUCCESS`` — readable by ``components_read`` like
     any other components artifact, and by :func:`read_components_store`
     which also heals torn swaps first.
@@ -76,43 +66,33 @@ def components_fold(
     billions, the bucketed-store pattern (streaming/maintenance.py)
     applies verbatim since the mapping is key-hashed like any table."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _heal_torn_swap(store_dir)
-        if batch_id <= _last_applied(store_dir, lineage):
-            return  # replay of an already-published batch
-        if batch_df.isEmpty():
-            return
-        pairs = batch_df.select(src, dst)
-        if os.path.exists(os.path.join(store_dir, "_SUCCESS")):
-            stored = components_read(spark, store_dir)
-            merged = components_merge(
-                stored,
-                pairs,
-                src=src,
-                dst=dst,
-                max_rounds=max_rounds,
-                loop_shuffle_partitions=loop_shuffle_partitions,
-            )
-        else:
-            merged = connected_components(
-                pairs,
-                src=src,
-                dst=dst,
-                max_rounds=max_rounds,
-                loop_shuffle_partitions=loop_shuffle_partitions,
-            )
-        tmp = f"{store_dir}.tmp-{batch_id}"
-        components_write(merged, tmp, mode="overwrite", fingerprint=lineage or "")
-        # swap_output's half-written-job refusal keys on a top-level
-        # _SUCCESS; components_write's two inner parquet jobs each left
-        # their own, so stamp the store-level one only after both exist
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        with open(os.path.join(tmp, _MARKER), "w") as fh:
-            json.dump({"batch_id": batch_id, "lineage": lineage}, fh)
-        swap_output(tmp, store_dir)
+    loop = dict(
+        src=src,
+        dst=dst,
+        max_rounds=max_rounds,
+        loop_shuffle_partitions=loop_shuffle_partitions,
+    )
 
-    return fold
+    def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
+        pairs = batch.select(src, dst)
+        if stored is None:
+            return connected_components(pairs, **loop)
+        return components_merge(stored, pairs, **loop)
+
+    def write(merged: DataFrame, tmp: str) -> None:
+        components_write(merged, tmp, mode="overwrite", fingerprint=lineage or "")
+        # components_write's two inner parquet jobs each left their own
+        # _SUCCESS; the store-level one goes on only after both exist
+        store.mark_complete(tmp)
+
+    return store.replace_fold(
+        spark,
+        store_dir,
+        lineage,
+        merge,
+        read=lambda d: components_read(spark, d),
+        write=write,
+    )
 
 
 def read_components_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -120,7 +100,7 @@ def read_components_store(spark: SparkSession, store_dir: str) -> DataFrame:
     store — heals a torn swap first (the read_bucketed_store rule: the
     heal must run before anything trusts the directory), then defers to
     ``components_read``'s version check."""
-    _heal_torn_swap(store_dir)
+    store.heal(store_dir)
     return components_read(spark, store_dir)
 
 

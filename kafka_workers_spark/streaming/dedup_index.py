@@ -17,7 +17,7 @@ mistake the round-13 bucketed-backfill profiling caught:
       _kw_index_meta        one JSON file: blocking parameters
                             (id_col, k, n_bands, rows_per_band,
                             shingle_n), lineage, layout version
-      _kw_index_lock        cross-process fcntl mutex (ADVICE r14 #2) —
+      _kw_index_lock        cross-process mutex (store.lock, ADVICE r14 #2) —
                             every mutator (fold append, heal reap,
                             compaction) holds it exclusively, so a
                             concurrent heal can never reap a
@@ -31,9 +31,11 @@ mistake the round-13 bucketed-backfill profiling caught:
 
 Per-batch commit is ONE atomic directory rename (write to a dot-tmp
 dir, ``os.rename`` into place), so a crash mid-write leaves only an
-ignored dot-tmp that the next fold reaps — the swap_output crash-window
-story without the park/publish dance, because an append-only log never
-replaces anything a reader holds open.
+ignored dot-tmp that the next fold reaps. This log deliberately does
+not use :mod:`kafka_workers_spark.store`'s replace-publish swap: an
+append-only log never replaces anything a reader holds open, and
+rewriting the index per batch would cost O(corpus). The lock, the
+atomic meta writer and the layout-version check are store.py's.
 
 Compaction retention (ADVICE r14 #2, second half): a reader's scan is
 LAZY — ``read_dedup_index`` lists the store under the lock but Spark
@@ -83,16 +85,14 @@ consumer lineage).
 
 from __future__ import annotations
 
-import fcntl
-import json
 import os
 import shutil
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_workers_spark import store
 from kafka_workers_spark.pipeline import dedup_pairs_incremental
 from kafka_workers_spark.streaming.components import components_fold
 
@@ -101,21 +101,13 @@ _LOCK = "_kw_index_lock"
 _INDEX_VERSION = 1
 
 
-@contextmanager
 def _index_lock(index_dir: str):
-    """Cross-process exclusive mutex over the store's MUTATIONS (ADVICE
-    r14 #2 — the _cc_store .buildlock discipline): fold appends, heal
-    reaps, and compaction all hold it, so a heal in one process can
-    never rmtree the dot-tmp a compaction in another process is still
-    writing, and two folds can never race the meta stamp. The lock file
-    is dot-less so heal's crash-leftover reap ignores it. flock is held
-    per open fd, so the mutex also serializes threads within one
-    process; it dies with the holder, so a crashed mutator never wedges
-    the store."""
-    os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, _LOCK), "w") as fh:
-        fcntl.flock(fh, fcntl.LOCK_EX)
-        yield
+    """Exclusive mutex over the store's MUTATIONS (ADVICE r14 #2): fold
+    appends, heal reaps, and compaction all hold it, so a heal in one
+    process can never rmtree the dot-tmp a compaction in another process
+    is still writing, and two folds can never race the meta stamp. The
+    lock file is dot-less so heal's crash-leftover reap ignores it."""
+    return store.lock(os.path.join(index_dir, _LOCK))
 
 
 def _index_params(
@@ -162,35 +154,16 @@ def _heal_index(index_dir: str) -> None:
 
 
 def _read_meta(index_dir: str) -> dict | None:
-    path = os.path.join(index_dir, _META)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
+    return store.read_json(os.path.join(index_dir, _META))
 
 
-def _init_or_check_meta(index_dir: str, params: dict, lineage: str | None) -> None:
-    """First touch stamps the blocking parameters + lineage atomically
-    (tmp file + rename); every later touch validates both — mismatched
-    parameters would silently make every stored band key meaningless,
-    and a foreign lineage breaks batch-id monotonicity (the
-    _last_applied contract). Callers hold :func:`_index_lock`, so two
-    first-touch folds cannot race the stamp."""
-    meta = _read_meta(index_dir)
-    if meta is None:
-        os.makedirs(index_dir, exist_ok=True)
-        tmp = os.path.join(index_dir, f".{_META}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {**params, "lineage": lineage, "version": _INDEX_VERSION}, fh
-            )
-        os.rename(tmp, os.path.join(index_dir, _META))
-        return
-    if meta.get("version") != _INDEX_VERSION:
-        raise ValueError(
-            f"dedup index {index_dir!r}: layout version {meta.get('version')} != "
-            f"{_INDEX_VERSION} — rebuild the index with this package"
-        )
+def _check_meta(index_dir: str, meta: dict, params: dict) -> None:
+    """Validate the stamped layout version and blocking parameters —
+    mismatched parameters would silently make every stored band key
+    meaningless."""
+    store.check_version(
+        f"dedup index {index_dir!r}", meta.get("version"), _INDEX_VERSION
+    )
     stored = {k: meta.get(k) for k in params}
     if stored != params:
         raise ValueError(
@@ -199,6 +172,22 @@ def _init_or_check_meta(index_dir: str, params: dict, lineage: str | None) -> No
             "parameters are meaningless together; use the stored parameters "
             "or rebuild the index"
         )
+
+
+def _init_or_check_meta(index_dir: str, params: dict, lineage: str | None) -> None:
+    """First touch stamps the blocking parameters + lineage atomically;
+    every later touch validates both — a foreign lineage breaks
+    batch-id monotonicity (the store.last_applied contract). Callers
+    hold :func:`_index_lock`, so two first-touch folds cannot race the
+    stamp."""
+    meta = _read_meta(index_dir)
+    if meta is None:
+        store.write_json(
+            os.path.join(index_dir, _META),
+            {**params, "lineage": lineage, "version": _INDEX_VERSION},
+        )
+        return
+    _check_meta(index_dir, meta, params)
     if meta.get("lineage") != lineage:
         raise RuntimeError(
             f"dedup index {index_dir!r} was written under lineage "
@@ -237,6 +226,14 @@ def _list_parts(index_dir: str, before_batch: int | None) -> list[str]:
     return parts
 
 
+def _scan(spark: SparkSession, parts: list[str], id_col: str) -> DataFrame:
+    """Union of the listed index dirs; an EMPTY correctly-typed frame
+    when nothing is committed yet."""
+    if not parts:
+        return spark.createDataFrame([], f"{id_col} long, band int, band_key string")
+    return spark.read.parquet(*parts).select(id_col, "band", "band_key")
+
+
 def read_dedup_index(
     spark: SparkSession,
     index_dir: str,
@@ -264,23 +261,9 @@ def read_dedup_index(
             raise FileNotFoundError(
                 f"dedup index {index_dir!r} has no {_META} — not an index store"
             )
-        if meta.get("version") != _INDEX_VERSION:
-            raise ValueError(
-                f"dedup index {index_dir!r}: layout version {meta.get('version')} "
-                f"!= {_INDEX_VERSION} — rebuild the index with this package"
-            )
-        stored = {p: meta.get(p) for p in params}
-        if stored != params:
-            raise ValueError(
-                f"dedup index {index_dir!r} was built with blocking parameters "
-                f"{stored} but this read expects {params}"
-            )
+        _check_meta(index_dir, meta, params)
         parts = _list_parts(index_dir, before_batch)
-    if not parts:
-        return spark.createDataFrame(
-            [], f"{id_col} long, band int, band_key string"
-        )
-    return spark.read.parquet(*parts).select(id_col, "band", "band_key")
+    return _scan(spark, parts, id_col)
 
 
 def dedup_index_fold(
@@ -332,15 +315,9 @@ def dedup_index_fold(
             if batch_df.isEmpty():
                 return
             parts = _list_parts(index_dir, before_batch=batch_id)
-        if parts:
-            index = spark.read.parquet(*parts).select(id_col, "band", "band_key")
-        else:
-            index = spark.createDataFrame(
-                [], f"{id_col} long, band int, band_key string"
-            )
         pairs, new_rows = dedup_pairs_incremental(
             batch_df,
-            index,
+            _scan(spark, parts, id_col),
             id_col=id_col,
             text_col=text_col,
             k=k,

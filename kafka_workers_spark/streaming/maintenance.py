@@ -4,27 +4,17 @@ incremental SCD1/SCD2 merges into a stored history table.
 This is the nightly-merge shape a real user runs continuously
 (VERDICT r09 #3): the stream lands observation batches, ``foreachBatch``
 folds each one through :func:`kafka_workers_spark.pipeline.merge_scd2`
-(or :func:`merge_upsert`) against the stored table, and publishes the
-rewritten table with the crash-safe :func:`swap_output` rename dance.
-The end state is pinned equal to the ONE-SHOT build over the full
+(or :func:`merge_upsert`) against the stored table, and republishes
+it. The end state is pinned equal to the ONE-SHOT build over the full
 stream — the same persistence-equivalence contract the KMV rollup,
 BM25 store, and posindex rows carry.
 
-Reference analog: the stored offsets contract
-(``impl/offsets/DefaultOffsetsState.java`` — mutable state that must
-survive restart and never double-apply). Spark's ``foreachBatch`` is
-AT-LEAST-ONCE per batch: a crash between the batch function returning
-and the checkpoint commit replays the batch on restart. ``merge_upsert``
-is naturally idempotent under replay (max-wins), but ``merge_scd2`` is
-NOT — replaying observations older than the open version's
-``valid_from`` would re-detect historical changes and duplicate closed
-rows. Both folds therefore record the last applied ``batch_id`` in a
-``_kw_batch`` marker INSIDE the published table directory (the
-underscore prefix keeps Spark's parquet reader from treating it as
-data), and a replayed batch id is skipped — the standard
-transactional-sink upgrade from at-least-once to exactly-once, with the
-marker and the data versioned by the SAME atomic directory swap so they
-can never disagree.
+Publish, replay marker, lineage and torn-swap heal are the
+replace-publish protocol of :mod:`kafka_workers_spark.store`. The
+marker is load-bearing here: ``merge_upsert`` is naturally idempotent
+under replay (max-wins), but ``merge_scd2`` is NOT — replaying
+observations older than the open version's ``valid_from`` would
+re-detect historical changes and duplicate closed rows.
 
 Batch-ordering contract (inherited from ``merge_scd2``): observation
 timestamps must be non-decreasing per key ACROSS batches — a file/Kafka
@@ -34,103 +24,38 @@ observations need a history rewrite and must be rejected upstream.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_workers_spark.pipeline import merge_scd2, merge_upsert, swap_output
-
-_MARKER = "_kw_batch"
-
-
-def _heal_torn_swap(final_dir: str) -> None:
-    """Repair a swap_output crash window BEFORE any fold reads the
-    store as its merge base (round-12 review finding): a kill between
-    the park (final→backup) and publish (tmp→final) renames leaves
-    backup-present/final-missing — a fold that then reads the store
-    would merge against an EMPTY base and silently erase all prior
-    history on its next publish. swap_output itself heals this when
-    RE-INVOKED, but the fold decides its base first, so the heal must
-    run first. The sibling window (crash between publish and backup
-    reap: backup AND final both present) is also reaped here so stale
-    backups can't linger next to — or, for bucketed stores, INSIDE —
-    the store."""
-    import shutil
-
-    backup = final_dir.rstrip("/") + ".pre-swap"
-    if not os.path.exists(backup):
-        return
-    if os.path.exists(final_dir):
-        shutil.rmtree(backup)  # completed swap that never reaped
-    else:
-        os.rename(backup, final_dir)  # torn swap: restore the parked store
+from kafka_workers_spark import store
+from kafka_workers_spark.pipeline import merge_scd2, merge_upsert, scd2_history
 
 
-def _last_applied(store_dir: str, lineage: str | None) -> int:
-    """Read the store's batch marker, enforcing CHECKPOINT LINEAGE:
-    ``foreachBatch`` batch ids are monotonic only within one checkpoint
-    lineage — pointing a fresh checkpoint (or a second query) at an
-    existing store restarts ids at 0, and the ``batch_id <=
-    last_applied`` replay guard would then silently SKIP the first N+1
-    real batches (ADVICE r10). The marker therefore stamps the lineage
-    (checkpoint path for streaming entry points, None for direct fold
-    driving), and a batch arriving from a DIFFERENT lineage fails
-    loudly instead of losing data. Reference analog: stored offsets are
-    bound to one consumer group (impl/offsets/DefaultOffsetsState.java
-    — a different group gets different offsets, never a silent skip).
+def _scd2_merge(
+    key_cols: list[str], ts_col: str, payload_cols: list[str], tiebreak_col: str
+) -> Callable[[DataFrame, DataFrame | None], DataFrame]:
+    def merge(batch: DataFrame, base: DataFrame | None) -> DataFrame:
+        if base is None:
+            # empty history with the output schema (limit(0) plans no job)
+            base = scd2_history(
+                batch.limit(0), key_cols, ts_col, payload_cols, tiebreak_col
+            )
+        return merge_scd2(base, batch, key_cols, ts_col, payload_cols, tiebreak_col)
 
-    Markers written before the lineage stamp existed have NO ``lineage``
-    key at all (distinct from an explicit ``null``, which a direct fold
-    stamps). Such a LEGACY store is adopted in place: the batch id is
-    honored and the next publish stamps the current lineage (ADVICE
-    r11 — the old behavior raised precisely when the user followed the
-    error's own advice of reusing the original checkpoint, while a
-    direct fold silently adopted; adoption-with-a-warning is the only
-    reading under which the pre-upgrade store remains usable at all)."""
-    path = os.path.join(store_dir, _MARKER)
-    if not os.path.exists(path):
-        return -1
-    with open(path) as fh:
-        marker = json.load(fh)
-    if "lineage" not in marker:
-        import warnings
-
-        warnings.warn(
-            f"maintenance store {store_dir!r} has a pre-lineage marker; "
-            f"adopting it under lineage {lineage!r} (the next publish stamps "
-            "it). Batch-id continuity with the original writer is assumed — "
-            "if this fold is NOT resuming that writer's checkpoint, delete "
-            "the store to rebuild.",
-            stacklevel=2,
-        )
-        return int(marker["batch_id"])
-    stamped = marker["lineage"]
-    if stamped != lineage:
-        raise RuntimeError(
-            f"maintenance store {store_dir!r} was last written by lineage "
-            f"{stamped!r} but this fold runs under lineage {lineage!r}; "
-            "batch ids are only monotonic within one checkpoint lineage, so "
-            "proceeding would silently skip real batches. Reuse the original "
-            "checkpoint, or delete the store (and its marker) to rebuild "
-            "from scratch."
-        )
-    return int(marker["batch_id"])
+    return merge
 
 
-def _publish(
-    merged: DataFrame, store_dir: str, batch_id: int, lineage: str | None
-) -> None:
-    """Write the rewritten table next to the live one, stamp the batch
-    marker (batch id + checkpoint lineage) inside it, then atomically
-    swap it in — data + marker commit together or not at all."""
-    tmp = f"{store_dir}.tmp-{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _MARKER), "w") as fh:
-        json.dump({"batch_id": batch_id, "lineage": lineage}, fh)
-    swap_output(tmp, store_dir)
+def _upsert_merge(
+    key_cols: list[str], version_col: str
+) -> Callable[[DataFrame, DataFrame | None], DataFrame]:
+    def merge(batch: DataFrame, base: DataFrame | None) -> DataFrame:
+        base = batch.limit(0) if base is None else base
+        return merge_upsert(base, batch, key_cols, version_col)
+
+    return merge
 
 
 def scd2_fold(
@@ -148,30 +73,11 @@ def scd2_fold(
     swap. Replayed batch ids are no-ops — WITHIN one ``lineage``
     (checkpoint identity); a fold under a different lineage than the
     store's marker raises instead of silently skipping (see
-    :func:`_last_applied`). Direct driving (``lineage=None``) is its own
-    lineage: a store built by direct folds rejects a later streaming
-    query and vice versa."""
-    from kafka_workers_spark.pipeline import scd2_history
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _heal_torn_swap(store_dir)
-        if batch_id <= _last_applied(store_dir, lineage):
-            return  # at-least-once replay of an already-published batch
-        if batch_df.isEmpty():
-            return
-        if os.path.exists(os.path.join(store_dir, "_SUCCESS")):
-            base = spark.read.parquet(store_dir)
-        else:
-            # empty history with the output schema (limit(0) plans no job)
-            base = scd2_history(
-                batch_df.limit(0), key_cols, ts_col, payload_cols, tiebreak_col
-            )
-        merged = merge_scd2(
-            base, batch_df, key_cols, ts_col, payload_cols, tiebreak_col
-        )
-        _publish(merged, store_dir, batch_id, lineage)
-
-    return fold
+    :func:`kafka_workers_spark.store.last_applied`). Direct driving
+    (``lineage=None``) is its own lineage: a store built by direct folds
+    rejects a later streaming query and vice versa."""
+    merge = _scd2_merge(key_cols, ts_col, payload_cols, tiebreak_col)
+    return store.replace_fold(spark, store_dir, lineage, merge)
 
 
 def upsert_fold(
@@ -184,26 +90,12 @@ def upsert_fold(
     """SCD1 latest-wins fold (``merge_upsert``). The merge itself is
     idempotent under replay (max-wins), so the batch-id guard here only
     skips redundant work; for SCD2 it is load-bearing. The lineage
-    stamp (see :func:`_last_applied`) still applies: a fresh checkpoint
-    over an existing store fails loudly rather than skipping batches —
-    harmless for upsert's idempotent merge but the marker would record
-    a lie, and the symmetric rule keeps the two folds' contracts
-    identical."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _heal_torn_swap(store_dir)
-        if batch_id <= _last_applied(store_dir, lineage):
-            return
-        if batch_df.isEmpty():
-            return
-        if os.path.exists(os.path.join(store_dir, "_SUCCESS")):
-            base = spark.read.parquet(store_dir)
-        else:
-            base = batch_df.limit(0)
-        merged = merge_upsert(base, batch_df, key_cols, version_col)
-        _publish(merged, store_dir, batch_id, lineage)
-
-    return fold
+    stamp still applies: a fresh checkpoint over an existing store fails
+    loudly rather than skipping batches — harmless for upsert's
+    idempotent merge but the marker would record a lie, and the
+    symmetric rule keeps the two folds' contracts identical."""
+    merge = _upsert_merge(key_cols, version_col)
+    return store.replace_fold(spark, store_dir, lineage, merge)
 
 
 # ---------------------------------------------------------------------------
@@ -217,14 +109,14 @@ def upsert_fold(
 # ``store/b=NNNNN``), and each fold rewrites ONLY the buckets the batch
 # touches: per-batch I/O is O(touched buckets), which for a trickle
 # stream is O(batch), not O(table). Every bucket carries its OWN
-# ``_kw_batch`` marker (batch id + lineage, the exact `_last_applied`
-# discipline) and is published by its own atomic ``swap_output``, so a
-# crash between bucket swaps leaves a store where SOME buckets already
-# carry the batch — the replay recomputes the pending set per bucket and
-# re-merges only those, which is what makes the non-idempotent SCD2
-# merge exactly-once per BUCKET rather than per store. The bucket count
-# is fixed at store creation (``_kw_store`` meta, validated on every
-# fold): re-bucketing scatters keys and needs a rebuild.
+# batch marker and is published by its own atomic swap (the store.py
+# heal/marker/swap, per bucket), so a crash between bucket
+# swaps leaves a store where SOME buckets already carry the batch — the
+# replay recomputes the pending set per bucket and re-merges only those,
+# which is what makes the non-idempotent SCD2 merge exactly-once per
+# BUCKET rather than per store. The bucket count is fixed at store
+# creation (``_kw_store`` meta, validated on every fold): re-bucketing
+# scatters keys and needs a rebuild.
 
 _STORE_META = "_kw_store"
 
@@ -233,30 +125,22 @@ def _bucket_dir(store_dir: str, b: int) -> str:
     return os.path.join(store_dir, f"b={b:05d}")
 
 
-def _ensure_store_meta(store_dir: str, n_buckets: int, key_cols: list[str]) -> int:
+def _ensure_store_meta(store_dir: str, n_buckets: int, key_cols: list[str]) -> None:
     """Create-or-validate the bucketed store's meta: the bucket count and
     key columns are fixed at creation (hash placement depends on both)."""
     os.makedirs(store_dir, exist_ok=True)
     path = os.path.join(store_dir, _STORE_META)
-    if os.path.exists(path):
-        with open(path) as fh:
-            meta = json.load(fh)
-        if meta["n_buckets"] != n_buckets or meta["key_cols"] != key_cols:
-            raise RuntimeError(
-                f"bucketed store {store_dir!r} was created with "
-                f"n_buckets={meta['n_buckets']}, key_cols={meta['key_cols']} "
-                f"but this fold uses n_buckets={n_buckets}, "
-                f"key_cols={key_cols}; hash placement depends on both — "
-                "rebuild the store to re-bucket."
-            )
-        return int(meta["n_buckets"])
-    # write-then-rename: a crash mid-dump must not leave a truncated meta
-    # that bricks every later fold with a JSONDecodeError (review r12)
-    tmp_path = path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        json.dump({"n_buckets": n_buckets, "key_cols": key_cols}, fh)
-    os.rename(tmp_path, path)
-    return n_buckets
+    meta = store.read_json(path)
+    if meta is None:
+        store.write_json(path, {"n_buckets": n_buckets, "key_cols": key_cols})
+    elif meta["n_buckets"] != n_buckets or meta["key_cols"] != key_cols:
+        raise RuntimeError(
+            f"bucketed store {store_dir!r} was created with "
+            f"n_buckets={meta['n_buckets']}, key_cols={meta['key_cols']} "
+            f"but this fold uses n_buckets={n_buckets}, "
+            f"key_cols={key_cols}; hash placement depends on both — "
+            "rebuild the store to re-bucket."
+        )
 
 
 def read_bucketed_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -266,22 +150,18 @@ def read_bucketed_store(spark: SparkSession, store_dir: str) -> DataFrame:
     readable schema, so that also raises (fold at least one batch
     first). Readers racing a bucket swap inherit the swap_output
     transient-ENOENT caveat, per bucket. Bucket names are matched
-    EXACTLY (``b=`` + digits): a stale ``b=NNNNN.pre-swap`` backup left
-    by a crash between swap_output's publish and reap steps must never
-    be read as a second copy of the bucket (review r12) — it is healed
-    here instead."""
+    EXACTLY (``b=`` + digits): a stale backup left by a crash between
+    the swap's publish and reap steps must never be read as a second
+    copy of the bucket (review r12) — it is healed here instead."""
     import re
 
     if not os.path.exists(os.path.join(store_dir, _STORE_META)):
         raise RuntimeError(f"{store_dir!r} is not a bucketed maintenance store")
-    for d in os.listdir(store_dir):
-        if d.endswith(".pre-swap"):
-            _heal_torn_swap(os.path.join(store_dir, d[: -len(".pre-swap")]))
+    store.heal_children(store_dir)
     dirs = sorted(
         os.path.join(store_dir, d)
         for d in os.listdir(store_dir)
-        if re.fullmatch(r"b=\d+", d)
-        and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
+        if re.fullmatch(r"b=\d+", d) and store.published(os.path.join(store_dir, d))
     )
     if not dirs:
         raise RuntimeError(f"bucketed store {store_dir!r} has no published buckets")
@@ -294,8 +174,7 @@ def _bucketed_fold(
     key_cols: list[str],
     n_buckets: int,
     lineage: str | None,
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
-    empty_base_fn: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
 ) -> Callable[[DataFrame, int], None]:
     """Shared machinery for the bucketed SCD2/SCD1 folds: compute the
     batch's touched buckets, drop the already-applied ones (per-bucket
@@ -326,25 +205,22 @@ def _bucketed_fold(
             # a torn per-bucket swap must be healed BEFORE the marker read
             # and base scan — otherwise the replay would merge against an
             # empty base and erase the bucket's history (review r12)
-            _heal_torn_swap(_bucket_dir(store_dir, b))
+            store.heal(_bucket_dir(store_dir, b))
         pending = [
             b
             for b in touched
-            if batch_id > _last_applied(_bucket_dir(store_dir, b), lineage)
+            if batch_id > store.last_applied(_bucket_dir(store_dir, b), lineage)
         ]
         if not pending:
             return  # at-least-once replay: every touched bucket already has it
         batch_pending = batch_df.filter(bucket_of(batch_df).isin(pending))
         existing = [
-            b
+            _bucket_dir(store_dir, b)
             for b in pending
-            if os.path.exists(os.path.join(_bucket_dir(store_dir, b), "_SUCCESS"))
+            if store.published(_bucket_dir(store_dir, b))
         ]
-        if existing:
-            base = spark.read.parquet(*[_bucket_dir(store_dir, b) for b in existing])
-        else:
-            base = empty_base_fn(batch_pending)
-        merged = merge_fn(base, batch_pending)
+        base = spark.read.parquet(*existing) if existing else None
+        merged = merge(batch_pending, base)
         tmp = f"{store_dir}.tmp-{batch_id}"
         (
             merged.withColumn("__kw_b", bucket_of(merged))
@@ -363,7 +239,7 @@ def _bucketed_fold(
             .mode("overwrite")
             .parquet(tmp)
         )
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        if not store.published(tmp):
             raise RuntimeError(f"bucketed publish job left no _SUCCESS in {tmp!r}")
         for b in pending:
             src = os.path.join(tmp, f"__kw_b={b}")
@@ -375,14 +251,9 @@ def _bucketed_fold(
                     f"merge produced no rows for touched bucket {b} — refusing "
                     "to publish an empty bucket over existing data"
                 )
-            # the job-level _SUCCESS above vouches for every partition dir;
-            # stamp it into the bucket so swap_output's half-written-job
-            # refusal keeps working per bucket
-            with open(os.path.join(src, "_SUCCESS"), "w"):
-                pass
-            with open(os.path.join(src, _MARKER), "w") as fh:
-                json.dump({"batch_id": batch_id, "lineage": lineage}, fh)
-            swap_output(src, _bucket_dir(store_dir, b))
+            # the job-level _SUCCESS above vouches for every partition dir
+            store.mark_complete(src)
+            store.publish(src, _bucket_dir(store_dir, b), batch_id, lineage)
         shutil.rmtree(tmp, ignore_errors=True)
 
     return fold
@@ -413,19 +284,8 @@ def scd2_fold_bucketed(
     the same 256 buckets won only 1.5× because footers dominated. Too
     many buckets also multiplies the one-time backfill's atomic swaps;
     trickle-batch wall is at parity or better from the start."""
-    from kafka_workers_spark.pipeline import scd2_history
-
-    def merge(base: DataFrame, batch: DataFrame) -> DataFrame:
-        return merge_scd2(base, batch, key_cols, ts_col, payload_cols, tiebreak_col)
-
-    def empty_base(batch: DataFrame) -> DataFrame:
-        return scd2_history(
-            batch.limit(0), key_cols, ts_col, payload_cols, tiebreak_col
-        )
-
-    return _bucketed_fold(
-        spark, store_dir, key_cols, n_buckets, lineage, merge, empty_base
-    )
+    merge = _scd2_merge(key_cols, ts_col, payload_cols, tiebreak_col)
+    return _bucketed_fold(spark, store_dir, key_cols, n_buckets, lineage, merge)
 
 
 def upsert_fold_bucketed(
@@ -437,16 +297,8 @@ def upsert_fold_bucketed(
     lineage: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Bucketed variant of :func:`upsert_fold` (SCD1 latest-wins)."""
-
-    def merge(base: DataFrame, batch: DataFrame) -> DataFrame:
-        return merge_upsert(base, batch, key_cols, version_col)
-
-    def empty_base(batch: DataFrame) -> DataFrame:
-        return batch.limit(0)
-
-    return _bucketed_fold(
-        spark, store_dir, key_cols, n_buckets, lineage, merge, empty_base
-    )
+    merge = _upsert_merge(key_cols, version_col)
+    return _bucketed_fold(spark, store_dir, key_cols, n_buckets, lineage, merge)
 
 
 def streaming_scd2_maintenance(

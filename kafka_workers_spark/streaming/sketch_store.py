@@ -1,8 +1,8 @@
 """The maintenance contract generalized over every EXACTLY-mergeable
-sketch: one generic per-batch fold (marker, lineage, torn-swap heal,
-atomic swap publish) parameterized by the sketch family's ``build`` and
-``merge``, plus the two instances the cardinality store (KMV,
-streaming/cardinality.py) left on the table:
+sketch: one generic per-batch fold (an instance of
+:func:`kafka_workers_spark.store.replace_fold`) parameterized by the
+sketch family's ``build`` and ``merge``, plus the instances the
+cardinality store (KMV, streaming/cardinality.py) left on the table:
 
 - :func:`histogram_fold` — per-key HDR quantile sketches
   (functions.sketches.hdr_build/hdr_merge): the live latency/size
@@ -25,17 +25,13 @@ equality, not a tolerance (Bloom's bitwise OR likewise). A sketch
 whose merge is representation-order-sensitive would reduce every pin to
 "estimates roughly agree", which is not a maintenance contract.
 
-Discipline inherited from streaming/maintenance.py (the stored-offsets
-contract, reference impl/offsets/DefaultOffsetsState.java): the batch
-marker (batch id + checkpoint lineage) commits ATOMICALLY with the data
-via the swap_output rename dance, a replayed batch id is a no-op, a
-foreign lineage fails loudly, a torn swap heals before any read, and a
-fold whose sketch scheme differs from the store's stamped rows raises
-in-plan (each family's mixed-scheme guard). All folds here are
-replay-IDEMPOTENT by construction anyway (cell addition double-applied
-WOULD corrupt — which is exactly what the marker prevents; unlike the
-set-union folds the marker is load-bearing for HDR/CMS, the merge_scd2
-class, and the replay test pins that).
+Publish, replay marker, lineage and torn-swap heal are the
+replace-publish protocol of :mod:`kafka_workers_spark.store`; a fold
+whose sketch scheme differs from the store's stamped rows raises
+in-plan (each family's mixed-scheme guard). The marker is load-bearing
+for HDR/CMS: cell addition double-applied WOULD corrupt, the merge_scd2
+class, and the replay test pins that (Bloom's OR and KMV's union are
+idempotent, so there it only skips redundant work).
 
 At 100 TB: per batch each store costs one hash aggregate over the
 batch (map-side partial, the shuffle carries sketch cells, never raw
@@ -47,19 +43,13 @@ grows into the hundreds of millions, the bucketed-store pattern
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_workers_spark.pipeline import swap_output
-from kafka_workers_spark.streaming.maintenance import (
-    _heal_torn_swap,
-    _last_applied,
-    _MARKER,
-)
+from kafka_workers_spark import store
 
 
 def sketch_store_fold(
@@ -69,40 +59,28 @@ def sketch_store_fold(
     merge: Callable[[DataFrame], DataFrame],
     lineage: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The generic per-batch fold: sketch the batch (``build``), union
-    with the stored rows and re-merge per key (``merge`` — must be the
-    family's exact merge, so folded == one-shot), republish with one
+    """The generic per-batch sketch fold: sketch the batch (``build``),
+    union with the stored rows and re-merge per key (``merge`` — must be
+    the family's exact merge, so folded == one-shot), republish with one
     atomic swap. ``merge`` receives the UNION of stored and fresh rows
     (same schema: every family's merge output equals its build output
     by the merge-exactness contract). Keys absent from the batch pass
     through; new keys enter with their batch sketch."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _heal_torn_swap(store_dir)
-        if batch_id <= _last_applied(store_dir, lineage):
-            return  # replay of an already-published batch
-        if batch_df.isEmpty():
-            return
-        fresh = build(batch_df)
-        if os.path.exists(os.path.join(store_dir, "_SUCCESS")):
-            stored = spark.read.parquet(store_dir).select(*fresh.columns)
-            merged = merge(stored.unionByName(fresh))
-        else:
-            merged = fresh
-        tmp = f"{store_dir}.tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _MARKER), "w") as fh:
-            json.dump({"batch_id": batch_id, "lineage": lineage}, fh)
-        swap_output(tmp, store_dir)
+    def fold_in(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
+        fresh = build(batch)
+        if stored is None:
+            return fresh
+        return merge(stored.select(*fresh.columns).unionByName(fresh))
 
-    return fold
+    return store.replace_fold(spark, store_dir, lineage, fold_in)
 
 
 def read_sketch_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Read any live sketch table — heals a torn swap first (the
     read_bucketed_store rule). Family-specific consumers layer their
     probe/quantile expressions on top."""
-    _heal_torn_swap(store_dir)
+    store.heal(store_dir)
     return spark.read.parquet(store_dir)
 
 

@@ -238,81 +238,6 @@ PROBES = {
 }
 
 
-
-def probe_cc_ab():
-    """Interleaved same-session A/B of the CC loop variants (box noise is
-    ±20% across sessions): steps-per-action x pin-intermediate."""
-    from kafka_workers_spark.operators import components as C
-
-    pairs = _pairs()
-    variants = [(1, False), (2, True), (2, False), (3, True)]
-    results = {v: [] for v in variants}
-    rounds_of = {}
-    for rep in range(3):
-        for v in variants:
-            C._CC_STEPS_PER_ACTION, C._CC_PIN_INTERMEDIATE = v
-            spark.catalog.clearCache()
-            stats = {}
-            t0 = time.perf_counter()
-            comp = C.connected_components(pairs, src="doc_a", dst="doc_b", stats=stats)
-            row = comp.agg(
-                F.count("*"), F.sum("comp"), F.sum(F.col("node") * F.col("comp"))
-            ).collect()[0]
-            dt = time.perf_counter() - t0
-            results[v].append(dt)
-            rounds_of[v] = (stats.get("rounds"), tuple(row))
-            print(f"  rep{rep} steps={v[0]} pin={v[1]}: {dt:6.2f}s rounds={stats.get('rounds')}", flush=True)
-    C._CC_STEPS_PER_ACTION, C._CC_PIN_INTERMEDIATE = 2, True  # adopted defaults
-    for v in variants:
-        print(f"steps={v[0]} pin={v[1]}: min {min(results[v]):6.2f}s med {sorted(results[v])[1]:6.2f}s rounds/checksum {rounds_of[v]}")
-
-
-PROBES["cc_ab"] = probe_cc_ab
-
-
-def probe_kmeans_ab():
-    """Interleaved A/B: _KMEANS_PIN_WIDE off/on over the kmeans consumers."""
-    from kafka_workers_spark.operators import similarity as S
-    from kafka_workers_spark.queries import load_all
-    reg = load_all()
-    names = ("text_cluster_topics", "ann_ivf_topk", "ann_semantic_dedup")
-    res = {}
-    for rep in range(3):
-        for pin in (False, True):
-            S._KMEANS_PIN_WIDE = pin
-            for name in names:
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                reg[name].fn(spark, SF).write.format("noop").mode("overwrite").save()
-                res.setdefault((name, pin), []).append(time.perf_counter() - t0)
-    S._KMEANS_PIN_WIDE = True  # adopted default
-    for (name, pin), xs in sorted(res.items()):
-        print(f"{name} pin={pin}: min {min(xs):6.2f} med {sorted(xs)[len(xs)//2]:6.2f} {['%.2f'%x for x in xs]}")
-
-
-PROBES["kmeans_ab"] = probe_kmeans_ab
-
-
-def probe_bpe_ab():
-    """Interleaved A/B: _BPE_PIN_SYMS0 off/on on the text_bpe_train row."""
-    from kafka_workers_spark.operators import text as T
-    from kafka_workers_spark.queries import load_all
-    fn = load_all()["text_bpe_train"].fn
-    res = {}
-    for rep in range(3):
-        for pin in (False, True):
-            T._BPE_PIN_SYMS0 = pin
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, SF).write.format("noop").mode("overwrite").save()
-            res.setdefault(pin, []).append(time.perf_counter() - t0)
-    T._BPE_PIN_SYMS0 = True  # adopted default
-    for pin, xs in res.items():
-        print(f"bpe pin={pin}: min {min(xs):6.2f} med {sorted(xs)[len(xs)//2]:6.2f} {['%.2f'%x for x in xs]}")
-
-
-PROBES["bpe_ab"] = probe_bpe_ab
-
 if __name__ == "__main__":
     names = [a for a in sys.argv[1:] if a in PROBES] or ["cc"]
     for name in names:

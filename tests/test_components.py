@@ -117,6 +117,44 @@ def test_components_nonconvergence_raises(spark):
     assert set(got.values()) == {0}
 
 
+def test_components_nonconvergence_reports_actions_and_steps(spark):
+    """max_rounds bounds ACTIONS, each batching several propagate steps;
+    the error names both so the bound reads honestly."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(
+        RuntimeError, match=r"1 actions \(2 propagate steps, 2 per action\)"
+    ):
+        connected_components(path, max_rounds=1)
+
+
+def test_components_checkpoint_dir_grows_one_rdd_per_round(spark, tmp_path):
+    """With a reliable checkpoint dir set, only the carried round labels
+    are reliably checkpointed — the batched step's scratch pin stays
+    local — so one call leaves at most rounds + 1 RDD dirs. The session's
+    checkpoint dir is restored to unset afterwards."""
+    import os
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    ckpt = tmp_path / "ckpt"
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    stats: dict = {}
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        got = {r.node: r.comp for r in connected_components(chain, stats=stats).collect()}
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert set(got.values()) == {0}
+    rdd_dirs = [d for _, ds, _ in os.walk(ckpt) for d in ds if d.startswith("rdd-")]
+    assert stats["rounds"] >= 2
+    assert len(rdd_dirs) <= stats["rounds"] + 1, (len(rdd_dirs), stats)
+
+
 def _py_levenshtein(a: str, b: str) -> int:
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):

@@ -451,18 +451,15 @@ def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark):
     heads — never a partitionless window), the visible plan pays
     EXACTLY one exchange per pair-count aggregate plus one for the
     word-count base (rewrite chains hide behind the per-round lazy
-    checkpoint cut), and the whole chain stays JVM-side. With
-    _BPE_PIN_SYMS0 (r16) the word-count base itself sits behind the
-    round-0 lazy checkpoint, so its exchange leaves the visible plan
-    too — the expected count tracks the knob."""
-    from kafka_workers_spark.operators import text as T
-
+    checkpoint cut), and the whole chain stays JVM-side. Since r16 the
+    word-count base itself sits behind the round-0 lazy checkpoint, so
+    its exchange leaves the visible plan too."""
     spark.catalog.clearCache()
     a = audit(REG["text_bpe_train"].fn(spark, SF))
     assert "TakeOrderedAndProject" in a.text, a.text[:800]
     assert a.python_evals == 0 and a.cartesian_products == 0, a.text[:800]
     assert a.sortmerge_joins == 0, a.text[:800]
-    expected = 8 if T._BPE_PIN_SYMS0 else 9  # 8 rounds (+1 wc when unpinned)
+    expected = 8  # one per round; the word count hides behind the round-0 pin
     assert a.exchanges == expected, (a.exchanges, a.text[:800])
 
 
