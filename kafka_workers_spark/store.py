@@ -1,8 +1,9 @@
 """At-rest store mechanics shared by every stored artifact: the one-row
 ``meta`` table and its layout-version check, the crash-safe directory
 swap, the ``_kw_batch`` replay marker, the replace-publish fold built
-from them, an atomic JSON writer and one cross-process lock. Each store
-family keeps only its schema and its build/merge.
+from them, the one live runner that drives any fold from a stream
+(:func:`live_fold`), an atomic JSON writer and one cross-process lock.
+Each store family keeps only its schema and its build/merge.
 
 Reference analog: the stored offsets contract
 (``impl/offsets/DefaultOffsetsState.java``) — state that survives a
@@ -44,6 +45,9 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from kafka_workers_spark.streaming.sinks import foreach_batch_sink
 
 MARKER = "_kw_batch"
 _BACKUP = ".pre-swap"
@@ -270,6 +274,24 @@ def replace_fold(
         publish(tmp, store_dir, batch_id, lineage)
 
     return fold
+
+
+def live_fold(
+    df: DataFrame,
+    checkpoint: str,
+    fold: Callable[..., Callable[[DataFrame, int], None]],
+    *args,
+    **kwargs,
+) -> StreamingQuery:
+    """Run a store fold live: ``fold(df.sparkSession, *args, lineage=...,
+    **kwargs)`` applied to every micro-batch of ``df``, drained with
+    ``availableNow``. The lineage is the absolute checkpoint path, so
+    restarting from the same checkpoint resumes exactly and a DIFFERENT
+    checkpoint pointed at the same store fails loudly at its first
+    batch (:func:`last_applied`)."""
+    lineage = os.path.abspath(checkpoint)
+    write_batch = fold(df.sparkSession, *args, lineage=lineage, **kwargs)
+    return foreach_batch_sink(df, write_batch, checkpoint)
 
 
 # ---------------------------------------------------------------------------

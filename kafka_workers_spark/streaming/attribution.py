@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task
+from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task, replay_worker_task
 
 
 def attribution_worker_task(
@@ -146,24 +146,10 @@ def attribution_tasks_batch(
     task = attribution_worker_task(
         touch_type, convert_type, lookback_seconds, user_col, ts_col, type_col, id_col
     )
-    schema = _out_schema(events, user_col, id_col, ts_col)
-
-    def fn(key, pdf):
-        out, _ = task.process(key, pdf.sort_values(ts_col), {})
-        if out is None:
-            out = pd.DataFrame(
-                {
-                    user_col: pd.Series(dtype=pdf[user_col].dtype),
-                    id_col: pd.Series(dtype=pdf[id_col].dtype),
-                    ts_col: pd.Series(dtype="datetime64[ns]"),
-                    "touch_ts": pd.Series(dtype="datetime64[ns]"),
-                    "attribution": pd.Series(dtype=object),
-                }
-            )
-        return out
-
-    return (
-        events.select(user_col, ts_col, type_col, id_col)
-        .groupBy(user_col)
-        .applyInPandas(fn, schema)
+    return replay_worker_task(
+        events.select(user_col, ts_col, type_col, id_col),
+        [user_col],
+        task,
+        _out_schema(events, user_col, id_col, ts_col),
+        order_by=[ts_col],
     )

@@ -41,12 +41,12 @@ key-hashed like any table.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_workers_spark import store
 from kafka_workers_spark.functions.sketches import kmv_build, kmv_merge
 from kafka_workers_spark.streaming.sketch_store import (
     read_sketch_store,
@@ -118,17 +118,6 @@ def streaming_cardinality_maintenance(
     checkpoint resumes exactly; a different checkpoint pointed at the
     same store fails loudly at the first batch (the lineage contract
     all maintenance folds share)."""
-    fold = cardinality_fold(
-        events.sparkSession,
-        store_dir,
-        partition_cols,
-        value_col,
-        k=k,
-        lineage=os.path.abspath(checkpoint),
-    )
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return store.live_fold(
+        events, checkpoint, cardinality_fold, store_dir, partition_cols, value_col, k=k
     )

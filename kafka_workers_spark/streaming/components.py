@@ -25,7 +25,6 @@ folds; a double-applied batch could never corrupt the labeling.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,17 +116,6 @@ def streaming_components_maintenance(
     resumes exactly where it stopped; a DIFFERENT checkpoint pointed at
     the same store fails loudly at the first batch (the lineage
     contract all maintenance folds share)."""
-    fold = components_fold(
-        pairs.sparkSession,
-        store_dir,
-        src=src,
-        dst=dst,
-        lineage=os.path.abspath(checkpoint),
-        max_rounds=max_rounds,
-    )
-    return (
-        pairs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return store.live_fold(
+        pairs, checkpoint, components_fold, store_dir, src=src, dst=dst, max_rounds=max_rounds
     )

@@ -409,8 +409,10 @@ def streaming_dedup_ingest(
     bounded unattended — restart from the same checkpoint resumes
     exactly; a different checkpoint pointed at either store fails loudly
     at the first batch."""
-    fold = dedup_index_fold(
-        docs.sparkSession,
+    return store.live_fold(
+        docs,
+        checkpoint,
+        dedup_index_fold,
         index_dir,
         cc_store_dir,
         id_col=id_col,
@@ -419,13 +421,6 @@ def streaming_dedup_ingest(
         n_bands=n_bands,
         rows_per_band=rows_per_band,
         shingle_n=shingle_n,
-        lineage=os.path.abspath(checkpoint),
         max_rounds=max_rounds,
         compact_every=compact_every,
-    )
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

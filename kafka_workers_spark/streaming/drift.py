@@ -65,7 +65,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task
+from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task, replay_worker_task
 
 
 def _gap_guard(key, cur_b: int, b: int, max_gap_buckets: int | None) -> None:
@@ -440,7 +440,8 @@ def _with_bucket_start(
     )
 
 
-def _run_live(
+def _run(
+    runner: Callable[..., DataFrame],
     events: DataFrame,
     key_cols: list[str],
     ts_col: str,
@@ -449,52 +450,17 @@ def _run_live(
     task: WorkerTask,
     stat_cols: list[str],
 ) -> DataFrame:
-    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    out = apply_worker_task(
-        events.select(*key_cols, ts_col, *([tiebreak_col] if tiebreak_col else [])),
+    """Run ``task`` live (``apply_worker_task``) or as a batch replay
+    (``replay_worker_task``) and attach ``bucket_start``."""
+    tie = [tiebreak_col] if tiebreak_col else []
+    out = runner(
+        events.select(*key_cols, ts_col, *tie),
         key_cols,
         task,
         _out_schema(events, key_cols, stat_cols),
-        order_by=order,
+        order_by=[ts_col, *tie],
     )
     return _with_bucket_start(out, bucket_seconds, stat_cols)
-
-
-def _run_batch(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    tiebreak_col: str | None,
-    bucket_seconds: int,
-    task: WorkerTask,
-    stat_cols: list[str],
-) -> DataFrame:
-    schema = _out_schema(events, key_cols, stat_cols)
-    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    key_dtypes = dict(zip(key_cols, ["object"] * len(key_cols)))
-    int_cols = ["bucket_idx", "n_events"] + [
-        c for c in stat_cols if not c.startswith("is_")
-    ]
-    bool_cols = [c for c in stat_cols if c.startswith("is_")]
-
-    def fn(key, pdf):
-        out, _ = task.process(key, pdf.sort_values(order), {})
-        if out is None:
-            out = pd.DataFrame(
-                {
-                    **{c: pd.Series(dtype=key_dtypes[c]) for c in key_cols},
-                    **{c: pd.Series(dtype="int64") for c in int_cols},
-                    **{c: pd.Series(dtype=bool) for c in bool_cols},
-                }
-            )
-        return out
-
-    grouped = (
-        events.select(*key_cols, ts_col, *([tiebreak_col] if tiebreak_col else []))
-        .groupBy(*key_cols)
-        .applyInPandas(fn, schema)
-    )
-    return _with_bucket_start(grouped, bucket_seconds, stat_cols)
 
 
 def streaming_anomaly_zscore(
@@ -515,8 +481,8 @@ def streaming_anomaly_zscore(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_live(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
+    return _run(
+        apply_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
     )
 
 
@@ -541,8 +507,8 @@ def anomaly_tasks_batch(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_batch(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
+    return _run(
+        replay_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
     )
 
 
@@ -567,8 +533,9 @@ def streaming_anomaly_mad(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_live(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _MAD_STATS
+    return _run(
+        apply_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task,
+        _MAD_STATS,
     )
 
 
@@ -592,8 +559,9 @@ def mad_tasks_batch(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_batch(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _MAD_STATS
+    return _run(
+        replay_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task,
+        _MAD_STATS,
     )
 
 
@@ -617,8 +585,9 @@ def streaming_anomaly_cusum(
         key_cols, ts_col, bucket_seconds, warmup, k_num, k_den, h_num, h_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_live(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _CUSUM_STATS
+    return _run(
+        apply_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task,
+        _CUSUM_STATS,
     )
 
 
@@ -644,8 +613,9 @@ def cusum_tasks_batch(
         key_cols, ts_col, bucket_seconds, warmup, k_num, k_den, h_num, h_den,
         max_gap_buckets=max_gap_buckets,
     )
-    return _run_batch(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _CUSUM_STATS
+    return _run(
+        replay_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task,
+        _CUSUM_STATS,
     )
 
 
@@ -670,8 +640,8 @@ def streaming_anomaly_seasonal(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         season=season, max_gap_buckets=max_gap_buckets,
     )
-    return _run_live(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
+    return _run(
+        apply_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
     )
 
 
@@ -697,6 +667,6 @@ def seasonal_tasks_batch(
         key_cols, ts_col, bucket_seconds, window, min_n, z_num, z_den,
         season=season, max_gap_buckets=max_gap_buckets,
     )
-    return _run_batch(
-        events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
+    return _run(
+        replay_worker_task, events, key_cols, ts_col, tiebreak_col, bucket_seconds, task, _Z_STATS
     )

@@ -43,7 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task
+from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task, replay_worker_task
 
 
 def _advance(t: list, pdf: pd.DataFrame, steps, type_col: str, ts_col: str,
@@ -178,16 +178,10 @@ def funnel_tasks_batch(
         step_values, user_col=user_col, ts_col=ts_col, type_col=type_col,
         within_seconds=within_seconds,
     )
-    k = len(step_values)
-
-    def fn(key, pdf):
-        out, st = task.process(key, pdf.sort_values(ts_col), {})
-        if out is None:
-            out = task.close(key, st)
-        return out if out is not None else _row(key, [], k, user_col).iloc[0:0]
-
-    return (
-        events.select(user_col, ts_col, type_col)
-        .groupBy(user_col)
-        .applyInPandas(fn, _out_schema(events, user_col, k))
+    return replay_worker_task(
+        events.select(user_col, ts_col, type_col),
+        [user_col],
+        task,
+        _out_schema(events, user_col, len(step_values)),
+        order_by=[ts_col],
     )

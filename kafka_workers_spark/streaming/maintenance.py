@@ -325,33 +325,10 @@ def streaming_scd2_maintenance(
     :func:`read_bucketed_store`. Default (None) keeps the whole-store
     publish, whose single directory is the simpler contract for the
     nightly ``availableNow`` shape."""
+    args = (store_dir, key_cols, ts_col, payload_cols, tiebreak_col)
     if n_buckets is not None:
-        fold = scd2_fold_bucketed(
-            obs.sparkSession,
-            store_dir,
-            key_cols,
-            ts_col,
-            payload_cols,
-            tiebreak_col,
-            n_buckets=n_buckets,
-            lineage=os.path.abspath(checkpoint),
-        )
-    else:
-        fold = scd2_fold(
-            obs.sparkSession,
-            store_dir,
-            key_cols,
-            ts_col,
-            payload_cols,
-            tiebreak_col,
-            lineage=os.path.abspath(checkpoint),
-        )
-    return (
-        obs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return store.live_fold(obs, checkpoint, scd2_fold_bucketed, *args, n_buckets=n_buckets)
+    return store.live_fold(obs, checkpoint, scd2_fold, *args)
 
 
 def streaming_upsert_maintenance(
@@ -365,26 +342,9 @@ def streaming_upsert_maintenance(
     """Run the SCD1 snapshot store live (latest version per key); the
     checkpoint path is the marker lineage, as for SCD2. ``n_buckets``
     selects the bucketed store, as for SCD2."""
+    args = (store_dir, key_cols, version_col)
     if n_buckets is not None:
-        fold = upsert_fold_bucketed(
-            updates.sparkSession,
-            store_dir,
-            key_cols,
-            version_col,
-            n_buckets=n_buckets,
-            lineage=os.path.abspath(checkpoint),
+        return store.live_fold(
+            updates, checkpoint, upsert_fold_bucketed, *args, n_buckets=n_buckets
         )
-    else:
-        fold = upsert_fold(
-            updates.sparkSession,
-            store_dir,
-            key_cols,
-            version_col,
-            lineage=os.path.abspath(checkpoint),
-        )
-    return (
-        updates.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.live_fold(updates, checkpoint, upsert_fold, *args)

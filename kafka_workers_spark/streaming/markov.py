@@ -25,7 +25,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task
+from kafka_workers_spark.streaming.stateful import WorkerTask, apply_worker_task, replay_worker_task
 
 
 def markov_worker_task(
@@ -106,24 +106,10 @@ def markov_tasks_batch(
     ``markov_transitions`` matrix bit for bit. ONE user-keyed shuffle;
     per-group work is a sort and a shift."""
     task = markov_worker_task(user_col, ts_col, type_col, id_col)
-    schema = _out_schema(events, user_col, id_col, ts_col)
-
-    def fn(key, pdf):
-        out, _ = task.process(key, pdf.sort_values([ts_col, id_col]), {})
-        if out is None:
-            out = pd.DataFrame(
-                {
-                    user_col: pd.Series(dtype=pdf[user_col].dtype),
-                    id_col: pd.Series(dtype=pdf[id_col].dtype),
-                    ts_col: pd.Series(dtype="datetime64[ns]"),
-                    "prev_state": pd.Series(dtype=object),
-                    "next_state": pd.Series(dtype=object),
-                }
-            )
-        return out
-
-    return (
-        events.select(user_col, ts_col, type_col, id_col)
-        .groupBy(user_col)
-        .applyInPandas(fn, schema)
+    return replay_worker_task(
+        events.select(user_col, ts_col, type_col, id_col),
+        [user_col],
+        task,
+        _out_schema(events, user_col, id_col, ts_col),
+        order_by=[ts_col, id_col],
     )

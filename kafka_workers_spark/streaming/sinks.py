@@ -26,14 +26,13 @@ def foreach_batch_sink(
     write_batch: Callable[[DataFrame, int], None],
     checkpoint: str,
     trigger_available_now: bool = True,
-    **start_kwargs,
 ) -> StreamingQuery:
     """The A4 'process + produce anywhere' surface: user code per
     micro-batch, checkpointed offsets, any DataFrame writer inside."""
     writer = df.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start(**start_kwargs)
+    return writer.start()
 
 
 def exactly_once_parquet_sink(

@@ -43,7 +43,6 @@ grows into the hundreds of millions, the bucketed-store pattern
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -150,20 +149,15 @@ def streaming_histogram_maintenance(
     """Run the histogram store live (the streaming_cardinality_
     maintenance shape): restart from the same checkpoint resumes
     exactly; a different checkpoint pointed at the store fails loudly."""
-    fold = histogram_fold(
-        events.sparkSession,
+    return store.live_fold(
+        events,
+        checkpoint,
+        histogram_fold,
         store_dir,
         partition_cols,
         value_col,
         sig_bits=sig_bits,
         max_bits=max_bits,
-        lineage=os.path.abspath(checkpoint),
-    )
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -212,20 +206,15 @@ def streaming_counts_maintenance(
 ) -> StreamingQuery:
     """Run the frequency store live; same lineage contract as every
     maintenance fold."""
-    fold = counts_fold(
-        events.sparkSession,
+    return store.live_fold(
+        events,
+        checkpoint,
+        counts_fold,
         store_dir,
         value_col,
         width=width,
         depth=depth,
         partition_cols=partition_cols,
-        lineage=os.path.abspath(checkpoint),
-    )
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -280,18 +269,13 @@ def streaming_membership_maintenance(
 ) -> StreamingQuery:
     """Run the membership store live; same lineage contract as every
     maintenance fold."""
-    fold = membership_fold(
-        events.sparkSession,
+    return store.live_fold(
+        events,
+        checkpoint,
+        membership_fold,
         store_dir,
         value_col,
         n_bits=n_bits,
         n_hashes=n_hashes,
         partition_cols=partition_cols,
-        lineage=os.path.abspath(checkpoint),
-    )
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

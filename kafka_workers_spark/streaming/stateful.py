@@ -8,15 +8,9 @@ WorkerTask.java:11-70; punctuation impl/task/WorkerThread.java:87-102,
 impl/punctuator/PunctuatorThread.java:14-47; README.md:64 mutual-exclusion
 guarantee).
 
-Spark mapping: ``applyInPandasWithState`` keyed by the sub-partition id.
-(Spark 4's ``transformWithStateInPandas`` adds typed state + explicit
-init/close hooks + real one-shot timers, but its dedicated Python runner
-needs ``google.protobuf`` at query runtime, absent in this container —
-"TransformWithStateInPySpark driver worker exited unexpectedly". The v2
-adapter EXISTS and is semantics-tested against fake handles —
-:mod:`streaming.stateful_v2`, ``apply_worker_task_v2`` — with a live
-contract test that self-activates when the environment gains protobuf;
-until then this module is the production surface.)
+Spark mapping: ``applyInPandasWithState`` keyed by the sub-partition id,
+not Spark 4's ``transformWithStateInPandas``, because the latter's Python
+runner needs ``google.protobuf`` at query runtime.
 Spark gives the same per-key mutual exclusion (state callbacks for one key
 are serialized) and *more* than the reference: state survives restarts via
 the checkpointed state store, where the reference's task state is volatile
@@ -38,6 +32,10 @@ ever seen.
 
 At 100 TB: state is partitioned by key across executors (RocksDB-backed
 state store in production configs); no driver-side state, no collect.
+
+Batch twin: :func:`replay_worker_task` runs the same task over each key's
+whole history in one grouped-map pass — the cross-plan oracles compare
+it with the relational operators.
 """
 
 from __future__ import annotations
@@ -108,6 +106,38 @@ def apply_worker_task(
         outputMode="append",
         timeoutConf=timeout,
     )
+
+
+def replay_worker_task(
+    df: DataFrame,
+    keys: list[str],
+    task: WorkerTask,
+    output_schema: StructType | str,
+    order_by: list[str] | None = None,
+) -> DataFrame:
+    """Replay a :class:`WorkerTask` over a batch DataFrame in one
+    grouped-map pass (``applyInPandas``): each key's full history is one
+    batch, sorted like the live handler sorts, run through ``process``
+    from ``init``'s state and then ``close``. No state store and no
+    timers, so ``punctuate`` never fires. ONE key-keyed shuffle."""
+
+    def replay(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        if order_by:
+            pdf = pdf.sort_values(order_by)
+        st = task.init(key) if task.init else {}
+        outs = []
+        if task.process:
+            out, st = task.process(key, pdf, st)
+            outs.append(out)
+        if task.close:
+            outs.append(task.close(key, st))
+        outs = [o for o in outs if o is not None and len(o)]
+        if not outs:
+            # applyInPandas accepts a column-less empty frame for any schema
+            return pd.DataFrame()
+        return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+
+    return df.groupBy(*keys).applyInPandas(replay, output_schema)
 
 
 def _task_handler(

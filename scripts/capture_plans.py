@@ -1,8 +1,10 @@
 """Capture .explain("formatted") for every driver-windowed query into
-plans/r16/<query>_<tag>.txt (tag = before/after — the round-16
-optimization evidence files; the judge checks plan claims against these).
+plans/<round>/<query>_<tag>.txt (tag = before/after — a round's
+optimization evidence files, which plan claims are checked against).
 
-    python scripts/capture_plans_r16.py <before|after> [names...]
+    python scripts/capture_plans.py <round> <before|after> [names...]
+
+e.g. ``python scripts/capture_plans.py r17 after agg_group_ols``.
 
 Runs at sf0.001 (plan SHAPES are scale-independent; store-backed queries
 build eagerly at DataFrame-construction time, which is cheap there) on a
@@ -18,17 +20,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    sf_dir = "/root/testdata/sf0.001"
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd, tag, only = sys.argv[1], sys.argv[2], set(sys.argv[3:])
+    from tests.conftest import SF_SMOKE as sf_dir
+
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]")
-        .appName("capture_plans_r16")
+        .appName(f"capture_plans_{rnd}")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.sql.shuffle.partitions", "8")

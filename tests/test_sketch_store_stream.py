@@ -240,3 +240,55 @@ def test_membership_fold_equals_one_shot_and_never_false_negative(spark, tmp_pat
         membership_fold(
             spark, store, "seen_key", n_bits=1 << 15, n_hashes=4, lineage="L"
         )(ev.limit(5), 2)
+
+
+@pytest.mark.parametrize("family", ["counts", "membership"])
+def test_streaming_counts_and_membership_restart_and_lineage(spark, tmp_path, family):
+    """The CMS and Bloom live wrappers: a two-file stream with a
+    checkpoint restart between the files ends equal to the one-shot
+    build, cell for cell; a second checkpoint pointed at the same store
+    fails at its first batch on the lineage stamp and leaves the store
+    untouched."""
+    from kafka_workers_spark.functions.sketches import bloom_build
+    from kafka_workers_spark.streaming.sketch_store import (
+        streaming_counts_maintenance,
+        streaming_membership_maintenance,
+    )
+
+    entry, one_shot, kw, cols = {
+        "counts": (
+            streaming_counts_maintenance, cms_build,
+            {"width": 256, "depth": 4}, ("counts", "width", "depth"),
+        ),
+        "membership": (
+            streaming_membership_maintenance, bloom_build,
+            {"n_bits": 1 << 14, "n_hashes": 4}, ("words", "n_bits", "n_hashes"),
+        ),
+    }[family]
+
+    def canon(df):
+        return sorted((tuple(r[cols[0]]), r[cols[1]], r[cols[2]]) for r in df.collect())
+
+    ev = _events(spark).select(
+        "event_id", F.concat_ws("#", "event_type", "user_id").alias("seen_key")
+    )
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema("event_id long, seen_key string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        entry(stream, store, ckpt, "seen_key", **kw).awaitTermination(120)
+
+    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
+    run(ckpt)
+    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
+    run(ckpt)  # checkpoint restart: only the new file folds
+    got = canon(read_sketch_store(spark, store))
+    assert got == canon(one_shot(ev, "seen_key", **kw)) and len(got) == 1
+
+    with pytest.raises(Exception, match="lineage"):
+        run(str(tmp_path / "ckpt_other"))
+    assert canon(read_sketch_store(spark, store)) == got

@@ -323,6 +323,7 @@ class _FakeState:
         self._tuple = None
         self.now_ms = now_ms
         self.hasTimedOut = False
+        self.timeouts = []
 
     @property
     def exists(self):
@@ -339,7 +340,7 @@ class _FakeState:
         self._tuple = None
 
     def setTimeoutDuration(self, ms):
-        pass
+        self.timeouts.append(ms)
 
     def getCurrentProcessingTimeMs(self):
         return self.now_ms
@@ -407,6 +408,139 @@ def test_legacy_raw_dict_state_migrates_into_envelope():
     env = json.loads(state.get[0])
     assert env["u"]["n"] == 8  # legacy count carried over and incremented
     assert env["p"] == 9000 and env["d"] == 9000  # clocks restarted at now
+
+
+def _lifecycle_task():
+    """Counts rows per key and tags every emitted row with the hook that
+    produced it."""
+
+    def row(key, kind, st):
+        return pd.DataFrame({"k": [key[0]], "kind": [kind], "n": [st["n"]]})
+
+    def process(key, pdf, st):
+        st = {"n": st["n"] + len(pdf)}
+        return row(key, "data", st), st
+
+    return WorkerTask(
+        init=lambda key: {"n": 0},
+        process=process,
+        punctuate=lambda key, st, now_ms: (row(key, "punct", st), st),
+        close=lambda key, st: row(key, "close", st),
+    )
+
+
+def _drive_chunks(handle, state, chunks, now_ms, timed_out=False):
+    state.now_ms, state.hasTimedOut = now_ms, timed_out
+    out = []
+    for emitted in handle((1,), iter(chunks), state):
+        out.extend(emitted.to_dict("records"))
+    return out
+
+
+def test_handler_runs_init_then_one_process_call_over_all_chunks():
+    """init seeds the user state; a key's Arrow chunks reach ``process``
+    as ONE frame; the envelope records both clocks and the timer is
+    armed for the next tick."""
+    import json
+
+    from kafka_workers_spark.streaming.stateful import _task_handler
+
+    handle = _task_handler(_lifecycle_task(), 1000, None, None, 1000)
+    state = _FakeState()
+    chunks = [pd.DataFrame({"v": [1, 2]}), pd.DataFrame({"v": [3]})]
+    out = _drive_chunks(handle, state, chunks, now_ms=5000)
+    assert out == [{"k": 1, "kind": "data", "n": 3}]
+    assert json.loads(state.get[0]) == {"u": {"n": 3}, "p": 5000, "d": 5000}
+    assert state.timeouts == [1000]
+
+
+def test_handler_order_by_sorts_across_chunks():
+    """``order_by`` sorts the concatenated key group, not each chunk: a
+    per-chunk sort would break per-offset order for any group larger
+    than one Arrow batch."""
+    from kafka_workers_spark.streaming.stateful import _task_handler
+
+    seen = []
+
+    def process(key, pdf, st):
+        seen.extend(pdf["v"])
+        return None, st
+
+    handle = _task_handler(WorkerTask(process=process), None, ["v"], None, None)
+    chunks = [pd.DataFrame({"v": [5, 3]}), pd.DataFrame({"v": [4, 1]})]
+    _drive_chunks(handle, _FakeState(), chunks, now_ms=0)
+    assert seen == [1, 3, 4, 5]
+
+
+def test_handler_expired_timer_forces_punctuate_and_rearms():
+    """A timer firing on a silent key punctuates even before a full
+    interval has passed since the last punctuate, restarts the punctuate
+    clock at the firing time, and re-arms the timer."""
+    import json
+
+    from kafka_workers_spark.streaming.stateful import _task_handler
+
+    handle = _task_handler(_lifecycle_task(), 1000, None, None, 1000)
+    state = _FakeState()
+    _drive_chunks(handle, state, [pd.DataFrame({"v": [1]})], now_ms=5000)
+    state.timeouts.clear()
+    out = _drive_chunks(handle, state, [], now_ms=5500, timed_out=True)
+    assert out == [{"k": 1, "kind": "punct", "n": 1}]
+    env = json.loads(state.get[0])
+    assert env["p"] == 5500 and env["d"] == 5000
+    assert state.timeouts == [1000]
+
+
+def test_handler_idle_timeout_closes_key_and_clears_state():
+    """Before ``idle_timeout_ms`` of silence a timer fire only
+    punctuates; after it, ``close`` emits the final row and the key's
+    state is removed with no timer re-armed."""
+    from kafka_workers_spark.streaming.stateful import _task_handler
+
+    handle = _task_handler(_lifecycle_task(), 1000, None, 3000, 1000)
+    state = _FakeState()
+    _drive_chunks(handle, state, [pd.DataFrame({"v": [1]})], now_ms=5000)
+    out = _drive_chunks(handle, state, [], now_ms=6000, timed_out=True)
+    assert [r["kind"] for r in out] == ["punct"]
+    state.timeouts.clear()
+    out = _drive_chunks(handle, state, [], now_ms=8000, timed_out=True)
+    assert out == [{"k": 1, "kind": "close", "n": 1}]
+    assert not state.exists and state.timeouts == []
+
+
+def test_replay_worker_task_process_close_and_empty_keys(spark):
+    """The batch twin on three keys: key 1 emits from ``process``, key 2
+    only from ``close``, key 3 nothing. ``init`` seeds each key's state
+    and ``order_by`` sorts each key's history before ``process``; a key
+    with no output adds zero rows, alone or beside the others, and the
+    declared schema holds."""
+    from pyspark.sql.types import StructType
+
+    from kafka_workers_spark.streaming.stateful import replay_worker_task
+
+    def row(key, kind, seq):
+        return pd.DataFrame({"k": [key[0]], "kind": [kind], "seq": [",".join(map(str, seq))]})
+
+    def process(key, pdf, st):
+        seq = st["seq"] + pdf["v"].tolist()
+        return (row(key, "process", seq) if key[0] == 1 else None), {"seq": seq}
+
+    def close(key, st):
+        return row(key, "close", st["seq"]) if key[0] == 2 else None
+
+    task = WorkerTask(init=lambda key: {"seq": [100 * key[0]]}, process=process, close=close)
+    schema = "k int, kind string, seq string"
+    df = spark.createDataFrame(
+        [(1, 3), (1, 1), (2, 5), (1, 2), (3, 7), (2, 4)], "k int, v int"
+    )
+    out = replay_worker_task(df, ["k"], task, schema, order_by=["v"])
+    assert out.schema == StructType.fromDDL(schema)
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "process", "100,1,2,3"),
+        (2, "close", "200,4,5"),
+    ]
+    silent = replay_worker_task(df.filter("k = 3"), ["k"], task, schema, order_by=["v"])
+    assert silent.collect() == [] and silent.schema == StructType.fromDDL(schema)
 
 
 def test_coerce_to_schema_nulls_unverifiable_types():
