@@ -1,21 +1,27 @@
-"""ANN indexing operators: IVF with trained centroids.
+"""ANN indexing operators: IVF and product quantization with trained
+codebooks, plus the embedding dedup, storage and search around them.
 
-The registered query (queries/similarity.py ann_ivf_topk) demonstrates the
-IVF plan shape with oracle-checkable arithmetic; this module supplies the
-production pieces that are not SQL-expressible: a coarse quantizer trained
-with pyspark.ml KMeans, ingest-time list assignment, and a generic probed
-search usable with any list assignment.
+One exact-integer quantizer core serves both quantizers. Training
+(:func:`kmeans_fixed`; :func:`pq_train`, keyed by subspace) is the one
+Lloyd loop :func:`_lloyd`; ingest (:func:`assign_lists`,
+:func:`pq_encode`) is one map pass over the batch. Both use one codebook
+row (:func:`_codebook`) and one nearest-codeword rule (:func:`_nearest`:
+exact integer squared L2, ties to the lowest code). So ingest reproduces
+training's labels bit for bit, and the DuckDB oracles of the registered
+queries (queries/similarity.py) replay the whole chain.
+:func:`train_ivf` (pyspark.ml KMeans) is the float trainer whose init
+cannot be replayed cross-engine.
 
-Scale shape (10⁹ vectors): training samples the corpus (KMeans on a
-fraction is standard); assignment is one broadcast-scored map pass at
-ingest; search touches ~nprobe/k of the data via an equi-join on the list
-id. Probing every list degrades gracefully to the exact baseline — pinned
-by the recall@k test (tests/test_similarity.py).
+Scale shape (10⁹ vectors): training samples the corpus (``train=``);
+assignment is one broadcast-scored map pass at ingest; search touches
+~nprobe/k of the data via an equi-join on the list id. Probing every
+list degrades gracefully to the exact baseline — pinned by the recall@k
+test (tests/test_similarity.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -80,101 +86,181 @@ def kmeans_fixed(
     uses this quantizer instead of a label stand-in.
 
     Returns ``(cents, assign)``: ``(list_id, i, c6)`` integer centroids
-    and ``(id_col, list_id)`` assignments.
+    and ``(id_col, list_id)`` assignments. Both are generation-pinned
+    (sites ``similarity.kmeans_fixed.cents`` / ``.assign``): every
+    caller reads them more than once, and the operator owns the pins.
 
-    Scale shape (round-15 optimization): vectors collapse ONCE to wide
-    arrays (one shuffle), centroids ride a one-row collected array
-    broadcast-cross-joined against them, and nearest-centroid assignment
-    is then a pure MAP pass (k·dim integer ops per row, zero shuffles —
-    the old long-format shape shuffled the training set twice per
-    assignment). Each Lloyd pass costs exactly ONE corpus-wide shuffle
-    (the (list, dim) mean aggregate; the old shape paid four). Dims must
-    be DENSE per id (0..dim−1 — what :func:`~kafka_workers_spark.
-    operators.dedup.explode_fixed` and ``hashed_doc_vectors`` emit); a
-    doc/centroid width mismatch raises in-plan rather than silently
-    skipping dims. Pass ``train`` (a filtered subset of ``exploded``,
-    e.g. a deterministic id-mod sample) so training touches a fraction
-    of the corpus (standard practice); only the single final assignment
-    pass reads every vector. At 100 TB, assign once at ingest instead;
-    see :func:`train_ivf`'s docstring.
+    Scale shape: the shared :func:`_lloyd` loop — vectors collapse ONCE
+    to dense arrays, centroids ride one broadcast codebook row, and
+    nearest-centroid assignment (:func:`_nearest`) is a pure map pass,
+    so each Lloyd pass costs exactly ONE corpus-wide shuffle (the
+    (list, dim) mean aggregate). Dims must be DENSE per id (0..dim−1 —
+    what :func:`~kafka_workers_spark.operators.dedup.explode_fixed` and
+    ``hashed_doc_vectors`` emit); a doc/centroid width mismatch raises
+    in-plan rather than silently skipping dims. Pass ``train`` (a
+    filtered subset of ``exploded``, e.g. a deterministic id-mod sample)
+    so training touches a fraction of the corpus (standard practice);
+    only the single final assignment pass reads every vector. At 100 TB,
+    assign once at ingest instead (:func:`assign_lists`).
     """
+    from kafka_workers_spark.operators.dedup import generation_pin
+
+    cents, assign = _lloyd(
+        exploded, train, k, iters, id_col,
+        op="kmeans_fixed", code="list_id", idx="i", seed_code=F.col(id_col),
+    )
+    return cents, generation_pin(assign, "similarity.kmeans_fixed.assign")
+
+
+def _lloyd(
+    exploded: DataFrame,
+    train: DataFrame | None,
+    k: int,
+    iters: int,
+    id_col: str,
+    op: str,
+    code: str,
+    idx: str,
+    seed_code: Column,
+    key: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The one exact-integer Lloyd loop behind :func:`kmeans_fixed` and
+    :func:`pq_train`. ``exploded`` is long ``(id_col, [key,] idx, x)``;
+    ``key`` (PQ's ``sub``) runs one independent quantizer per key value
+    inside the same plan.
+
+    The training rows widen to one dense array per ``(id, key)`` and are
+    generation-pinned (one materialization serves every pass). Seeds are
+    the ``k`` smallest training ids, labelled ``seed_code`` (the seed id
+    itself, or its dense rank); the seed codebook is cut straight from
+    the pinned wide frame. Each pass assigns with :func:`_nearest`
+    against the broadcast :func:`_codebook` row — a map pass — and
+    recomputes codewords as floor-divided integer means: the (key, code,
+    idx) aggregate is the pass's ONLY shuffle. The final assignment reads
+    every vector of ``exploded`` once.
+
+    Returns ``(cents, assign)``: long ``([key,] code, idx, c6)``
+    codewords, generation-pinned at ``similarity.{op}.cents``, and
+    ``(id_col, [key,] code)``.
+    """
+    from kafka_workers_spark.operators.dedup import generation_pin
+
+    keys = [key] if key else []
     train = exploded if train is None else train
 
-    def widen(df: DataFrame) -> DataFrame:
-        return _widen_dense(df, [id_col], "i", "x", "kmeans_fixed")
-
-    def dist(xs, cs):
-        return _sq_dist_dense(xs, cs, "kmeans_fixed")
-
-    def one_row_cents(cents_wide: DataFrame) -> DataFrame:
-        # all centroids as ONE collected row (k·dim values — tiny) for
-        # the broadcast cross join; collect_list order is irrelevant
-        # because the argmin is an array_min over (d, list_id) structs
-        return cents_wide.groupBy().agg(
-            F.collect_list(F.struct("list_id", "__cs")).alias("__cents")
-        )
-
-    def assign_wide(wide: DataFrame, cents_row: DataFrame) -> DataFrame:
-        # nearest centroid as a map-side expression: min over
-        # (d, list_id) structs == exact integer argmin with ties to the
-        # lowest list_id — the same total order the long shape's
-        # min(struct(d, list_id)) aggregate used
-        best = F.array_min(
-            F.transform(
-                F.col("__cents"),
-                lambda c: F.struct(
-                    dist(F.col("__xs"), c["__cs"]).alias("d"),
-                    c["list_id"].alias("list_id"),
-                ),
-            )
-        )["list_id"]
-        # the filter drops rows only when the centroid set is EMPTY
-        # (array_min over no centroids → NULL) — the old join-based
-        # assignment produced zero rows there too
+    def assign(wide: DataFrame, cb: DataFrame) -> DataFrame:
+        # the filter drops rows only when the codebook is EMPTY
+        # (array_min over no codewords → NULL)
         return (
-            wide.crossJoin(F.broadcast(cents_row))
-            .select(id_col, "__xs", best.alias("list_id"))
-            .filter(F.col("list_id").isNotNull())
+            wide.crossJoin(F.broadcast(cb))
+            .select(id_col, *keys, "__xs", _nearest(F.col("__xs"), code, op, key).alias(code))
+            .filter(F.col(code).isNotNull())
         )
 
-    wide_train = widen(train)
+    wide_train = _widen_dense(train, [id_col, *keys], idx, "x", op)
     if iters > 0:
-        from kafka_workers_spark.operators.dedup import generation_pin
-
         # one materialization for every assignment pass and the final
         # read: the widen aggregate is not runtime-reused (r16 A/B)
-        wide_train = generation_pin(wide_train, "similarity.kmeans_fixed.wide")
-    seeds = train.select(id_col).distinct().orderBy(id_col).limit(k)
-    cents_row = one_row_cents(
-        wide_train.join(F.broadcast(seeds), id_col).select(
-            F.col(id_col).alias("list_id"), F.col("__xs").alias("__cs")
-        )
+        wide_train = generation_pin(wide_train, f"similarity.{op}.wide")
+    seeds = (
+        train.select(id_col).distinct().orderBy(id_col).limit(k)
+        .select(id_col, seed_code.alias(code))
     )
-    # long-format seed centroids — the returned frame when iters == 0
-    cents = train.join(F.broadcast(seeds), id_col).select(
-        F.col(id_col).alias("list_id"), "i", F.col("x").alias("c6")
-    )
+    seeded = wide_train.join(F.broadcast(seeds), id_col).select(*keys, code, "__xs")
+    cb = _codebook(seeded, [*keys, code], op)
+    # long-format seed codewords — the returned frame when iters == 0
+    cents = seeded.select(*keys, code, F.posexplode("__xs").alias(idx, "c6"))
     for _ in range(iters):
-        assigned = assign_wide(wide_train, cents_row)
         # floor-divided integer mean: (S - pmod(S, c)) DIV c is exact —
         # pmod keeps the remainder non-negative so the floor semantics
-        # match DuckDB's // on negative sums too. ONE shuffle: the
-        # assignment is in-row, so only this (list, dim) aggregate moves
-        # data — same multiset of (x) per (list, i) as the old
-        # join-then-aggregate, so c6 replays bit-for-bit.
+        # match DuckDB's // on negative sums too. The posexplode stays in
+        # its own select: beside _nearest, a generator would re-evaluate
+        # the nearest expression once per exploded element.
         cents = (
-            assigned.select("list_id", F.posexplode("__xs").alias("i", "x"))
-            .groupBy("list_id", "i")
+            assign(wide_train, cb)
+            .select(*keys, code, F.posexplode("__xs").alias(idx, "x"))
+            .groupBy(*keys, code, idx)
             .agg(F.expr("(sum(x) - pmod(sum(x), count(*))) DIV count(*)").alias("c6"))
         )
-        cents_row = one_row_cents(
-            cents.groupBy("list_id")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "c6"))).alias("__sc"))
-            .select("list_id", F.col("__sc.c6").alias("__cs"))
+        cb = _codebook(cents, [*keys, code], op, idx)
+    cents = generation_pin(cents, f"similarity.{op}.cents")
+    wide_full = (
+        wide_train if train is exploded
+        else _widen_dense(exploded, [id_col, *keys], idx, "x", op)
+    )
+    return cents, assign(wide_full, cb).select(id_col, *keys, code)
+
+
+def _codebook(
+    cents: DataFrame, fields: list[str], op: str, idx: str | None = None
+) -> DataFrame:
+    """Codewords → ONE collected ``__cb`` row of ``struct(fields…, __cs)``
+    (k·dim values — tiny) for a broadcast cross join. ``cents`` is long
+    ``(fields…, idx, c6)``, or already dense ``(fields…, __xs)`` rows
+    when ``idx`` is None. collect_list order is irrelevant: :func:`_nearest`
+    takes an order-free argmin."""
+    if idx is not None:
+        cents = _widen_dense(cents, fields, idx, "c6", op)
+    return cents.groupBy().agg(
+        F.collect_list(F.struct(*fields, F.col("__xs").alias("__cs"))).alias("__cb")
+    )
+
+
+def _nearest(
+    xs: Column, code: str, op: str, key: str | None = None, at: Column | None = None
+) -> Column:
+    """The one nearest-codeword rule, as a map-side expression over the
+    row's ``__cb`` codebook column: exact integer squared L2 to every
+    codeword — only those whose ``key`` field equals ``at`` (default:
+    the row's own ``key`` column) when ``key`` is given — and the argmin
+    as ``array_min`` over ``(d, code)`` structs, i.e. ties go to the
+    lowest code. NULL only when no codeword matches."""
+    cb = F.col("__cb")
+    if key is not None:
+        want = F.col(key) if at is None else at
+        cb = F.filter(cb, lambda c: c[key] == want)
+    return F.array_min(
+        F.transform(
+            cb,
+            lambda c: F.struct(
+                _sq_dist_dense(xs, c["__cs"], op).alias("d"), c[code].alias(code)
+            ),
         )
-    wide_full = wide_train if train is exploded else widen(exploded)
-    assign = assign_wide(wide_full, cents_row).select(id_col, "list_id")
-    return cents, assign
+    )[code]
+
+
+def _encode(
+    df: DataFrame,
+    cb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    width: Column,
+    out: Column,
+    op: str,
+) -> DataFrame:
+    """The one ingest pass of :func:`assign_lists` and :func:`pq_encode`:
+    a map over the batch's own rows against the broadcast codebook row
+    (``__xs`` is the row's fixed-point vector), adding ``out``. A row
+    whose vector is NULL or not ``width`` wide — or any row, when the
+    codebook is empty — RAISES naming ``op`` and the id. The guard is a
+    FILTER so column pruning cannot drop it under count()-style
+    actions."""
+    ok = F.when(F.size(F.col(vec_col)) == width, F.lit(True)).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"{op}: {id_col} %s has a NULL vector or one not %s wide "
+                "(the codebook's width; null means the codebook is empty)",
+                F.col(id_col),
+                width,
+            )
+        ).cast("boolean")
+    )
+    return (
+        df.select("*", embedding_fixed(F.col(vec_col)).alias("__xs"))
+        .crossJoin(F.broadcast(cb))
+        .filter(ok)
+        .select(*df.columns, out)
+    )
 
 
 def _widen_dense(
@@ -224,22 +310,6 @@ def _sq_dist_dense(xs, cs, op: str):
         F.raise_error(
             F.lit(f"{op}: vector/centroid width mismatch — dims must be dense")
         ).cast("long")
-    )
-
-
-def _assign_nearest(exploded: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest-centroid assignment by exact integer squared L2; ties break
-    to the lowest list_id (min over (d, list_id) structs — deterministic)."""
-    diff = F.col("x") - F.col("c6")
-    d = (
-        exploded.join(F.broadcast(cents), "i")
-        .groupBy(id_col, "list_id")
-        .agg(F.sum(diff * diff).alias("d"))
-    )
-    return (
-        d.groupBy(id_col)
-        .agg(F.min(F.struct("d", "list_id")).alias("m"))
-        .select(id_col, F.col("m.list_id").alias("list_id"))
     )
 
 
@@ -568,7 +638,6 @@ def semantic_dedup(
     iters: int = 2,
     train_mod: int | None = 4,
     exact_groups: bool = False,
-    validate_eager: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster the corpus with a TRAINED coarse quantizer, then near-dedup
@@ -590,36 +659,18 @@ def semantic_dedup(
     is the complementary pass whose recall is independent of cluster
     geometry.
 
-    Plan shape: training = ``iters`` broadcast-join + codegen-agg passes
-    over the sample; assignment = one broadcast pass over the corpus;
-    the assignment table (2 longs per vector) is pinned with a
-    lineage-preserving persist because the pair self-join consumes it
-    twice (ARCHITECTURE.md §4 rule 2a); verification touches only the
-    candidate pair table.
+    Plan shape: training = ``iters`` map-assign + one-shuffle mean
+    passes over the sample (:func:`_lloyd`); assignment = one broadcast
+    map pass over the corpus; the assignment table (2 longs per vector)
+    arrives generation-pinned from :func:`kmeans_fixed` because the pair
+    self-join consumes it twice (ARCHITECTURE.md §4 rule 2a);
+    verification touches only the candidate pair table. An empty
+    training sample would make the quantizer empty and the whole
+    operator a SILENT no-op, so it raises in-plan at the first action
+    (:func:`_require_rows`); construction runs no Spark job.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from kafka_workers_spark.operators.dedup import barrier
 
-    # an empty training sample would make the quantizer empty and the
-    # whole operator a SILENT no-op — the worst failure mode a dedup
-    # pass can have. Default guard is IN-PLAN (the tfidf_weights
-    # raise_error pattern, operators/text.py): a limit(1) existence
-    # probe over the RAW frame (ids only, pre-barrier, pre-conversion —
-    # a plain short-circuiting scan, never the exchange) rides the
-    # training frame as a broadcast 1-row cross join, so construction
-    # runs NO Spark job (listener-asserted in tests/test_similarity.py)
-    # and the first action that touches training raises the same
-    # message. ``validate_eager=True`` keeps the build-time ValueError
-    # for callers that want failure before a pipeline is launched.
-    _empty_msg = (
-        f"semantic_dedup: no id satisfies id % {train_mod} == 0 — the "
-        "training sample is empty; pass a different train_mod or None"
-    )
-    if train_mod is not None and validate_eager:
-        probe = df.filter(F.pmod(F.col(id_col), F.lit(train_mod)) == 0)
-        if probe.select(id_col).limit(1).count() == 0:
-            raise ValueError(_empty_msg)
     # barrier before the explode: kmeans_fixed references the exploded
     # frame from every Lloyd pass (seeds, per-iteration assignment and
     # centroid recompute, final assignment) — without the exchange pin
@@ -632,36 +683,18 @@ def semantic_dedup(
         ),
         [id_col],
     )
+    train = None
     if train_mod is not None:
-        train = comp.filter(F.pmod(F.col(id_col), F.lit(train_mod)) == 0)
-        if not validate_eager:
-            # lazy twin of the eager probe: a 1-row guard whose value the
-            # train filter REFERENCES (so Catalyst cannot prune the
-            # raise_error away); always-true when the sample is non-empty
-            guard = (
-                df.filter(F.pmod(F.col(id_col), F.lit(train_mod)) == 0)
-                .select(id_col)
-                .limit(1)
-                .groupBy()
-                .agg(F.count("*").alias("__any"))
-                .select(
-                    F.when(F.col("__any") > 0, F.lit(1))
-                    .otherwise(F.raise_error(F.lit(_empty_msg)).cast("int"))
-                    .alias("__ok")
-                )
-            )
-            train = (
-                train.crossJoin(F.broadcast(guard))
-                .filter(F.col("__ok") == 1)
-                .drop("__ok")
-            )
-    else:
-        train = None
+        # the existence probe reads the RAW frame (ids only, pre-barrier,
+        # pre-conversion — a plain short-circuiting scan, never the exchange)
+        sampled = F.pmod(F.col(id_col), F.lit(train_mod)) == 0
+        train = _require_rows(
+            comp.filter(sampled),
+            df.filter(sampled).select(id_col),
+            f"semantic_dedup: no id satisfies id % {train_mod} == 0 — the "
+            "training sample is empty; pass a different train_mod or None",
+        )
     _, assign = kmeans_fixed(comp, k=k, iters=iters, id_col=id_col, train=train)
-    from kafka_workers_spark.operators.dedup import generation_pin
-
-    # generation_pin (r16): repeated dedup calls release superseded pins
-    assign = generation_pin(assign, "similarity.semantic_dedup.assign")
     a, b = assign.alias("a"), assign.alias("b")
     cand = (
         a.join(
@@ -672,6 +705,25 @@ def semantic_dedup(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
     )
     return _survivors_after_verify(df, cand, id_col, vec_col, min_cosine, exact_groups)
+
+
+def _require_rows(frame: DataFrame, probe: DataFrame, msg: str) -> DataFrame:
+    """Lazy empty-input guard: ``frame`` cross-joins a broadcast 1-row
+    guard computed from a short-circuiting ``limit(1)`` over ``probe``,
+    and its filter REFERENCES the guard value, so Catalyst cannot prune
+    the raise_error away. The first action that reads ``frame`` raises
+    ``msg`` when ``probe`` is empty; building the plan runs no job."""
+    guard = (
+        probe.limit(1)
+        .groupBy()
+        .agg(F.count("*").alias("__any"))
+        .select(
+            F.when(F.col("__any") > 0, F.lit(1))
+            .otherwise(F.raise_error(F.lit(msg)).cast("int"))
+            .alias("__ok")
+        )
+    )
+    return frame.crossJoin(F.broadcast(guard)).filter(F.col("__ok") == 1).drop("__ok")
 
 
 # ---------------------------------------------------------------------------
@@ -733,21 +785,20 @@ def assign_lists(
     vec_col: str = "embedding",
     list_col: str = "list_id",
 ) -> DataFrame:
-    """Ingest-time IVF list assignment against STORED integer centroids —
-    the one-broadcast-pass loop the training docstrings promise: train
-    once (:func:`kmeans_fixed` → persist ``cents`` as a table), then
-    assign every new batch here and land ``list_col`` as a stored column
-    for :func:`ivf_topk`-style probed search. Exact integer squared-L2
-    with lowest-list tie-break — identical arithmetic to training, so
-    re-assigning training vectors reproduces their training lists.
+    """Ingest-time IVF list assignment against STORED integer centroids:
+    train once (:func:`kmeans_fixed` → persist ``cents`` as a table),
+    then assign every new batch here and land ``list_col`` as a stored
+    column for :func:`ivf_topk`-style probed search. One map pass
+    (:func:`_encode`) over the batch's own vectors against the broadcast
+    centroid row, with the training loop's own :func:`_nearest` rule —
+    so re-assigning training vectors reproduces their training lists.
+    A NULL vector, or one whose width differs from the centroids',
+    raises naming ``id_col``'s value.
     """
-    from kafka_workers_spark.operators.dedup import embedding_fixed, explode_fixed
-
-    exploded = explode_fixed(
-        df.select(id_col, embedding_fixed(F.col(vec_col)).alias("v6")), [id_col]
-    )
-    assign = _assign_nearest(exploded, cents, id_col)
-    return df.join(assign.withColumnRenamed("list_id", list_col), id_col)
+    out = _nearest(F.col("__xs"), "list_id", "assign_lists").alias(list_col)
+    width = F.size(F.get(F.col("__cb"), 0)["__cs"])
+    cb = _codebook(cents, ["list_id"], "assign_lists", "i")
+    return _encode(df, cb, id_col, vec_col, width, out, "assign_lists")
 
 
 def near_dedup_embeddings_incremental(
@@ -871,23 +922,6 @@ def _pq_comp(exploded: DataFrame, dsub: int, id_col: str) -> DataFrame:
     )
 
 
-def _assign_pq(comp: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest-codeword assignment per (vector, subspace) by exact integer
-    squared L2; ties break to the lowest code — same determinism rule as
-    :func:`_assign_nearest`, grouped by the extra ``sub`` key."""
-    diff = F.col("x") - F.col("c6")
-    d = (
-        comp.join(F.broadcast(cents), ["sub", "j"])
-        .groupBy(id_col, "sub", "code")
-        .agg(F.sum(diff * diff).alias("d"))
-    )
-    return (
-        d.groupBy(id_col, "sub")
-        .agg(F.min(F.struct("d", "code")).alias("m"))
-        .select(id_col, "sub", F.col("m.code").alias("code"))
-    )
-
-
 def pq_train(
     exploded: DataFrame,
     m: int = 4,
@@ -920,142 +954,50 @@ def pq_train(
     chain; the remap is invisible to it because search output never
     exposes code values, only distances).
 
-    An empty training frame raises in-plan (the :func:`semantic_dedup`
-    lazy raise_error pattern) instead of silently producing empty
-    codebooks — otherwise :func:`pq_encode`'s join would drop every
-    input row, the silent-no-op failure mode this package guards
-    against everywhere.
+    An empty training frame raises in-plan (:func:`_require_rows`)
+    instead of silently producing empty codebooks — otherwise
+    :func:`pq_encode` would have nothing to encode against, the
+    silent-no-op failure mode this package guards against everywhere.
 
     Returns ``(cents, codes)``: ``(sub, code, j, c6)`` integer codebooks
-    and ``(id_col, sub, code)`` — m small codes per vector, the at-rest
-    representation (``m·log2(k)`` bits instead of ``dim·32``: with
-    m=8, k=256 that is 8 bytes per vector, a 32× compression of a
-    64-dim float corpus, searchable without decompression via
-    :func:`pq_adc_topk`).
+    (generation-pinned at ``similarity.pq_train.cents``) and ``(id_col,
+    sub, code)`` — m small codes per vector, the at-rest representation
+    (``m·log2(k)`` bits instead of ``dim·32``: with m=8, k=256 that is 8
+    bytes per vector, a 32× compression of a 64-dim float corpus,
+    searchable without decompression via :func:`pq_adc_topk`).
 
-    Scale shape (10⁹ vectors): pass ``train`` (a deterministic id-mod
-    sample) so Lloyd passes touch a fraction of the corpus; each pass is
-    one broadcast join (m·k·dim/m = k·dim codebook rows) + codegen hash
-    agg. Only the single final encode pass reads every vector — at 100 TB
-    run it once at ingest and store ``codes`` as columns, exactly like
-    :func:`assign_lists` for IVF (PQ composes with IVF: coarse list for
-    pruning, PQ codes for in-list ADC scoring).
+    Scale shape (10⁹ vectors): the shared :func:`_lloyd` loop keyed by
+    ``sub`` — each pass is one map assignment against the broadcast
+    m·k-codeword row plus one (sub, code, j) mean shuffle. Pass ``train``
+    (a deterministic id-mod sample) so Lloyd passes touch a fraction of
+    the corpus; only the single final encode pass reads every vector —
+    at 100 TB run it once at ingest (:func:`pq_encode`) and store the
+    codes as columns, exactly like :func:`assign_lists` for IVF (PQ
+    composes with IVF: coarse list for pruning, PQ codes for in-list
+    ADC scoring).
     """
     if dim % m:
         raise ValueError(f"pq_train: dim {dim} not divisible by m {m}")
     dsub = dim // m
-    comp = _pq_comp(exploded, dsub, id_col)
-    tcomp = comp if train is None else _pq_comp(train, dsub, id_col)
+    tcomp = None
     if train is not None:
-        # lazy in-plan empty-training guard (semantic_dedup's pattern):
-        # a 1-row aggregate the training frame REFERENCES, so Catalyst
-        # cannot prune the raise_error; no job runs at build time
-        _empty_msg = (
+        tcomp = _require_rows(
+            _pq_comp(train, dsub, id_col),
+            train.select(id_col),
             "pq_train: the training frame is empty — codebooks would be "
-            "empty and pq_encode would silently drop every input row; "
-            "pass a non-empty train sample or train=None"
-        )
-        guard = (
-            train.select(id_col)
-            .limit(1)
-            .groupBy()
-            .agg(F.count("*").alias("__any"))
-            .select(
-                F.when(F.col("__any") > 0, F.lit(1))
-                .otherwise(F.raise_error(F.lit(_empty_msg)).cast("int"))
-                .alias("__ok")
-            )
-        )
-        tcomp = (
-            tcomp.crossJoin(F.broadcast(guard))
-            .filter(F.col("__ok") == 1)
-            .drop("__ok")
+            "empty and pq_encode would raise on every input row; pass a "
+            "non-empty train sample or train=None",
         )
     # Seeds are ONE global k-row list (the k smallest training ids), so
-    # the dense 0..k-1 code IS the seed's rank — assigned here, before
-    # training, instead of a distinct + dense_rank + join remap after it
-    # (the r7 shape). Rank order == seed-id order, so the lowest-code
-    # assignment tie-break is unchanged and every distance replays
-    # bit-identically; codes are dense from the first Lloyd pass, which
-    # keeps pq_encode's int cast safe against any hash-derived id space.
-    seeds = (
-        tcomp.select(id_col)
-        .distinct()
-        .orderBy(id_col)
-        .limit(k)
-        .select(
-            id_col,
-            (F.row_number().over(W.orderBy(id_col)) - 1).alias("__code"),
-        )
+    # the dense 0..k-1 code IS the seed's rank. Rank order == seed-id
+    # order, so the lowest-code tie-break equals the lowest-seed-id one,
+    # and codes are dense from the first pass — pq_encode's int cast
+    # stays safe against any hash-derived id space.
+    rank = F.row_number().over(W.orderBy(id_col)) - 1
+    return _lloyd(
+        _pq_comp(exploded, dsub, id_col), tcomp, k, iters, id_col,
+        op="pq_train", code="code", idx="j", seed_code=rank, key="sub",
     )
-    cents = tcomp.join(F.broadcast(seeds), id_col).select(
-        "sub", F.col("__code").alias("code"), "j", F.col("x").alias("c6")
-    )
-
-    # Wide-format Lloyd passes (round-15, the kmeans_fixed shape): each
-    # (vector, subspace) collapses once to a dense dsub-array, all m·k
-    # codebook rows ride ONE collected row broadcast-cross-joined
-    # against them, and nearest-codeword assignment is a pure map
-    # expression — so each pass costs exactly one corpus-wide shuffle
-    # (the (sub, code, j) mean) where the long shape paid four.
-    # Arithmetic is identical: exact integer squared L2 in
-    # zip_with/aggregate, argmin as array_min over (d, code) structs ==
-    # the old min-struct lowest-code tie-break, and the mean aggregates
-    # the same (x) multiset per (sub, code, j).
-    def widen(c: DataFrame) -> DataFrame:
-        return _widen_dense(c, [id_col, "sub"], "j", "x", "pq_train")
-
-    def dist(xs, cs):
-        return _sq_dist_dense(xs, cs, "pq_train")
-
-    def cents_row_of(cents_long: DataFrame) -> DataFrame:
-        return (
-            cents_long.groupBy("sub", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("j", "c6"))).alias("__sc"))
-            .select("sub", "code", F.col("__sc.c6").alias("__cs"))
-            .groupBy()
-            .agg(F.collect_list(F.struct("sub", "code", "__cs")).alias("__cb"))
-        )
-
-    def assign_wide(wide: DataFrame, cents_row: DataFrame) -> DataFrame:
-        mine = F.filter(F.col("__cb"), lambda c: c["sub"] == F.col("sub"))
-        best = F.array_min(
-            F.transform(
-                mine,
-                lambda c: F.struct(
-                    dist(F.col("__xs"), c["__cs"]).alias("d"),
-                    c["code"].alias("code"),
-                ),
-            )
-        )["code"]
-        # NULL only when the codebook is empty — the old join-based
-        # assignment produced zero rows there too
-        return (
-            wide.crossJoin(F.broadcast(cents_row))
-            .select(id_col, "sub", "__xs", best.alias("code"))
-            .filter(F.col("code").isNotNull())
-        )
-
-    wide_t = widen(tcomp)
-    if iters > 0:
-        from kafka_workers_spark.operators.dedup import generation_pin
-
-        # one materialization for every assignment pass (kmeans_fixed's pin)
-        wide_t = generation_pin(wide_t, "similarity.pq_train.wide")
-    cents_row = cents_row_of(cents)
-    for _ in range(iters):
-        assigned = assign_wide(wide_t, cents_row)
-        # floor-divided integer mean — same pmod trick as kmeans_fixed so
-        # negative sums floor identically to DuckDB's //
-        cents = (
-            assigned.select("sub", "code", F.posexplode("__xs").alias("j", "x"))
-            .groupBy("sub", "code", "j")
-            .agg(F.expr("(sum(x) - pmod(sum(x), count(*))) DIV count(*)").alias("c6"))
-        )
-        cents_row = cents_row_of(cents)
-    wide_full = wide_t if tcomp is comp else widen(comp)
-    codes = assign_wide(wide_full, cents_row).select(id_col, "sub", "code")
-    return cents, codes
 
 
 def pq_adc_topk(
@@ -1225,43 +1167,22 @@ def pq_encode(
     (:func:`pq_train` → persist ``cents`` as a table), then encode every
     new batch here and land ``out_col`` (``array<int>`` of m codes,
     ordered by subspace) as a stored column for :func:`pq_adc_topk` /
-    :func:`ivf_pq_topk` search. Exact integer squared-L2 assignment with
-    lowest-code tie-break — identical arithmetic to training, so
-    re-encoding training vectors reproduces their training codes (pinned
-    in tests). One broadcast-join pass over the batch; nothing else is
-    read. Rows that fail to produce codes (a NULL ``vec_col``, or empty
-    codebooks that slipped past :func:`pq_train`'s guard) RAISE in-plan
-    rather than silently vanishing from the output — an inner join here
-    would drop them, the silent-no-op failure mode."""
-    from kafka_workers_spark.operators.dedup import embedding_fixed, explode_fixed
-
-    exploded = explode_fixed(
-        df.select(id_col, embedding_fixed(F.col(vec_col)).alias("v6")), [id_col]
-    )
-    codes = _assign_pq(_pq_comp(exploded, dsub, id_col), cents, id_col)
-    arr = (
-        codes.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("__sc"))
-        .select(
-            id_col,
-            F.transform(F.col("__sc"), lambda r: r["code"].cast("int")).alias(out_col),
-        )
-    )
-    # guard as a FILTER (always true on healthy rows) rather than a
-    # projected column: column pruning would drop a projection-side
-    # raise_error under count()-style actions, but a predicate affects
-    # cardinality so every action evaluates it
-    return df.join(arr, id_col, "left").filter(
-        F.when(F.col(out_col).isNotNull(), F.lit(True)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("pq_encode: no codes produced for "),
-                    F.col(id_col).cast("string"),
-                    F.lit(" — NULL vector or empty codebooks"),
-                )
-            ).cast("boolean")
-        )
-    )
+    :func:`ivf_pq_topk` search. One map pass (:func:`_encode`) over the
+    batch's own vectors: the fixed-point array is sliced per subspace
+    and each slice takes the training loop's :func:`_nearest` rule
+    against that subspace's codewords — so re-encoding training vectors
+    reproduces their training codes (pinned in tests). A NULL vector,
+    one that is not m·``dsub`` wide, or empty codebooks RAISE in-plan
+    rather than yielding short or missing codes."""
+    m = (F.array_max(F.transform(F.col("__cb"), lambda c: c["sub"])) + 1).cast("int")
+    out = F.transform(
+        F.sequence(F.lit(0), m - 1),
+        lambda s: _nearest(
+            F.slice(F.col("__xs"), s * dsub + 1, dsub), "code", "pq_encode", "sub", s
+        ).cast("int"),
+    ).alias(out_col)
+    cb = _codebook(cents, ["sub", "code"], "pq_encode", "j")
+    return _encode(df, cb, id_col, vec_col, m * dsub, out, "pq_encode")
 
 
 def pq_codes_long(

@@ -315,8 +315,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_fixed_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     from kafka_workers_spark.operators.similarity import kmeans_fixed
 
     exploded, norms = _vectors_exploded(spark, sf_dir)
@@ -327,14 +325,8 @@ def _ivf_fixed_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         iters=IVF_ITERS,
         train=comp.filter(F.col("vec_id") % TRAIN_MOD == 0),
     )
-    # Pin the two training products that multiple branches consume:
-    # cents (k×dim rows — probe scoring AND the final assignment pass)
-    # and assign (2 longs per vector — the candidate join; at ingest time
-    # this is a stored column, see operators.ivf_topk). persist keeps
-    # lineage, so executor loss recomputes instead of failing the job —
-    # never localCheckpoint (ARCHITECTURE.md §4 rule 3).
-    cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
-    assign = assign.persist(StorageLevel.MEMORY_AND_DISK)
+    # cents (probe scoring AND the final assignment pass) and assign (the
+    # candidate join) arrive generation-pinned from kmeans_fixed
     q = comp.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("i").alias("qi"),
@@ -643,8 +635,6 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with IVF (coarse list prune, then in-list ADC) and with exact
     shortlist re-ranking for recall (scripts/recall_quantized.py's
     discipline)."""
-    from pyspark.storagelevel import StorageLevel
-
     from kafka_workers_spark.operators.similarity import pq_adc_topk, pq_train
 
     exploded, _ = _vectors_exploded(spark, sf_dir)
@@ -657,10 +647,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=PQ_ITERS,
         train=comp.filter(F.col("vec_id") % TRAIN_MOD == 0),
     )
-    # same pin rationale as _ivf_fixed_topk: the trained codebook feeds
-    # both the corpus encode pass and the query LUT; persist keeps
-    # lineage (executor loss recomputes — ARCHITECTURE.md §4 rule 3)
-    cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
+    # the trained codebook (generation-pinned by pq_train) feeds both the
+    # corpus encode pass and the query LUT
     q = comp.filter(F.col("vec_id") < N_QUERIES)
     return pq_adc_topk(codes, cents, q, dsub=_PQ_DSUB, k_top=TOP_K)
 
@@ -743,8 +731,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates cut ~nprobe/k_lists by the coarse prune
     BEFORE any distance math; surviving candidates cost m LUT lookups
     each — corpus floats are never read at query time."""
-    from pyspark.storagelevel import StorageLevel
-
     from kafka_workers_spark.operators.similarity import (
         ivf_pq_topk,
         kmeans_fixed,
@@ -758,9 +744,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp, m=PQ_M, dim=_DIM, k=PQ_CODES, iters=PQ_ITERS, train=train
     )
     ivf_cents, assign = kmeans_fixed(comp, k=K_LISTS, iters=IVF_ITERS, train=train)
-    cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
-    ivf_cents = ivf_cents.persist(StorageLevel.MEMORY_AND_DISK)
-    assign = assign.persist(StorageLevel.MEMORY_AND_DISK)
     q = comp.filter(F.col("vec_id") < N_QUERIES)
     return ivf_pq_topk(
         codes, cents, assign, ivf_cents, q,
@@ -814,8 +797,6 @@ def ann_rerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the exact stage touches |shortlist|·dim join rows —
     bounded by the approximate stage, independent of corpus size."""
-    from pyspark.storagelevel import StorageLevel
-
     from kafka_workers_spark.operators.similarity import (
         pq_adc_topk,
         pq_train,
@@ -828,7 +809,6 @@ def ann_rerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp, m=PQ_M, dim=_DIM, k=PQ_CODES, iters=PQ_ITERS,
         train=comp.filter(F.col("vec_id") % TRAIN_MOD == 0),
     )
-    cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
     q = comp.filter(F.col("vec_id") < N_QUERIES)
     short = pq_adc_topk(codes, cents, q, dsub=_PQ_DSUB, k_top=PQ_SHORTLIST)
     return rerank_exact(

@@ -1410,12 +1410,9 @@ def text_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"), "i", "x")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cents, assign = kmeans_fixed(vecs, k=_TC_K, iters=_TC_ITERS)
-    # two consumers below (sizes aggregate + the final join) and ~7 plan
-    # references to the un-pinned hash chain through the nested Lloyd
-    # iterations — pin the assignment like ann_ivf_topk pins its training
-    # products (persist keeps lineage; never localCheckpoint — §4 rule 3)
-    assign = assign.persist(StorageLevel.MEMORY_AND_DISK)
+    # the assignment has two consumers below (sizes aggregate + the final
+    # join); kmeans_fixed returns it generation-pinned
+    _, assign = kmeans_fixed(vecs, k=_TC_K, iters=_TC_ITERS)
     sizes = assign.groupBy("list_id").agg(F.count("*").cast("bigint").alias("topic_size"))
     return assign.join(sizes, "list_id").select(
         F.col("vec_id").alias("doc_id"),

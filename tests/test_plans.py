@@ -4,6 +4,8 @@ but the free optimizations must be verified, not assumed)."""
 
 from __future__ import annotations
 
+import pytest
+
 from kafka_workers_spark.plans import audit
 from kafka_workers_spark.queries import load_all, load_extra
 
@@ -430,6 +432,61 @@ def test_pagerank_plan_shape_pinned(spark):
         a.python_evals,
     )
     assert got == (16, 1, 7, 0, 1, 0, 0), (got, a.text[:800])
+
+
+def _shape(a):
+    return (
+        a.exchanges,
+        a.broadcast_joins,
+        a.sortmerge_joins,
+        a.shuffled_hash_joins,
+        a.nested_loop_joins,
+        a.cartesian_products,
+        a.python_evals,
+    )
+
+
+@pytest.mark.parametrize(
+    "name, want",
+    [
+        # PQ seeds its codebook from the pinned wide training frame: one
+        # pass over the long training rows fewer than a long-format seed
+        ("ann_pq_adc_topk", (16, 3, 0, 0, 5, 0, 0)),
+        ("ann_ivf_topk", (19, 7, 0, 0, 3, 0, 0)),
+    ],
+)
+def test_quantizer_plan_shape_pinned(spark, name, want):
+    """Cold-plan pins for the two rows built on the shared exact-integer
+    Lloyd loop (operators/similarity.py ``_lloyd``): a change to the
+    loop's shape shows up here as a changed tuple. clearCache first, for
+    the reason test_pagerank_plan_shape_pinned gives."""
+    spark.catalog.clearCache()
+    a = audit(POOL[name].fn(spark, SF))
+    assert _shape(a) == want, (_shape(a), a.text[:800])
+
+
+def test_ingest_encoders_are_one_map_pass(spark):
+    """assign_lists and pq_encode against STORED codebooks are one map
+    pass over the batch: the only exchanges are the two that collect the
+    codebook into one broadcast row, and nothing joins back on the id
+    (no sort-merge join, no broadcast hash join)."""
+    from kafka_workers_spark.operators.similarity import assign_lists, pq_encode
+    from kafka_workers_spark.sources.files import load_table
+
+    spark.catalog.clearCache()
+    emb = load_table(spark, SF, "embeddings")
+    dim = 64
+    ivf = spark.createDataFrame(
+        [(c, i, c) for c in (0, 1) for i in range(dim)], "list_id long, i int, c6 long"
+    )
+    pq = spark.createDataFrame(
+        [(s, c, j, c) for s in range(4) for c in (0, 1) for j in range(dim // 4)],
+        "sub long, code int, j int, c6 long",
+    )
+    for df in (assign_lists(emb, ivf), pq_encode(emb, pq, dsub=dim // 4)):
+        a = audit(df)
+        got = (a.exchanges, a.sortmerge_joins, a.broadcast_joins)
+        assert got == (2, 0, 0), (got, a.text[:800])
 
 
 def test_cusum_plans_one_window_chain_no_loop(spark):
