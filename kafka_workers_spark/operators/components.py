@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from kafka_workers_spark import store
+from kafka_workers_spark.operators.dedup import barrier
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -150,8 +151,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_rounds: int = 50,
-    loop_shuffle_partitions: int | str | None = "auto",
-    pointer_jump: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Resolve an undirected edge list into ``(node, comp)`` where ``comp``
@@ -177,28 +176,10 @@ def connected_components(
     the edge filter and the self-loop selection), so NULL ids are silently
     absent from the output rather than returned as a (NULL, NULL) row.
 
-    ``loop_shuffle_partitions``: the rounds shuffle only the two-longs-
-    per-node label frame, so running them at the session's corpus-sized
-    ``spark.sql.shuffle.partitions`` pays pure task-scheduling overhead
-    per round once the edge list is small. ``"auto"`` (default) sizes the
-    loop's shuffles to the MEASURED edge count (~1M edges per partition,
-    never above the session setting — a 10⁹-edge graph is unaffected); an
-    int pins it; ``None`` leaves the session setting untouched. The
-    session conf is restored after the loop. The override is
-    session-GLOBAL: a query launched concurrently on the same session
-    (e.g. the pooled oracle tests) transiently runs under the reduced
-    setting — harmless to results (shuffle partition count never changes
-    them), visible only as reduced parallelism for those seconds; pass
-    ``None`` where that matters.
-
-    ``pointer_jump=False`` disables the label shortcuts AND the step
-    batching (plain one-hop propagation, one step per action — the
-    measurement baseline for scripts/stress_dedup.py's ``--cc`` rep;
-    outputs are identical either way). ``stats``, when a dict, receives
-    ``{"rounds": n}`` after convergence — n counts ACTIONS (checkpoint
-    rounds), each of which advances ``_CC_STEPS_PER_ACTION`` propagate
-    steps in the accelerated mode, so ``max_rounds`` bounds actions, not
-    wavefront hops.
+    ``stats``, when a dict, receives ``{"rounds": n}`` after
+    convergence — n counts ACTIONS (checkpoint rounds), each of which
+    advances ``_CC_STEPS_PER_ACTION`` propagate steps, so ``max_rounds``
+    bounds actions, not wavefront hops.
     """
     # sparkContext is classic-only; under Spark Connect there is no
     # checkpoint-dir query and no RDD bookkeeping — fall back to
@@ -229,13 +210,6 @@ def connected_components(
         except Exception:  # noqa: BLE001
             pass
 
-    if loop_shuffle_partitions not in (None, "auto") and int(loop_shuffle_partitions) < 1:
-        # eager, before any side effect (the hdr_build/nb_train norm) — a
-        # 0/negative value would mutate the session conf to an invalid
-        # setting and crash mid-loop
-        raise ValueError(
-            f"loop_shuffle_partitions ({loop_shuffle_partitions}) must be >= 1"
-        )
     # ONE pass over the pair source (r16, guide §2.4): the old two-branch
     # union materialized the (expensive) pair generator once per branch —
     # AQE exchange reuse only shares the deepest common exchange, so the
@@ -276,63 +250,51 @@ def connected_components(
         .unionByName(selfloops)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    spark = pairs.sparkSession
-    restore_parts: str | None = None
-    label_ids: set[int] = set()
     # EVERYTHING after the edge persist runs under the try: a failure in
     # the sizing count, the compaction, or the initial-label checkpoint
-    # must still restore the session's shuffle partitions and release the
-    # edge cache — on a shared session (the pooled oracle tests) a leaked
-    # override would downsize every later query
+    # must still release the edge cache
     try:
-        init_sum = None
-        if loop_shuffle_partitions is not None:
-            # materializes the persisted edge list, so round 1 starts
-            # warm — the count is not an extra pass. The same aggregate
-            # also reads the INITIAL label sum (r16): the self-loop rows
-            # are exactly one (u, u) per node, so Σ u over them IS the
-            # round-0 label sum — folding it here removes the separate
-            # seed-collect action the loop used to pay (one fewer driver
-            # round-trip / cluster barrier per CC call).
-            row0 = edges.agg(
-                F.count("*").alias("__n"),
-                F.sum(
-                    F.when(F.col("u") == F.col("v"), F.col("u")).cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("__s0"),
-            ).collect()[0]
-            n_edges = row0["__n"]
-            # every node carries a self-loop by construction, so a NULL
-            # Σ means an empty edge set (sum-of-none), never overflow of
-            # a non-empty one at this width with one row per node
-            init_sum = row0["__s0"] if row0["__s0"] is not None else 0
-            # sym's only consumers are the two union branches, fully
-            # served now that edges is materialized — release it here so
-            # the loop holds ONE cached edge list, not two (at 10⁹ edges
-            # the doubled footprint would evict other state for the
-            # whole iteration); the finally's unpersist stays as the
-            # failure-path cleanup
-            sym.unpersist()
-            session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            if loop_shuffle_partitions == "auto":
-                p = max(1, min(session_parts, -(-n_edges // 1_000_000)))
-            else:
-                p = int(loop_shuffle_partitions)
-            if p != session_parts:
-                restore_parts = str(session_parts)
-                spark.conf.set("spark.sql.shuffle.partitions", str(p))
-                # the cached edge list keeps the pair generator's
-                # partition count; every round's map stages would scan all
-                # of those (mostly empty) partitions, so compact it once
-                # to the loop size — one tiny job reading the
-                # already-materialized cache
-                compacted = edges.repartition(p, "v").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                compacted.count()
-                edges.unpersist()
-                edges = compacted
+        # materializes the persisted edge list, so round 1 starts warm —
+        # the count is not an extra pass. The same aggregate also reads
+        # the INITIAL label sum (r16): the self-loop rows are exactly one
+        # (u, u) per node, so Σ u over them IS the round-0 label sum — no
+        # separate seed-collect action (one fewer driver round-trip /
+        # cluster barrier per CC call).
+        row0 = edges.agg(
+            F.count("*").alias("__n"),
+            F.sum(
+                F.when(F.col("u") == F.col("v"), F.col("u")).cast("decimal(38,0)")
+            ).alias("__s0"),
+        ).collect()[0]
+        n_edges = row0["__n"]
+        # every node carries a self-loop by construction, so a NULL Σ
+        # means an empty edge set (sum-of-none), never overflow of a
+        # non-empty one at this width with one row per node
+        prev_sum = row0["__s0"] if row0["__s0"] is not None else 0
+        # sym's only consumers are the two union branches, fully served
+        # now that edges is materialized — release it here so the loop
+        # holds ONE cached edge list, not two (at 10⁹ edges the doubled
+        # footprint would evict other state for the whole iteration); the
+        # finally's unpersist stays as the failure-path cleanup
+        sym.unpersist()
+        # ~1M edges per partition, never above the session setting (a
+        # 10⁹-edge graph is unaffected). The cached edge list keeps the
+        # pair generator's partition count; every round's map stages
+        # would scan all of those (mostly empty) partitions, so compact
+        # it once — one tiny job reading the already-materialized cache.
+        # The rounds' own reducer counts are left to AQE's partition
+        # coalescing; the session setting is only read, never written
+        # (a write is session-GLOBAL and would downsize every query
+        # planned concurrently on the same session).
+        session_parts = int(
+            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+        p = max(1, min(session_parts, -(-n_edges // 1_000_000)))
+        if p < session_parts:
+            compacted = edges.repartition(p, "v").persist(StorageLevel.MEMORY_AND_DISK)
+            compacted.count()
+            edges.unpersist()
+            edges = compacted
         # Initial labels: the self-loop rows ARE the node set, read off
         # the cached edges (no extra distinct). The checkpoint is LAZY:
         # its materializing action is the same aggregate that reads the
@@ -369,16 +331,13 @@ def connected_components(
             .select(F.col("u").alias("node"))
             .withColumn("comp", F.col("node"))
         )
+        # round 0's sum came from the sizing aggregate, so its checkpoint
+        # stays LAZY — round 1's convergence aggregate materializes it
         label_ids = _pinned_ids(labels)
-        # seeded by the sizing aggregate when it ran (one action saved);
-        # the explicit collect remains for loop_shuffle_partitions=None,
-        # where no sizing pass exists. The round-0 checkpoint stays LAZY
-        # either way — round 1's convergence aggregate materializes it.
-        prev_sum = init_sum if init_sum is not None else _label_sum(labels)
         # One PROPAGATE step: min label over N(u) ∪ {u} (self-loop
         # included in the edge set) — one equi-join + one hash aggregate.
         #
-        # pointer_jump=True (r16 rewrite): the step's labels ride the
+        # Label shortcuts (r16 rewrite): the step's labels ride the
         # edge set as label-derived SHORTCUT edges instead of a second
         # self-join. (u → comp(u)) delivers label(comp(u)) to u — the
         # old pointer jump comp ← comp[comp], now INSIDE the same
@@ -401,25 +360,23 @@ def connected_components(
         # checksums and round count with/without the branch
         # (scripts/probe_r16.py cc).
         def _step(lab_df: DataFrame) -> DataFrame:
-            if pointer_jump:
-                src_edges = edges.unionByName(
-                    lab_df.select(F.col("node").alias("u"), F.col("comp").alias("v"))
-                )
-            else:
-                src_edges = edges
+            shortcuts = lab_df.select(
+                F.col("node").alias("u"), F.col("comp").alias("v")
+            )
             return (
-                src_edges.alias("E")
+                edges.unionByName(shortcuts)
+                .alias("E")
                 .join(lab_df.alias("L"), F.col("E.v") == F.col("L.node"))
                 .groupBy(F.col("E.u").alias("node"))
                 .agg(F.min(F.col("L.comp")).alias("comp"))
             )
 
-        # Two steps per ACTION in the accelerated mode (r16, guide §1.2
-        # step 1): each round's checkpoint + convergence collect is a
-        # full driver round-trip locally and a full cluster barrier at
-        # scale, and it is the ROUND count, not the per-step work, that
-        # floors this loop (measured ~0.5 s/round at sf0.1 regardless of
-        # data size). Batching two propagate steps into one lazy plan
+        # Two steps per ACTION (r16, guide §1.2 step 1): each round's
+        # checkpoint + convergence collect is a full driver round-trip
+        # locally and a full cluster barrier at scale, and it is the
+        # ROUND count, not the per-step work, that floors this loop
+        # (measured ~0.5 s/round at sf0.1 regardless of data size).
+        # Batching two propagate steps into one lazy plan
         # halves the action count; the intermediate step is referenced
         # twice by the second (the shortcut branch + the join), but
         # those references canonicalize to ONE exchange at runtime
@@ -429,11 +386,10 @@ def connected_components(
         # block changed anything ⇔ converged; a converged labeling is a
         # fixed point of _step, so the extra step past convergence is
         # the identity.
-        steps_per_action = _CC_STEPS_PER_ACTION if pointer_jump else 1
         for rounds in range(1, max_rounds + 1):
             propagated = _step(labels)
             inter_ids: set[int] = set()
-            for _ in range(steps_per_action - 1):
+            for _ in range(_CC_STEPS_PER_ACTION - 1):
                 # the batched step's downstream references share one
                 # materialization inside the round's single job; it is
                 # round scratch, freed right after the action, so it is
@@ -458,13 +414,11 @@ def connected_components(
             prev_sum = cur_sum
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} actions "
-            f"({max_rounds * steps_per_action} propagate steps, "
-            f"{steps_per_action} per action); the component diameter exceeds "
+            f"({max_rounds * _CC_STEPS_PER_ACTION} propagate steps, "
+            f"{_CC_STEPS_PER_ACTION} per action); the component diameter exceeds "
             "that — raise max_rounds"
         )
     finally:
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
         edges.unpersist()
         sym.unpersist()
 
@@ -476,23 +430,14 @@ def dedup_groups(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_rounds: int = 50,
-    loop_shuffle_partitions: int | str | None = "auto",
-    pointer_jump: bool = True,
 ) -> DataFrame:
     """Attach ``group_id`` (component minimum — the canonical survivor's
     id) and ``is_canonical`` to every document. Documents in no pair are
     their own singleton group. The exact-resolution alternative to
     ``pipeline.near_dedup_lsh``'s greedy rule: a doc bridging two clusters
-    merges them instead of deleting both tails. The loop options pass
-    through to :func:`connected_components` unchanged."""
-    comp = connected_components(
-        pairs,
-        src=src,
-        dst=dst,
-        max_rounds=max_rounds,
-        loop_shuffle_partitions=loop_shuffle_partitions,
-        pointer_jump=pointer_jump,
-    )
+    merges them instead of deleting both tails. ``max_rounds`` passes
+    through to :func:`connected_components`."""
+    comp = connected_components(pairs, src=src, dst=dst, max_rounds=max_rounds)
     return (
         docs.join(comp, docs[id_col] == comp["node"], "left")
         .select(
@@ -611,7 +556,6 @@ def pagerank(
             .alias("__w"),
         )
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # node set in ONE pass over the cached edges (explode both endpoints
     # instead of a two-branch union — one cache scan, one stage)
     nodes = e.select(
@@ -643,7 +587,7 @@ def pagerank(
                 .alias("__base9"),
             )
         )
-    nodes = nodes.repartition(n_parts, "node").persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = barrier(nodes, "node").persist(StorageLevel.MEMORY_AND_DISK)
     if weight_col is None:
         deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
         contrib_expr = f"(CAST({d9} AS BIGINT) * r9 DIV {s}) DIV __deg"
@@ -664,11 +608,7 @@ def pagerank(
     # re-shuffled EVERY round (r16 before-plan: an Exchange over both
     # InMemoryTableScans per round). edged clusters by __src (the
     # contribution join key), nodes by node (the rank re-attach key).
-    edged = (
-        e.join(deg, "__src")
-        .repartition(n_parts, "__src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edged = barrier(e.join(deg, "__src"), "__src").persist(StorageLevel.MEMORY_AND_DISK)
     ranks = nodes.select("node", F.col("__r0").alias("r9"))
     for _ in range(iters):
         contribs = (
@@ -904,11 +844,10 @@ def label_propagation(
                 f"is {edges.schema[c].dataType.simpleString()} — map ids to "
                 "longs (e.g. xxhash64) before calling"
             )
-    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    adj = (
-        _symmetrize(edges, src, dst)  # one pass; also aligns the rounds:
-        .repartition(n_parts, "__s")  # each round joins labels on __s
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # one-pass symmetrize, partition-aligned with the rounds' join key
+    # (each round joins labels on __s)
+    adj = barrier(_symmetrize(edges, src, dst), "__s").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     labels = adj.select(F.col("__s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -1139,11 +1078,8 @@ def bfs_hops(
     # explicit repartition, so without the pin the FULL adjacency
     # re-shuffled in every sort-merge round (r16 before-plan: one
     # Exchange over the InMemoryTableScan per round).
-    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    adj = (
-        _symmetrize(edges, src, dst)
-        .repartition(n_parts, "__s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    adj = barrier(_symmetrize(edges, src, dst), "__s").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     dist = (
         seeds.select(F.col(seed_col).alias("node"))
@@ -1231,11 +1167,9 @@ def shortest_paths(
         .select("__e.__s", "__e.__d", "__e.__w")
         .filter(F.col("__s") != F.col("__d"))
     )
-    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # partition-align the per-round joins on __s
     adj = (
-        und.groupBy("__s", "__d")
-        .agg(F.min("__w").alias("__w"))
-        .repartition(n_parts, "__s")  # partition-align the per-round joins
+        barrier(und.groupBy("__s", "__d").agg(F.min("__w").alias("__w")), "__s")
         .select(
             "__s",
             "__d",
@@ -1340,7 +1274,6 @@ def components_merge(
     node_col: str = "node",
     comp_col: str = "comp",
     max_rounds: int = 50,
-    loop_shuffle_partitions: int | str | None = "auto",
 ) -> DataFrame:
     """Incremental closure on append (the ann_append_index analog for
     components): fold a batch of NEW candidate pairs into a stored
@@ -1354,14 +1287,10 @@ def components_merge(
     connected through its minimum — so one :func:`connected_components`
     run over |nodes| + |new pairs| edges (converging in ~2-3 rounds on
     the contracted topology) replaces the full pair regeneration.
-    Returns the same (node, comp) shape, ready for
-    :func:`components_write` with the new snapshot's fingerprint."""
+    ``src``/``dst``/``max_rounds`` pass through to
+    :func:`connected_components`. Returns the same (node, comp) shape,
+    ready for :func:`components_write` with the new snapshot's
+    fingerprint."""
     star = stored.select(F.col(node_col).alias(src), F.col(comp_col).alias(dst))
     edges = star.unionByName(new_pairs.select(src, dst))
-    return connected_components(
-        edges,
-        src=src,
-        dst=dst,
-        max_rounds=max_rounds,
-        loop_shuffle_partitions=loop_shuffle_partitions,
-    )
+    return connected_components(edges, src=src, dst=dst, max_rounds=max_rounds)

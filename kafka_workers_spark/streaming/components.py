@@ -46,12 +46,13 @@ def components_fold(
     dst: str = "doc_b",
     lineage: str | None = None,
     max_rounds: int = 50,
-    loop_shuffle_partitions: int | str | None = "auto",
 ) -> Callable[[DataFrame, int], None]:
     """The per-batch fold, exposed so tests and backfills can drive it
     directly (the scd2_fold shape): first batch closes over its own
     pairs, every later batch star-merges into the stored labeling and
     republishes the full (node, comp) mapping with one atomic swap.
+    ``src``/``dst``/``max_rounds`` pass through to
+    :func:`connected_components`.
 
     The published store is the components_write layout (``mapping`` +
     version-checked ``meta``) plus the store.py batch marker
@@ -65,12 +66,7 @@ def components_fold(
     billions, the bucketed-store pattern (streaming/maintenance.py)
     applies verbatim since the mapping is key-hashed like any table."""
 
-    loop = dict(
-        src=src,
-        dst=dst,
-        max_rounds=max_rounds,
-        loop_shuffle_partitions=loop_shuffle_partitions,
-    )
+    loop = dict(src=src, dst=dst, max_rounds=max_rounds)
 
     def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
         pairs = batch.select(src, dst)

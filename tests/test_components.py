@@ -218,22 +218,40 @@ def test_edit_distance_pairs_rejects_oversized_k(spark):
         edit_distance_pairs(df, k=17)
 
 
-def test_components_pointer_jump_modes_agree_and_report_rounds(spark):
-    """pointer_jump only accelerates convergence: both modes must produce
-    the identical labeling, the jump must converge in no MORE rounds than
-    plain propagation on a chain (the wavefront-depth shape it targets),
-    and the stats hook reports the round count."""
+def test_components_chain_labels_and_rounds(spark):
+    """A 12-node chain (the wavefront-depth shape the label shortcuts
+    target) resolves to one component labelled 1, and the stats hook
+    reports the action count: 4 rounds of two propagate steps each."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
     )
-    out, rounds = {}, {}
-    for jump in (True, False):
-        stats = {}
-        comp = connected_components(edges, pointer_jump=jump, stats=stats)
-        out[jump] = {(r.node, r.comp) for r in comp.collect()}
-        rounds[jump] = stats["rounds"]
-    assert out[True] == out[False] == {(i, 1) for i in range(1, 13)}
-    assert rounds[True] <= rounds[False]
+    stats = {}
+    comp = connected_components(edges, stats=stats)
+    assert {(r.node, r.comp) for r in comp.collect()} == {(i, 1) for i in range(1, 13)}
+    assert stats["rounds"] == 4
+
+
+def test_components_never_writes_session_conf(spark, monkeypatch):
+    """The loop sizes its edge cache from the measured edge count but
+    never rewrites the session-global shuffle partition setting: a
+    tiny graph sizes to one partition against the session's 8, and a
+    query planned concurrently on the same session must not see that."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    written = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        written.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    got = {(r.node, r.comp) for r in connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+    assert "spark.sql.shuffle.partitions" not in written
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_pagerank_matches_python_integer_reference(spark):
