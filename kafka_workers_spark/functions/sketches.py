@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_workers_spark.cache import hold, pin, release
+
 #: log2 of HLL register count: 4KB sketches, ~1.6% relative standard error
 DEFAULT_LG_K = 12
 
@@ -150,13 +152,12 @@ def frequent_items(
         )
         yield out
 
-    from pyspark.storagelevel import StorageLevel
-
     # two consumers (bound aggregate + count merge) — pin the tiny
     # summaries (<= partitions x capacity rows) so the data scan runs
-    # once, with lineage retained (ARCHITECTURE.md §4 rule 3)
-    summaries = src.mapInPandas(mg, "item string, cnt long, dec long").persist(
-        StorageLevel.MEMORY_AND_DISK
+    # once, with lineage retained (ARCHITECTURE.md §4 rule 2a)
+    summaries = pin(
+        src.mapInPandas(mg, "item string, cnt long, dec long"),
+        "sketches.frequent_items.summaries",
     )
     # the decrement bound is global: broadcast the one-row aggregate back
     bound = summaries.agg(F.sum("dec").alias("__bound"))
@@ -318,13 +319,13 @@ def bloom_probe(
     The sketch's word array joins in under the reserved name
     ``__bloom_words`` (and is dropped again), so a probe frame that
     itself has a ``words`` column keeps it untouched. Pinning: this
-    call persists the ``bloom`` argument (see :func:`_bloom_params`) —
-    the pin lives on the caller's handle, so a long-lived driver
-    probing many DISTINCT sketch frames should ``sketch.unpersist()``
-    once the consuming plan has materialized.
+    call holds the ``bloom`` argument (see :func:`_scheme`) — the hold
+    lives on the caller's handle, so a long-lived driver probing many
+    DISTINCT sketch frames should ``cache.release(sketch)`` once the
+    consuming plan has materialized.
     """
     group_cols = list(group_cols or [])
-    n_bits, n_hashes, bloom = _bloom_params(bloom, "bloom_probe")
+    (n_bits, n_hashes), bloom = _scheme(bloom, _BLOOM_SCHEME, "bloom_probe", _BLOOM_TAIL)
     side = bloom.select(*group_cols, F.col("words").alias("__bloom_words"))
     if group_cols:
         # same silent-multiplication trap as the ungrouped branch, one
@@ -344,7 +345,7 @@ def bloom_probe(
         # stored multi-row sketch table (e.g. per-benchmark rows not yet
         # merged) would silently multiply the probe N-fold through the
         # cross join and inflate every downstream count
-        n_rows = bloom.count()  # cheap: pinned by _bloom_params
+        n_rows = bloom.count()  # cheap: held by _scheme
         if n_rows != 1:
             raise ValueError(
                 f"bloom_probe: ungrouped probe needs exactly 1 sketch row, "
@@ -371,7 +372,7 @@ def bloom_merge(blooms: DataFrame, group_cols: list[str] | None = None) -> DataF
     columns, exactly like :func:`bloom_probe`).
     """
     group_cols = list(group_cols or [])
-    n_bits, _, blooms = _bloom_params(blooms, "bloom_merge")
+    (n_bits, _), blooms = _scheme(blooms, _BLOOM_SCHEME, "bloom_merge", _BLOOM_TAIL)
     n_words = n_bits // 64
     zeros = F.array_repeat(F.lit(0).cast("bigint"), n_words)
     return (
@@ -388,37 +389,41 @@ def bloom_merge(blooms: DataFrame, group_cols: list[str] | None = None) -> DataF
     )
 
 
-def _bloom_params(bloom: DataFrame, caller: str) -> tuple[int, int, DataFrame]:
-    """The sketch table's single (n_bits, n_hashes) scheme; raises on a
+_BLOOM_SCHEME = ("n_bits", "n_hashes")
+_BLOOM_TAIL = "parameter pairs; rebuild or merge with one scheme"
+_CMS_SCHEME = ("width", "depth")
+
+
+def _scheme(
+    sketch: DataFrame, cols: tuple[str, str], caller: str, tail: str
+) -> tuple[tuple, DataFrame]:
+    """The sketch table's single scheme row over ``cols``; raises on a
     mix — a probe or merge under the wrong geometry returns garbage
     silently, so this is checked eagerly against the tiny param columns.
-    The scheme read is an action, so the sketch is pinned with a
-    lineage-preserving persist FIRST and the pinned handle returned —
+    The scheme read is an action, so the sketch is held with a
+    lineage-preserving persist FIRST and the held handle returned —
     a sketch built inline (not yet stored) would otherwise be computed
     twice: once for the check, again inside the probe/merge plan.
 
-    Pin ownership: ``persist`` mutates the CALLER's DataFrame handle
-    (Spark's CacheManager dedupes same-plan re-pins, so repeated probes
+    Hold ownership: the persist lands on the CALLER's DataFrame handle
+    (Spark's CacheManager dedupes same-plan re-holds, so repeated probes
     of one sketch do not accumulate), which means the caller can — and
     in a long-lived driver probing many distinct sketch frames, should —
-    ``sketch.unpersist()`` once the consuming plan has materialized.
-    A failed scheme check releases any pin this call created."""
-    from pyspark.storagelevel import StorageLevel
-
-    pinned_here = not bloom.is_cached
-    bloom = bloom.persist(StorageLevel.MEMORY_AND_DISK)
+    ``cache.release(sketch)`` once the consuming plan has materialized.
+    A failed scheme check releases any hold this call created."""
+    held_here = not sketch.is_cached
+    sketch = hold(sketch)
     try:
-        params = bloom.select("n_bits", "n_hashes").distinct().collect()
+        params = sketch.select(*cols).distinct().collect()
         if len(params) != 1:
             raise ValueError(
-                f"{caller}: sketch has {len(params)} distinct (n_bits, n_hashes) "
-                "parameter pairs; rebuild or merge with one scheme"
+                f"{caller}: sketch has {len(params)} distinct ({', '.join(cols)}) {tail}"
             )
     except Exception:
-        if pinned_here:
-            bloom.unpersist()
+        if held_here:
+            release(sketch)
         raise
-    return params[0].n_bits, params[0].n_hashes, bloom
+    return params[0], sketch
 
 
 def skew_report(
@@ -553,26 +558,12 @@ def cms_probe(
     broadcast-join the sketch row(s) (on ``group_cols`` when the sketch
     is per-group, else a single-row broadcast) and evaluate
     :func:`cms_estimate` row-locally. The scheme is read from the tiny
-    param columns via the same eager pinned check as the Bloom family
-    (_bloom_params' contract — mixed schemes would return garbage
-    silently)."""
-    from pyspark.storagelevel import StorageLevel
-
+    param columns via the same eager held check as the Bloom family
+    (:func:`_scheme` — mixed schemes would return garbage silently)."""
     group_cols = list(group_cols or [])
-    pinned_here = not cms.is_cached
-    cms = cms.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        params = cms.select("width", "depth").distinct().collect()
-        if len(params) != 1:
-            raise ValueError(
-                f"cms_probe: sketch has {len(params)} distinct (width, depth) "
-                "schemes; rebuild or merge with one scheme"
-            )
-    except Exception:
-        if pinned_here:
-            cms.unpersist()
-        raise
-    width, depth = params[0].width, params[0].depth
+    (width, depth), cms = _scheme(
+        cms, _CMS_SCHEME, "cms_probe", "schemes; rebuild or merge with one scheme"
+    )
     # the sketch's array joins in under a RESERVED name so a probe frame
     # that already carries a `counts` column survives untouched (the
     # bloom_probe `__bloom_words` lesson, ADVICE r04)
@@ -595,23 +586,10 @@ def cms_merge(cms: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
     precisely the sketch a single pass over the union would build
     (unlike HLL's representation-dependent bytes). Scheme mismatch
     raises via the same eager check as :func:`cms_probe`."""
-    from pyspark.storagelevel import StorageLevel
-
     group_cols = list(group_cols or [])
-    pinned_here = not cms.is_cached
-    cms = cms.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        params = cms.select("width", "depth").distinct().collect()
-        if len(params) != 1:
-            raise ValueError(
-                f"cms_merge: sketch has {len(params)} distinct (width, depth) "
-                "schemes; merge within one scheme"
-            )
-    except Exception:
-        if pinned_here:
-            cms.unpersist()
-        raise
-    width, depth = params[0].width, params[0].depth
+    (width, depth), cms = _scheme(
+        cms, _CMS_SCHEME, "cms_merge", "schemes; merge within one scheme"
+    )
     return (
         cms.groupBy(*group_cols)
         .agg(

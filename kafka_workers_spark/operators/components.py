@@ -75,9 +75,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from kafka_workers_spark import store
+from kafka_workers_spark.cache import hold, pin, release
 from kafka_workers_spark.operators.dedup import barrier
 
 
@@ -109,28 +109,6 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .filter(F.col("__s") != F.col("__d"))
         .distinct()
     )
-
-
-def checkpointed_rdd_ids(df: DataFrame) -> set[int]:
-    """The id of the internal RDD a just-returned ``checkpoint()`` /
-    ``localCheckpoint()`` Dataset persisted, read off its LogicalRDD.
-
-    This is the ONLY safe way for an iterative loop to free its own
-    superseded round pins on a shared session. Never diff the session-
-    global ``getPersistentRDDs()`` set around the pin instead: a
-    concurrent thread's persist/localCheckpoint (e.g. the pooled plan
-    audit building bpe_train_plan's lazy checkpoint chain) can land
-    between the two snapshots, get attributed to this loop, and the
-    freeing ``unpersist`` then resets the VICTIM's storage level to
-    NONE — its later materialization dies with "Storage level
-    StorageLevel(1 replicas) is not appropriate for local
-    checkpointing" (race found live in the round-15 sharded gate).
-    Returns an empty set under Spark Connect (no JVM handle) — callers
-    fall back to GC-driven cleanup."""
-    try:
-        return {int(df._jdf.queryExecution().analyzed().rdd().id())}  # noqa: SLF001
-    except Exception:  # noqa: BLE001 — best-effort bookkeeping only
-        return set()
 
 
 #: Propagate steps batched per CC action, A/B'd in r16 (interleaved
@@ -194,22 +172,6 @@ def connected_components(
         # never costs a separate job.
         return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
 
-    _pinned_ids = checkpointed_rdd_ids  # see module-level docstring: own-pin
-    # tracking must be per-DataFrame, never a global getPersistentRDDs diff
-
-    def _free(rdd_ids: set[int]) -> None:
-        # superseded local checkpoints otherwise stay pinned in executor
-        # block managers until GC notices the dropped python reference;
-        # at 10⁹ nodes each round is ~16 bytes × n, so free them promptly
-        try:
-            jmap = sc._jsc.getPersistentRDDs()  # noqa: SLF001
-            for rid in rdd_ids:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
-
     # ONE pass over the pair source (r16, guide §2.4): the old two-branch
     # union materialized the (expensive) pair generator once per branch —
     # AQE exchange reuse only shares the deepest common exchange, so the
@@ -219,7 +181,7 @@ def connected_components(
     # keep the established semantics: they never survive to the edge set
     # or the initial labels (u == v and u != v are both NULL-false), so a
     # NULL id is silently absent from the output either way.
-    sym = (
+    sym = hold(
         pairs.select(
             F.explode(
                 F.array(
@@ -230,7 +192,6 @@ def connected_components(
         )
         .select("__e.u", "__e.v")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # Self-loops join the edge set (round-15 optimization): min over
     # N(u) ∪ {u} is then ONE hash aggregate per round, removing the
@@ -245,11 +206,7 @@ def connected_components(
     # still includes self-pair-only nodes: selfloops read sym's
     # unfiltered endpoints).
     selfloops = sym.select("u").distinct().select("u", F.col("u").alias("v"))
-    edges = (
-        sym.filter(F.col("u") != F.col("v"))
-        .unionByName(selfloops)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges = hold(sym.filter(F.col("u") != F.col("v")).unionByName(selfloops))
     # EVERYTHING after the edge persist runs under the try: a failure in
     # the sizing count, the compaction, or the initial-label checkpoint
     # must still release the edge cache
@@ -275,8 +232,8 @@ def connected_components(
         # now that edges is materialized — release it here so the loop
         # holds ONE cached edge list, not two (at 10⁹ edges the doubled
         # footprint would evict other state for the whole iteration); the
-        # finally's unpersist stays as the failure-path cleanup
-        sym.unpersist()
+        # finally's release stays as the failure-path cleanup
+        release(sym)
         # ~1M edges per partition, never above the session setting (a
         # 10⁹-edge graph is unaffected). The cached edge list keeps the
         # pair generator's partition count; every round's map stages
@@ -291,9 +248,9 @@ def connected_components(
         )
         p = max(1, min(session_parts, -(-n_edges // 1_000_000)))
         if p < session_parts:
-            compacted = edges.repartition(p, "v").persist(StorageLevel.MEMORY_AND_DISK)
+            compacted = hold(edges.repartition(p, "v"))
             compacted.count()
-            edges.unpersist()
+            release(edges)
             edges = compacted
         # Initial labels: the self-loop rows ARE the node set, read off
         # the cached edges (no extra distinct). The checkpoint is LAZY:
@@ -333,7 +290,6 @@ def connected_components(
         )
         # round 0's sum came from the sizing aggregate, so its checkpoint
         # stays LAZY — round 1's convergence aggregate materializes it
-        label_ids = _pinned_ids(labels)
         # One PROPAGATE step: min label over N(u) ∪ {u} (self-loop
         # included in the edge set) — one equi-join + one hash aggregate.
         #
@@ -358,7 +314,7 @@ def connected_components(
         # any min; the target node t is already in the aggregate's key
         # set through its own self-loop edge. Verified: identical label
         # checksums and round count with/without the branch
-        # (scripts/probe_r16.py cc).
+        # (scripts/probe.py cc).
         def _step(lab_df: DataFrame) -> DataFrame:
             shortcuts = lab_df.select(
                 F.col("node").alias("u"), F.col("comp").alias("v")
@@ -388,7 +344,7 @@ def connected_components(
         # the identity.
         for rounds in range(1, max_rounds + 1):
             propagated = _step(labels)
-            inter_ids: set[int] = set()
+            scratch = []
             for _ in range(_CC_STEPS_PER_ACTION - 1):
                 # the batched step's downstream references share one
                 # materialization inside the round's single job; it is
@@ -396,16 +352,17 @@ def connected_components(
                 # always a LOCAL checkpoint — a reliable one would grow
                 # the checkpoint dir by one RDD per round
                 propagated = propagated.localCheckpoint(eager=False)
-                inter_ids |= _pinned_ids(propagated)
+                scratch.append(propagated)
                 propagated = _step(propagated)
             new_labels = _pin(propagated)
-            new_ids = _pinned_ids(new_labels)
             # ONE action per round: materializes the lazy checkpoint(s)
             # AND returns the convergence sum
             cur_sum = _label_sum(new_labels)
-            _free(label_ids)  # the superseded round; sum-check is done with it
-            _free(inter_ids)  # the batched step's scratch pin
-            label_ids = new_ids
+            # the superseded round (its sum-check is done) and the batched
+            # step's scratch, each freed by its own checkpoint's RDD id —
+            # never a diff of the session-global persistent-RDD set, which
+            # would free a concurrent thread's lazy checkpoint
+            release(labels, *scratch)
             labels = new_labels
             if cur_sum == prev_sum:
                 if stats is not None:
@@ -419,8 +376,7 @@ def connected_components(
             "that — raise max_rounds"
         )
     finally:
-        edges.unpersist()
-        sym.unpersist()
+        release(edges, sym)
 
 
 def dedup_groups(
@@ -555,7 +511,7 @@ def pagerank(
             )
             .alias("__w"),
         )
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    e = pin(e, "components.pagerank.edges")
     # node set in ONE pass over the cached edges (explode both endpoints
     # instead of a two-branch union — one cache scan, one stage)
     nodes = e.select(
@@ -587,7 +543,7 @@ def pagerank(
                 .alias("__base9"),
             )
         )
-    nodes = barrier(nodes, "node").persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = pin(barrier(nodes, "node"), "components.pagerank.nodes")
     if weight_col is None:
         deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
         contrib_expr = f"(CAST({d9} AS BIGINT) * r9 DIV {s}) DIV __deg"
@@ -608,7 +564,7 @@ def pagerank(
     # re-shuffled EVERY round (r16 before-plan: an Exchange over both
     # InMemoryTableScans per round). edged clusters by __src (the
     # contribution join key), nodes by node (the rank re-attach key).
-    edged = barrier(e.join(deg, "__src"), "__src").persist(StorageLevel.MEMORY_AND_DISK)
+    edged = pin(barrier(e.join(deg, "__src"), "__src"), "components.pagerank.edged")
     ranks = nodes.select("node", F.col("__r0").alias("r9"))
     for _ in range(iters):
         contribs = (
@@ -666,21 +622,20 @@ def hits(
         raise ValueError(f"rounds ({rounds}) must be >= 1")
     s = PAGERANK_SCALE
     e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")).distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    e = pin(e, "components.hits.edges")
     # one cache pass for the node set (the pagerank explode shape)
-    nodes = (
-        e.select(F.explode(F.array("__src", "__dst")).alias("node"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = pin(
+        e.select(F.explode(F.array("__src", "__dst")).alias("node")).distinct(),
+        "components.hits.nodes",
     )
 
-    def _normalize(frame: DataFrame, col: str) -> DataFrame:
+    def _normalize(frame: DataFrame, col: str, r: int) -> DataFrame:
         # the zero-filled frame feeds BOTH the max and the rescale —
         # persist it so the two consumers share one materialization;
         # without the pin each half-step doubles the recompute tree
         # (2^4 copies of the edge joins at 2 rounds — measured ~22 s
         # at sf0.1 vs ~3 s pinned)
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        frame = pin(frame, f"components.hits.{col}.{r}")
         m = frame.groupBy().agg(F.max(col).alias("__m"))
         return frame.crossJoin(F.broadcast(m)).select(
             "node",
@@ -692,7 +647,7 @@ def hits(
 
     hub = nodes.select("node", F.lit(s).cast("bigint").alias("h9"))
     auth = None
-    for _ in range(rounds):
+    for r in range(rounds):
         a_raw = (
             e.join(hub, e["__src"] == hub["node"])
             .groupBy(F.col("__dst").alias("node"))
@@ -703,6 +658,7 @@ def hits(
                 "node", F.coalesce("a9", F.lit(0)).alias("a9")
             ),
             "a9",
+            r,
         )
         h_raw = (
             e.join(auth, e["__dst"] == auth["node"])
@@ -714,6 +670,7 @@ def hits(
                 "node", F.coalesce("h9", F.lit(0)).alias("h9")
             ),
             "h9",
+            r,
         )
     return (
         nodes.join(hub, "node", "left")
@@ -782,7 +739,7 @@ def triangle_counts(
         )
     else:
         oriented = und.select(F.col("u").alias("lo"), F.col("v").alias("hi"))
-    oriented = oriented.persist(StorageLevel.MEMORY_AND_DISK)
+    oriented = pin(oriented, "components.triangle_counts.oriented")
     wedges = (
         oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
         .join(
@@ -846,8 +803,8 @@ def label_propagation(
             )
     # one-pass symmetrize, partition-aligned with the rounds' join key
     # (each round joins labels on __s)
-    adj = barrier(_symmetrize(edges, src, dst), "__s").persist(
-        StorageLevel.MEMORY_AND_DISK
+    adj = pin(
+        barrier(_symmetrize(edges, src, dst), "__s"), "components.label_propagation.adj"
     )
     labels = adj.select(F.col("__s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -915,7 +872,7 @@ def kcore(
         raise ValueError(f"iters ({iters}) must be >= 1")
     from pyspark.sql import Window as W
 
-    adj = _symmetrize(edges, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
+    adj = pin(_symmetrize(edges, src, dst), "components.kcore.adj")
     for _ in range(iters):
         adj = (
             adj.withColumn("__ds", F.count("*").over(W.partitionBy("__s")))
@@ -1078,26 +1035,24 @@ def bfs_hops(
     # explicit repartition, so without the pin the FULL adjacency
     # re-shuffled in every sort-merge round (r16 before-plan: one
     # Exchange over the InMemoryTableScan per round).
-    adj = barrier(_symmetrize(edges, src, dst), "__s").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    dist = (
+    adj = pin(barrier(_symmetrize(edges, src, dst), "__s"), "components.bfs_hops.adj")
+    dist = pin(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .select("node", F.lit(0).cast("bigint").alias("hops"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("node", F.lit(0).cast("bigint").alias("hops")),
+        "components.bfs_hops.dist.0",
     )
     frontier = dist
     for h in range(1, max_hops + 1):
-        new = (
+        new = pin(
             adj.join(frontier, adj["__s"] == frontier["node"])
             .select(F.col("__d").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .select("node", F.lit(h).cast("bigint").alias("hops"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .select("node", F.lit(h).cast("bigint").alias("hops")),
+            f"components.bfs_hops.frontier.{h}",
         )
-        dist = dist.unionByName(new).persist(StorageLevel.MEMORY_AND_DISK)
+        dist = pin(dist.unionByName(new), f"components.bfs_hops.dist.{h}")
         frontier = new
     return dist
 
@@ -1168,7 +1123,7 @@ def shortest_paths(
         .filter(F.col("__s") != F.col("__d"))
     )
     # partition-align the per-round joins on __s
-    adj = (
+    adj = pin(
         barrier(und.groupBy("__s", "__d").agg(F.min("__w").alias("__w")), "__s")
         .select(
             "__s",
@@ -1180,16 +1135,16 @@ def shortest_paths(
                 ).cast("bigint")
             )
             .alias("__w"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        "components.shortest_paths.adj",
     )
-    dist = (
+    dist = pin(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .select("node", F.lit(0).cast("bigint").alias("cost"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("node", F.lit(0).cast("bigint").alias("cost")),
+        "components.shortest_paths.dist.0",
     )
-    for _ in range(rounds):
+    for r in range(1, rounds + 1):
         offers = (
             adj.join(dist, adj["__s"] == dist["node"])
             .select(
@@ -1197,11 +1152,9 @@ def shortest_paths(
                 (F.col("cost") + F.col("__w")).alias("cost"),
             )
         )
-        dist = (
-            dist.unionByName(offers)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        dist = pin(
+            dist.unionByName(offers).groupBy("node").agg(F.min("cost").alias("cost")),
+            f"components.shortest_paths.dist.{r}",
         )
     return dist
 

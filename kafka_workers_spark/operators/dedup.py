@@ -65,56 +65,6 @@ def barrier(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 
-_PIN_LOCK = __import__("threading").Lock()
-#: (session id, site) -> the site's newest pinned generations, oldest first
-_PIN_GENERATIONS: dict[tuple[int, str], list[DataFrame]] = {}
-
-
-def generation_pin(df: DataFrame, site: str, keep: int = 1) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) as the newest generation of an
-    operator-level cache site, releasing generations beyond the newest
-    ``keep`` pinned by the same site on the same session (ADVICE r15
-    #1/#2, VERDICT r15 "What's wrong" #1: the round-15 operator pins
-    back LAZY returned frames, so the operator could never unpersist its
-    own cache — a long-lived session issuing many index builds/searches
-    accumulated marked frames until LRU/disk pressure, and disk blocks
-    are never auto-evicted). With this owner, repeated builds in one
-    session hold at most ``keep`` pinned generations per operator site.
-    ``keep`` > 1 is for operators legitimately called more than once per
-    logical build (bm25_index builds per-half shard indexes that one
-    merged query consumes together).
-
-    Safety properties:
-    - ``persist`` (never localCheckpoint) keeps lineage, so unpersisting
-      a previous generation under a concurrent in-flight consumer
-      degrades to recompute, never to failure.
-    - Only frames THIS site pinned are ever released (the round-15
-      pin-bookkeeping race lesson: never free cache entries you cannot
-      prove you own).
-    - If a released frame is plan-identical to a kept one
-      (``sameSemantics`` — e.g. the same build re-run on one session),
-      the CacheManager already deduplicated them to one entry, and
-      unpersisting the old handle would kill the kept pin too — it is
-      skipped (the cache still holds exactly one copy).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-    key = (id(df.sparkSession), site)
-    with _PIN_LOCK:
-        gens = _PIN_GENERATIONS.setdefault(key, [])
-        gens.append(pinned)
-        excess, kept = gens[:-keep], gens[-keep:]
-        _PIN_GENERATIONS[key] = kept
-    for prev in excess:
-        try:
-            if not any(prev.sameSemantics(k) for k in kept):
-                prev.unpersist(False)
-        except Exception:  # noqa: BLE001 — a dead session's frame etc.
-            pass
-    return pinned
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Conditional load-balance for single-scan queries (no expression reuse).
 

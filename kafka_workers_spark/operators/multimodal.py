@@ -435,11 +435,11 @@ def media_near_dup(
     # DECODED signatures on both sides rather than re-running the cell
     # tree per side (the frame_dedup_pairs rationale: runtime exchange
     # reuse only shares the pre-decode hex barrier; digests-only cache,
-    # (id, phash) = 16 bytes per row); generation_pin (r16, ADVICE r15
+    # (id, phash) = 16 bytes per row); cache.pin (r16, ADVICE r15
     # #2): repeated calls on one session release the superseded pins
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
-    sigs = generation_pin(sigs, "multimodal.media_near_dup.sigs")
+    sigs = pin(sigs, "multimodal.media_near_dup.sigs")
     bands = sigs.select(
         id_col, "phash", F.explode(simhash_bands(F.col("phash"))).alias("bk")
     ).select(
@@ -615,9 +615,9 @@ def frame_dedup_pairs(
     # (id, frame_no, nf, ph), 32 bytes per sampled frame, payloads
     # never — so the cache is corpus-count-sized, spills to disk
     # gracefully, and the decode runs exactly once at any scale.
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
-    sigs = generation_pin(sigs, "multimodal.frame_dedup_pairs.sigs")
+    sigs = pin(sigs, "multimodal.frame_dedup_pairs.sigs")
     bands = sigs.select(
         id_col,
         "frame_no",

@@ -103,13 +103,13 @@ def kmeans_fixed(
     only the single final assignment pass reads every vector. At 100 TB,
     assign once at ingest instead (:func:`assign_lists`).
     """
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
     cents, assign = _lloyd(
         exploded, train, k, iters, id_col,
         op="kmeans_fixed", code="list_id", idx="i", seed_code=F.col(id_col),
     )
-    return cents, generation_pin(assign, "similarity.kmeans_fixed.assign")
+    return cents, pin(assign, "similarity.kmeans_fixed.assign")
 
 
 def _lloyd(
@@ -143,7 +143,7 @@ def _lloyd(
     codewords, generation-pinned at ``similarity.{op}.cents``, and
     ``(id_col, [key,] code)``.
     """
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
     keys = [key] if key else []
     train = exploded if train is None else train
@@ -161,7 +161,7 @@ def _lloyd(
     if iters > 0:
         # one materialization for every assignment pass and the final
         # read: the widen aggregate is not runtime-reused (r16 A/B)
-        wide_train = generation_pin(wide_train, f"similarity.{op}.wide")
+        wide_train = pin(wide_train, f"similarity.{op}.wide")
     seeds = (
         train.select(id_col).distinct().orderBy(id_col).limit(k)
         .select(id_col, seed_code.alias(code))
@@ -183,7 +183,7 @@ def _lloyd(
             .agg(F.expr("(sum(x) - pmod(sum(x), count(*))) DIV count(*)").alias("c6"))
         )
         cb = _codebook(cents, [*keys, code], op, idx)
-    cents = generation_pin(cents, f"similarity.{op}.cents")
+    cents = pin(cents, f"similarity.{op}.cents")
     wide_full = (
         wide_train if train is exploded
         else _widen_dense(exploded, [id_col, *keys], idx, "x", op)

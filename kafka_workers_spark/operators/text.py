@@ -762,7 +762,8 @@ def tfidf_topk(
         docs, id_col=id_col, text_col=text_col,
         min_df=min_df, max_df_fraction=max_df_fraction, n_docs=n_docs,
     )
-    from kafka_workers_spark.operators.dedup import barrier, generation_pin
+    from kafka_workers_spark.cache import pin
+    from kafka_workers_spark.operators.dedup import barrier
 
     # the weighted long format feeds norms (twice: query + candidate
     # side), the broadcast query slice AND the dot join — the barrier
@@ -770,9 +771,9 @@ def tfidf_topk(
     # one-level runtime reuse cannot reach (nested exchanges never
     # canonicalize equal once one side holds a ReusedExchange), so the
     # tiny (id, term, w6) frame persists too: tf/df aggregation runs
-    # once (measured −0.6 s of the 2.4 s row at sf0.1). generation_pin
+    # once (measured −0.6 s of the 2.4 s row at sf0.1). cache.pin
     # (r16): a later call on this session releases this generation.
-    w = generation_pin(barrier(w, id_col), "text.tfidf_topk.weights")
+    w = pin(barrier(w, id_col), "text.tfidf_topk.weights")
     from kafka_workers_spark.operators.similarity import _query_id_filter
 
     norms = w.groupBy(id_col).agg(F.sum(F.col("w6") * F.col("w6")).alias("norm6"))
@@ -897,16 +898,17 @@ def bm25_index(docs, id_col: str = "doc_id", text_col: str = "text") -> Bm25Inde
     """Build the stored index from a corpus — one tokenization pass
     (term_frequencies), three aggregates. Lazy: persist/write the frames
     to make it a real stored index."""
-    from kafka_workers_spark.operators.dedup import barrier, generation_pin
+    from kafka_workers_spark.cache import pin
+    from kafka_workers_spark.operators.dedup import barrier
 
     # postings feed dl, df, stats AND every search's scoring join; the
     # persist keeps the one tokenization pass honest where the barrier
     # exchange alone is re-derived past AQE's one-level runtime reuse
     # (measured −0.9 s on the merged-index search row at sf0.1).
-    # generation_pin (r16): rebuilds on this session release the old
+    # cache.pin (r16): rebuilds on this session release the old
     # pins; keep=2 because one merged-index query legitimately builds
     # two half-indexes that are consumed together.
-    tf = generation_pin(
+    tf = pin(
         barrier(term_frequencies(docs, id_col=id_col, text_col=text_col), id_col),
         "text.bm25_index.postings",
         keep=2,
@@ -1007,7 +1009,7 @@ def bm25_write_index(index: Bm25Index, path: str, mode: str = "error") -> None:
 def bm25_read_index(spark, path: str) -> Bm25Index:
     """Load a stored index written by :func:`bm25_write_index`. The only
     driver-side read is the one-row meta table (the pinned-param-check
-    collect pattern of functions/sketches._bloom_params); the four data
+    collect pattern of functions/sketches._scheme); the four data
     frames stay lazy parquet scans, so a search that prunes terms via
     ``max_df_fraction`` still pushes its filters into the postings
     scan."""
@@ -1098,15 +1100,15 @@ def bm25_topk_indexed(
             F.col("__tf"),
         )
     )
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
     # the per-(doc, term) weight frame feeds the broadcast query slice
     # and the scoring join — persisted for the same nested-reuse reason
-    # as tfidf_topk's weight pin; generation_pin (r16) makes repeated
+    # as tfidf_topk's weight pin; cache.pin (r16) makes repeated
     # searches on one session release the superseded weight frames
     # (ADVICE r15 #1: this site accumulated postings-scale blocks per
     # search call)
-    w = generation_pin(barrier(w, id_col), "text.bm25_topk_indexed.weights")
+    w = pin(barrier(w, id_col), "text.bm25_topk_indexed.weights")
     q = _query_id_filter(w, id_col, query_ids).select(
         F.col(id_col).alias("query_id"), "term", F.col("__tf").alias("__qtf")
     )
@@ -1274,12 +1276,12 @@ def bigram_lm_score(
 
     ref = transitions(ref_docs if ref_docs is not None else docs)
     cb = ref.groupBy("__prev", "__cur").agg(F.count("*").alias("__cb"))
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
     # feeds cc, V, and the scoring join once — persisted because the
     # three consumers sit past AQE's one-level exchange reuse;
-    # generation_pin (r16): repeated scoring calls release old pins
-    cb = generation_pin(barrier(cb, "__prev"), "text.bigram_lm_score.counts")
+    # cache.pin (r16): repeated scoring calls release old pins
+    cb = pin(barrier(cb, "__prev"), "text.bigram_lm_score.counts")
     cc = cb.groupBy("__prev").agg(F.sum("__cb").alias("__cc"))
     if vocab_size is not None:
         v_col = F.lit(int(vocab_size)).cast("bigint")
@@ -1396,13 +1398,13 @@ def kneser_ney_score(
     s = KN_SCALE
     ref = transition_pairs(ref_docs if ref_docs is not None else docs, id_col, text_col)
     cb = ref.groupBy("__prev", "__cur").agg(F.count("*").alias("__cb"))
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin
 
     # feeds ctx, cont, T, and the scoring join once — persisted because
     # the four consumers sit past AQE's one-level exchange reuse
-    # (measured −0.7 s of the 3.1 s row at sf0.1); generation_pin (r16):
+    # (measured −0.7 s of the 3.1 s row at sf0.1); cache.pin (r16):
     # repeated scoring calls release old pins
-    cb = generation_pin(barrier(cb, "__prev"), "text.kneser_ney_score.counts")
+    cb = pin(barrier(cb, "__prev"), "text.kneser_ney_score.counts")
     ctx = cb.groupBy("__prev").agg(
         F.sum("__cb").alias("__c1"), F.count("*").alias("__fwd")
     )
@@ -1836,11 +1838,10 @@ def bpe_train(
     a table and feed :func:`bpe_encode`. For a FIXED small rule count
     (dashboards, the oracle-checked query) see :func:`bpe_train_plan`,
     which expresses the same rounds as one collect-free Spark plan."""
-    from pyspark.storagelevel import StorageLevel
+    from kafka_workers_spark.cache import hold, release
 
     wc = bpe_word_counts(docs, text_col)
-    syms = wc.select(F.split("word", "").alias("symbols"), "n")
-    syms = syms.persist(StorageLevel.MEMORY_AND_DISK)
+    syms = hold(wc.select(F.split("word", "").alias("symbols"), "n"))
     merges: list[tuple[str, str]] = []
     try:
         for _ in range(n_merges):
@@ -1852,17 +1853,19 @@ def bpe_train(
             if top is None or top.cnt < min_pair_count:
                 break
             merges.append((top.left, top.right))
-            nxt = syms.select(
-                _bpe_apply_merge(F.col("symbols"), top.left, top.right).alias(
-                    "symbols"
-                ),
-                "n",
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            nxt.count()  # materialize before dropping the parent pin
-            syms.unpersist()
+            nxt = hold(
+                syms.select(
+                    _bpe_apply_merge(F.col("symbols"), top.left, top.right).alias(
+                        "symbols"
+                    ),
+                    "n",
+                )
+            )
+            nxt.count()  # materialize before dropping the parent hold
+            release(syms)
             syms = nxt
     finally:
-        syms.unpersist()
+        release(syms)
     return merges
 
 

@@ -1388,15 +1388,17 @@ def cap_per_key(
     if cap < 1:
         raise ValueError(f"cap_per_key: cap must be >= 1, got {cap}")
     from pyspark.sql import Window as W
-    from pyspark.storagelevel import StorageLevel
+
+    from kafka_workers_spark.cache import pin
 
     counts = df.groupBy(*key_cols).agg(F.count("*").alias("__n"))
     # keys-only, tiny, consumed by BOTH branch joins — the rule-2a pin
     # (ARCHITECTURE.md §4) so the counts aggregate runs once
-    over = (
-        counts.filter(F.col("__n") > cap)
-        .select(*[F.col(c).alias(f"__k_{c}") for c in key_cols])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    over = pin(
+        counts.filter(F.col("__n") > cap).select(
+            *[F.col(c).alias(f"__k_{c}") for c in key_cols]
+        ),
+        "pipeline.cap_per_key.over",
     )
     # null-SAFE key matching: groupBy treats NULL as a real group (messy
     # metadata is exactly where domination hides), but a plain equi-join

@@ -1389,8 +1389,7 @@ def text_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join + one codegen hash aggregate, and at real scale
     training runs on a sample (kmeans_fixed's ``train=`` arm, as
     ann_ivf_topk does) with one final assignment pass."""
-    from pyspark.storagelevel import StorageLevel
-
+    from kafka_workers_spark.cache import pin
     from kafka_workers_spark.operators.similarity import kmeans_fixed
     from kafka_workers_spark.operators.text import hashed_doc_vectors
 
@@ -1405,10 +1404,11 @@ def text_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ~9 Lloyd shuffles); the pin matters at 100 TB where the chain
     # is NOT exchange-reusable across iterations (AQE re-plans break
     # reuse) and each re-derivation would re-scan the corpus.
-    vecs = (
-        hashed_doc_vectors(docs, dim=_TC_DIM, max_df_fraction=_TC_MAX_DF)
-        .select(F.col("doc_id").alias("vec_id"), "i", "x")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    vecs = pin(
+        hashed_doc_vectors(docs, dim=_TC_DIM, max_df_fraction=_TC_MAX_DF).select(
+            F.col("doc_id").alias("vec_id"), "i", "x"
+        ),
+        "queries.text_cluster_topics.vecs",
     )
     # the assignment has two consumers below (sizes aggregate + the final
     # join); kmeans_fixed returns it generation-pinned

@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Round-16 optimization probe: isolated sub-stage timings (noop sink,
-cache-cleared) + plan checks for the r16 targets. Not part of the bench
-contract.
+"""Optimization probe: isolated sub-stage timings (noop sink,
+cache-cleared) and checks for the heavy rows, so optimization targets the
+operator that actually costs. Not part of the bench contract.
 
-Usage: python scripts/probe_r16.py <probe> [...]   (see PROBES below)
+Usage: python scripts/probe.py <probe> [...]   (see PROBES below)
+  SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
+  SPARK_GRAFT_DRIVER_MEM driver heap (default 48g; 6g fits a 15 GB box
+                         for the cc probe)
 """
 from __future__ import annotations
 
@@ -24,7 +27,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # GCLocker retries (the r15 verify-recipe gotcha) — size like the bench
 spark = build_session(
     WorkersConfig(
-        app_name="probe_r16",
+        app_name="probe",
         extra_confs={"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")},
     )
 )
@@ -149,6 +152,18 @@ def probe_graph(reps=2):
             print(f"{time.perf_counter()-t0:8.2f}s  {name}", flush=True)
 
 
+def probe_frame_dedup():
+    """frame_dedup_pairs: the signature stage alone, then the full operator."""
+    from kafka_workers_spark.operators.multimodal import (
+        _frame_signatures, frame_dedup_pairs,
+    )
+    d = load_table(spark, SF, "documents")
+    media = d.select("doc_id", F.to_binary(F.col("text"), F.lit("utf-8")).alias("payload"))
+    t("frame signatures", _frame_signatures(media, 64, 1, "payload", "doc_id"))
+    t("full frame_dedup_pairs", frame_dedup_pairs(media, frame_len=64, every_nth=1,
+                                                  max_hamming=3, min_match_frac=0.5))
+
+
 def probe_setsim_ratio():
     """Candidate:survivor ratio for dedup_set_similarity (VERDICT r15 #3).
 
@@ -212,7 +227,7 @@ def probe_cluster(reps=2):
 
 
 def probe_row():
-    """Time arbitrary registered rows: probe_r16.py row <name> [reps]"""
+    """Time arbitrary registered rows: probe.py row <name> [reps]"""
     from kafka_workers_spark.queries import load_all, load_extra
     reg = load_all()
     reg.update(load_extra())
@@ -231,6 +246,7 @@ PROBES = {
     "cc": probe_cc,
     "ccrow": probe_cc_row,
     "pairs": probe_pairs,
+    "frame": probe_frame_dedup,
     "graph": probe_graph,
     "setsim": probe_setsim_ratio,
     "cluster": probe_cluster,

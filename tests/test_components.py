@@ -1088,7 +1088,7 @@ def test_cc_round_pin_bookkeeping_is_per_dataframe_not_global(spark):
     chain in another thread leaves the chain materializable."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from kafka_workers_spark.operators.components import checkpointed_rdd_ids
+    from kafka_workers_spark.cache import checkpointed_rdd_ids
 
     pinned = spark.range(100).selectExpr("id", "id % 7 as k").localCheckpoint(eager=True)
     ids = checkpointed_rdd_ids(pinned)

@@ -1577,7 +1577,7 @@ def test_generation_pin_keeps_at_most_keep_generations(spark):
     ``keep`` pinned generations per site, a plan-identical re-pin must
     not kill its own cache entry, and released frames keep lineage (so
     in-flight consumers degrade to recompute, never break)."""
-    from kafka_workers_spark.operators.dedup import generation_pin
+    from kafka_workers_spark.cache import pin as generation_pin
 
     g1 = generation_pin(spark.range(10).selectExpr("id", "id*2 AS v"), "t.site")
     g1.count()
