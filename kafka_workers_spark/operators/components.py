@@ -44,6 +44,16 @@ and the component minimum is a fixed point, so any stable labeling is
 constant-per-component at that minimum; jumping only accelerates
 convergence.
 
+Local path: the loop's floor is its rounds, not its data — every round
+is a driver round-trip (a cluster barrier at scale), which dominates a
+live ingest micro-batch whose pair graph has a few hundred nodes. So
+the pair rows are held and counted first, and a pair list of at most
+``_LOCAL_MAX_EDGES`` rows is collected with one ``toArrow()`` and solved
+exactly on the driver by a vectorised hook-and-compress union-find
+(:func:`_components_local`): no symmetrized edge list, no rounds, no
+checkpoints, no convergence sums. Larger graphs run the loop below from
+the held rows, unchanged otherwise.
+
 Scale notes:
 - Labels are (node, comp) pairs — never payloads — so the per-round
   shuffle is two longs per edge.
@@ -73,8 +83,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructField, StructType
 
 from kafka_workers_spark import store
 from kafka_workers_spark.cache import hold, pin, release
@@ -123,6 +137,54 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
 #: cluster barrier at 10^9 edges, and batching halves it.
 _CC_STEPS_PER_ACTION = 2
 
+#: Pair lists (input rows, duplicates and NULL endpoints included) up to
+#: this size are solved on the driver in one pass instead of the round
+#: loop (see :func:`_components_local`). Measured on random graphs of P
+#: pairs over P nodes (local[4], 4 shuffle partitions, 4 GB driver; the
+#: call plus a count of its result, local vs loop, 2 reps each):
+#:   P = 10^4      0.24-0.33 s vs  5.3-7.0 s  (loop 9 rounds)
+#:   P = 10^5      0.57 s      vs 11.3-12.2 s (9 rounds)
+#:   P = 3·10^5    1.35-1.50 s vs 52-55 s     (11 rounds)
+#:   P = 10^6      5.2-5.4 s   vs 93-96 s     (11 rounds)
+#: No crossover up to here; the limit is the largest size measured.
+_LOCAL_MAX_EDGES = 1_000_000
+
+
+def _components_local(spark, table: pa.Table, dtype) -> DataFrame:
+    """The exact components of the pair rows ``table`` (u, v), solved on
+    the driver. The nodes are the non-NULL endpoints — a node paired
+    only with NULL stays a singleton, as in the loop — and the edges are
+    the rows with both endpoints set. A vectorised hook-and-compress
+    union-find (Shiloach–Vishkin style) runs over node indices in
+    ascending id order: each pass hooks every root to the smallest root
+    across its edges and pointer-jumps every node to its root, so a pass
+    either merges roots or proves the labeling final; the root of a
+    component is its minimum index, i.e. the component's minimum id.
+    Self-pairs and duplicate or reversed pairs never hook. O(log n)
+    passes on chains, each a few numpy sweeps over the edge arrays. The
+    labels come back as one partition of driver-side local data."""
+    ends = [pc.drop_null(table.column(c)).to_numpy() for c in ("u", "v")]
+    nodes = np.unique(np.concatenate(ends))
+    both = table.drop_null()
+    a = np.searchsorted(nodes, both.column("u").to_numpy())
+    b = np.searchsorted(nodes, both.column("v").to_numpy())
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        hi, lo = np.maximum(ra, rb), np.minimum(ra, rb)
+        hook = hi != lo
+        if not hook.any():
+            break
+        np.minimum.at(parent, hi[hook], lo[hook])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    schema = StructType([StructField("node", dtype), StructField("comp", dtype)])
+    out = pa.table({"node": nodes, "comp": nodes[parent]})
+    return spark.createDataFrame(out, schema).coalesce(1)
+
 
 def connected_components(
     pairs: DataFrame,
@@ -134,17 +196,23 @@ def connected_components(
     """Resolve an undirected edge list into ``(node, comp)`` where ``comp``
     is the minimum node id in the node's connected component.
 
-    EAGER: the rounds execute at call time (iterative convergence cannot
-    be expressed as one lazy plan); the returned frame reads the final
-    checkpointed labels. When ``sparkContext.setCheckpointDir`` is
-    configured the rounds use reliable ``checkpoint()`` — survives
-    executor loss, the right mode for cluster jobs; otherwise
+    EAGER: the components are solved at call time (iterative convergence
+    cannot be expressed as one lazy plan). A pair list of at most
+    ``_LOCAL_MAX_EDGES`` rows with integral ids is collected to the
+    driver and solved there in one pass; the returned frame holds the
+    labels as one partition of driver-side local data. A larger one runs
+    the round loop, and the returned frame reads its final checkpointed
+    labels. When ``sparkContext.setCheckpointDir`` is configured the
+    rounds use reliable ``checkpoint()`` — survives executor loss, the
+    right mode for cluster jobs; otherwise
     ``localCheckpoint`` (block-manager, fine for local/test runs).
 
-    Raises ``RuntimeError`` if ``max_rounds`` passes without convergence
-    (component diameter > max_rounds — e.g. a 50+-hop chain of sliding
-    near-duplicates) instead of silently returning labels that would leave
-    several survivors in one group.
+    Raises ``RuntimeError`` if the loop passes ``max_rounds`` without
+    convergence (component diameter > max_rounds — e.g. a 50+-hop chain
+    of sliding near-duplicates) instead of silently returning labels that
+    would leave several survivors in one group. The local solve is exact
+    at any diameter and cannot under-merge, so ``max_rounds`` never binds
+    on it.
 
     Only nodes appearing in ``pairs`` are returned (isolated documents are
     their own component by definition — left-join the corpus afterwards
@@ -155,15 +223,47 @@ def connected_components(
     absent from the output rather than returned as a (NULL, NULL) row.
 
     ``stats``, when a dict, receives ``{"rounds": n}`` after
-    convergence — n counts ACTIONS (checkpoint rounds), each of which
-    advances ``_CC_STEPS_PER_ACTION`` propagate steps, so ``max_rounds``
-    bounds actions, not wavefront hops.
+    convergence — n counts the loop's ACTIONS (checkpoint rounds), each
+    of which advances ``_CC_STEPS_PER_ACTION`` propagate steps, so
+    ``max_rounds`` bounds actions, not wavefront hops. The local solve
+    reports ``{"rounds": 0}``.
     """
     # sparkContext is classic-only; under Spark Connect there is no
     # checkpoint-dir query and no RDD bookkeeping — fall back to
     # localCheckpoint-only rounds with no eager unpersist (the GC path)
     sc = getattr(pairs.sparkSession, "sparkContext", None)
     reliable = sc is not None and sc.getCheckpointDir() is not None
+
+    # the pair rows, at the id type both endpoints coerce to, are held:
+    # their count picks the path, and the path reads them — the pair
+    # source runs once either way. (A bounded ``limit(n).toArrow()``
+    # would decide in one job but runs every partition of the source
+    # and shuffles up to n rows of each to one reducer — the whole edge
+    # list of a graph far above the limit.)
+    dtype = pairs.select(F.array(src, dst)).schema[0].dataType.elementType
+    raw = hold(
+        pairs.select(
+            F.col(src).cast(dtype).alias("u"), F.col(dst).cast(dtype).alias("v")
+        )
+    )
+    try:
+        if isinstance(dtype, IntegralType) and raw.count() <= _LOCAL_MAX_EDGES:
+            if stats is not None:
+                stats["rounds"] = 0
+            return _components_local(pairs.sparkSession, raw.toArrow(), dtype)
+        return _components_loop(raw, reliable, max_rounds, stats)
+    finally:
+        release(raw)
+
+
+def _components_loop(
+    raw: DataFrame,
+    reliable: bool,
+    max_rounds: int,
+    stats: dict | None,
+) -> DataFrame:
+    """The round loop of :func:`connected_components` over the held pair
+    rows ``raw`` (u, v); the caller releases ``raw``."""
 
     def _pin(df: DataFrame) -> DataFrame:
         # lineage truncation each round — see module docstring; without it
@@ -172,7 +272,7 @@ def connected_components(
         # never costs a separate job.
         return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
 
-    # ONE pass over the pair source (r16, guide §2.4): the old two-branch
+    # ONE pass over the pair rows (r16, guide §2.4): the old two-branch
     # union materialized the (expensive) pair generator once per branch —
     # AQE exchange reuse only shares the deepest common exchange, so the
     # LSH band join + block join above it ran twice. Each pair row now
@@ -182,11 +282,11 @@ def connected_components(
     # or the initial labels (u == v and u != v are both NULL-false), so a
     # NULL id is silently absent from the output either way.
     sym = hold(
-        pairs.select(
+        raw.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                    F.struct("u", "v"),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
                 )
             ).alias("__e")
         )
@@ -229,11 +329,12 @@ def connected_components(
         # non-empty one at this width with one row per node
         prev_sum = row0["__s0"] if row0["__s0"] is not None else 0
         # sym's only consumers are the two union branches, fully served
-        # now that edges is materialized — release it here so the loop
-        # holds ONE cached edge list, not two (at 10⁹ edges the doubled
-        # footprint would evict other state for the whole iteration); the
-        # finally's release stays as the failure-path cleanup
-        release(sym)
+        # now that edges is materialized, and raw's only consumer is sym —
+        # release both here so the loop holds ONE cached edge list, not
+        # three (at 10⁹ edges the extra footprint would evict other state
+        # for the whole iteration); the finally's releases stay as the
+        # failure-path cleanup
+        release(sym, raw)
         # ~1M edges per partition, never above the session setting (a
         # 10⁹-edge graph is unaffected). The cached edge list keeps the
         # pair generator's partition count; every round's map stages
@@ -244,7 +345,7 @@ def connected_components(
         # (a write is session-GLOBAL and would downsize every query
         # planned concurrently on the same session).
         session_parts = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            raw.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
         p = max(1, min(session_parts, -(-n_edges // 1_000_000)))
         if p < session_parts:

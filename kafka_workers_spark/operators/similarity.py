@@ -26,6 +26,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from kafka_workers_spark import store
+from kafka_workers_spark.cache import pin, release
 from kafka_workers_spark.operators.dedup import (
     cosine_from_fixed,
     embedding_fixed,
@@ -103,8 +104,6 @@ def kmeans_fixed(
     only the single final assignment pass reads every vector. At 100 TB,
     assign once at ingest instead (:func:`assign_lists`).
     """
-    from kafka_workers_spark.cache import pin
-
     cents, assign = _lloyd(
         exploded, train, k, iters, id_col,
         op="kmeans_fixed", code="list_id", idx="i", seed_code=F.col(id_col),
@@ -143,8 +142,6 @@ def _lloyd(
     codewords, generation-pinned at ``similarity.{op}.cents``, and
     ``(id_col, [key,] code)``.
     """
-    from kafka_workers_spark.cache import pin
-
     keys = [key] if key else []
     train = exploded if train is None else train
 
@@ -1501,6 +1498,7 @@ def kcenter_coreset(
         )
         centers.append(nxt)
         if i < k - 1:
+            superseded = mind
             mind = (
                 mind.crossJoin(F.broadcast(nxt.select("__cv")))
                 .select(
@@ -1512,6 +1510,9 @@ def kcenter_coreset(
                 )
                 .localCheckpoint(eager=True)
             )
+            release(superseded)
+    # only the k center checkpoints stay: the returned plan reads them
+    release(mind)
     out = centers[0]
     for c in centers[1:]:
         out = out.unionByName(c)

@@ -93,6 +93,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_workers_spark import store
+from kafka_workers_spark.cache import hold, release
 from kafka_workers_spark.pipeline import dedup_pairs_incremental
 from kafka_workers_spark.streaming.components import components_fold
 
@@ -325,27 +326,41 @@ def dedup_index_fold(
             rows_per_band=rows_per_band,
             shingle_n=shingle_n,
         )
-        ccfold(pairs, batch_id)
-        with _index_lock(index_dir):
-            delta = os.path.join(index_dir, f"delta-{batch_id}")
-            # skip a replayed append when the delta is still present OR a
-            # compaction already absorbed it into the base (batch_id <=
-            # floor): a below-floor re-append would never be read and
-            # only leave an orphan for heal to reap
-            if not os.path.isdir(delta) and batch_id > _base_floor(index_dir):
-                tmp = os.path.join(index_dir, f".delta-{batch_id}.tmp")
-                new_rows.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, delta)
-            if compact_every is not None:
-                floor = _base_floor(index_dir)
-                live = [
-                    d
-                    for d in os.listdir(index_dir)
-                    if d.startswith("delta-")
-                    and int(d.split("-", 1)[1]) > floor
-                ]
-                if len(live) >= compact_every:
-                    _compact_locked(spark, index_dir)
+        # the band rows feed the pair join and the delta write; the pairs
+        # feed the store fold's emptiness check and CC's pair rows —
+        # held, each is built once per batch
+        new_rows, pairs = hold(new_rows), hold(pairs)
+        try:
+            ccfold(pairs, batch_id)
+            with _index_lock(index_dir):
+                delta = os.path.join(index_dir, f"delta-{batch_id}")
+                # skip a replayed append when the delta is still present OR
+                # a compaction already absorbed it into the base (batch_id
+                # <= floor): a below-floor re-append would never be read
+                # and only leave an orphan for heal to reap
+                if not os.path.isdir(delta) and batch_id > _base_floor(index_dir):
+                    tmp = os.path.join(index_dir, f".delta-{batch_id}.tmp")
+                    # one file per batch delta: the held frame keeps its
+                    # cached partitions, and every later batch's scan
+                    # opens each of their files until the next compaction
+                    new_rows.coalesce(1).write.mode("overwrite").parquet(tmp)
+                    os.rename(tmp, delta)
+                # their last consumer is the delta write: freed before the
+                # compaction, whose absorbed files a later heal deletes
+                release(new_rows, pairs)
+                if compact_every is not None:
+                    floor = _base_floor(index_dir)
+                    live = [
+                        d
+                        for d in os.listdir(index_dir)
+                        if d.startswith("delta-")
+                        and int(d.split("-", 1)[1]) > floor
+                    ]
+                    if len(live) >= compact_every:
+                        _compact_locked(spark, index_dir)
+        finally:
+            # the failure path's release; after the one above, a no-op
+            release(new_rows, pairs)
 
     return fold
 

@@ -111,20 +111,31 @@ def _pairs():
 
 
 def probe_cc(reps=2):
-    """CC loop: rounds, wall, label checksum (order-independent)."""
-    from kafka_workers_spark.operators.components import connected_components
+    """CC on both paths — the default (the driver-side solve when the
+    edge list fits one partition) and the round loop forced by a zero
+    size limit: rounds, wall, label checksum (order-independent). The
+    two checksums must be identical."""
+    from kafka_workers_spark.operators import components
 
     pairs = _pairs()
-    stats = {}
 
-    def loop():
-        comp = connected_components(pairs, src="doc_a", dst="doc_b", stats=stats)
+    def run(label):
+        stats = {}
+        comp = components.connected_components(
+            pairs, src="doc_a", dst="doc_b", stats=stats
+        )
         row = comp.agg(
             F.count("*"), F.sum("comp"), F.sum(F.col("node") * F.col("comp"))
         ).collect()[0]
-        print("   labels checksum:", tuple(row), "rounds:", stats.get("rounds"))
+        print(f"   {label} labels checksum:", tuple(row), "rounds:", stats.get("rounds"))
 
-    w("cc loop (+checksum)", loop, reps=reps)
+    w("cc default path (+checksum)", lambda: run("default"), reps=reps)
+    limit = components._LOCAL_MAX_EDGES
+    components._LOCAL_MAX_EDGES = 0
+    try:
+        w("cc loop forced (+checksum)", lambda: run("loop"), reps=reps)
+    finally:
+        components._LOCAL_MAX_EDGES = limit
 
 
 def probe_cc_row(reps=2):

@@ -629,7 +629,9 @@ def run_cc_stress() -> int:
     """Topology rep for connected_components: chains (the wavefront-depth
     worst case the label shortcuts target) plus dense cliques (the
     near-dup common case). Asserts the exact expected component count and
-    prints rounds + wall — the measured basis for the operator's
+    prints which path ran (``local``: the driver-side solve of an edge
+    list that fits one partition, as these ~27k edges do; ``loop``: the
+    round loop), rounds + wall — the measured basis for the operator's
     docstring claims."""
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -682,8 +684,9 @@ def run_cc_stress() -> int:
     n_nodes = comp.count()
     wall = time.perf_counter() - t0
     n_comps = comp.select("comp").distinct().count()
+    path = "local" if stats["rounds"] == 0 else "loop"
     print(
-        f"rounds={stats['rounds']} wall={wall:.2f}s "
+        f"path={path} rounds={stats['rounds']} wall={wall:.2f}s "
         f"nodes={n_nodes} components={n_comps}"
     )
     assert n_comps == expected_comps, (n_comps, expected_comps)

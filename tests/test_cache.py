@@ -179,3 +179,22 @@ def test_mixed_scheme_raise_leaves_sketch_unheld(spark):
         with pytest.raises(ValueError, match="distinct"):
             call()
         assert sketch.storageLevel == StorageLevel.NONE
+
+
+def test_kcenter_coreset_keeps_only_its_center_checkpoints(spark):
+    """kcenter_coreset checkpoints a min-distance frame per round; each
+    is freed once the next is materialised and the last once the loop
+    ends, so a call leaves only the k center frames its returned plan
+    reads (it left 2k − 1 before)."""
+    from kafka_workers_spark.operators.similarity import kcenter_coreset
+
+    vecs = spark.createDataFrame(
+        [(i, [(i * 37 + j * 11) % 101 - 50 for j in range(4)]) for i in range(40)],
+        "vec_id long, v6 array<bigint>",
+    )
+    jmap = spark.sparkContext._jsc.getPersistentRDDs  # noqa: SLF001
+    before = set(jmap().keySet().toArray())
+    rows = kcenter_coreset(vecs, k=5).collect()
+    added = set(jmap().keySet().toArray()) - before
+    assert len(rows) == 5
+    assert len(added) <= 5, added

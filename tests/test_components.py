@@ -103,11 +103,12 @@ def test_dedup_groups_bridging_doc_merges_clusters(spark):
     assert out[2] == (2, True) and out[4] == (4, True) and out[6] == (6, True)
 
 
-def test_components_nonconvergence_raises(spark):
+def test_components_nonconvergence_raises(spark, monkeypatch):
     """A chain longer than max_rounds must raise, not silently return
     labels that would leave several survivors in one group."""
     import pytest
 
+    monkeypatch.setattr("kafka_workers_spark.operators.components._LOCAL_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(chain, "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="converge"):
@@ -117,9 +118,10 @@ def test_components_nonconvergence_raises(spark):
     assert set(got.values()) == {0}
 
 
-def test_components_nonconvergence_reports_actions_and_steps(spark):
+def test_components_nonconvergence_reports_actions_and_steps(spark, monkeypatch):
     """max_rounds bounds ACTIONS, each batching several propagate steps;
     the error names both so the bound reads honestly."""
+    monkeypatch.setattr("kafka_workers_spark.operators.components._LOCAL_MAX_EDGES", 0)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
     )
@@ -129,13 +131,14 @@ def test_components_nonconvergence_reports_actions_and_steps(spark):
         connected_components(path, max_rounds=1)
 
 
-def test_components_checkpoint_dir_grows_one_rdd_per_round(spark, tmp_path):
+def test_components_checkpoint_dir_grows_one_rdd_per_round(spark, tmp_path, monkeypatch):
     """With a reliable checkpoint dir set, only the carried round labels
     are reliably checkpointed — the batched step's scratch pin stays
     local — so one call leaves at most rounds + 1 RDD dirs. The session's
     checkpoint dir is restored to unset afterwards."""
     import os
 
+    monkeypatch.setattr("kafka_workers_spark.operators.components._LOCAL_MAX_EDGES", 0)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     ckpt = tmp_path / "ckpt"
@@ -218,10 +221,11 @@ def test_edit_distance_pairs_rejects_oversized_k(spark):
         edit_distance_pairs(df, k=17)
 
 
-def test_components_chain_labels_and_rounds(spark):
+def test_components_chain_labels_and_rounds(spark, monkeypatch):
     """A 12-node chain (the wavefront-depth shape the label shortcuts
     target) resolves to one component labelled 1, and the stats hook
     reports the action count: 4 rounds of two propagate steps each."""
+    monkeypatch.setattr("kafka_workers_spark.operators.components._LOCAL_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
     )
@@ -229,6 +233,59 @@ def test_components_chain_labels_and_rounds(spark):
     comp = connected_components(edges, stats=stats)
     assert {(r.node, r.comp) for r in comp.collect()} == {(i, 1) for i in range(1, 13)}
     assert stats["rounds"] == 4
+
+
+def test_components_local_solve_equals_loop(spark, monkeypatch):
+    """An edge list that fits one partition is solved on the driver; it
+    must equal the round loop (forced with a zero size limit) value for
+    value and in schema, on seeded random graphs carrying every input
+    edge case: NULL endpoints, a node paired only with NULL (a
+    singleton), self-pairs, duplicate and reversed pairs, negative ids,
+    ids at the ±2⁶³ bounds — and on an empty edge set (a limit of −1
+    sends even that one through the loop). The local path reports 0
+    rounds."""
+    lo, hi = -(2**63), 2**63 - 1
+    rng = random.Random(2026)
+    graphs = [[]]
+    for _ in range(2):
+        ids = [rng.randrange(-40, 40) for _ in range(30)] + [lo, lo + 1, hi - 1, hi]
+        es = [(rng.choice(ids), rng.choice(ids)) for _ in range(45)]
+        es += [(b, a) for a, b in es[:8]] + es[:4]
+        es += [(a, a) for a in ids[:4]]
+        es += [(None, rng.choice(ids)), (rng.choice(ids), None), (None, None), (777, None)]
+        graphs.append(es)
+    for es in graphs:
+        df = spark.createDataFrame(es, "doc_a long, doc_b long")
+        stats: dict = {}
+        local = connected_components(df, stats=stats)
+        with monkeypatch.context() as m:
+            m.setattr(_LIMIT, -1)
+            loop = connected_components(df)
+        got = sorted(map(tuple, local.collect()))
+        assert got == sorted(map(tuple, loop.collect()))
+        assert local.schema == loop.schema
+        assert local.schema.simpleString() == "struct<node:bigint,comp:bigint>"
+        assert stats["rounds"] == 0
+        if es:
+            assert (777, 777) in got
+            assert got == sorted(_union_find(
+                [(a, b) for a, b in es if a is not None and b is not None] + [(777, 777)]
+            ).items())
+
+
+#: the local path's size limit; a test that exercises the round loop
+#: sets it to 0 (or −1, which also sends an empty edge set to the loop)
+_LIMIT = "kafka_workers_spark.operators.components._LOCAL_MAX_EDGES"
+
+
+def test_components_oracle_cases_on_the_loop(spark, monkeypatch):
+    """Every graph of the union-find oracle tests above fits the local
+    path; rerun them with the round loop forced, the empty edge set
+    included."""
+    monkeypatch.setattr(_LIMIT, -1)
+    test_components_basic_shapes(spark)
+    test_components_random_graphs(spark)
+    test_components_empty_and_negative_ids(spark)
 
 
 def test_components_never_writes_session_conf(spark, monkeypatch):
@@ -252,6 +309,26 @@ def test_components_never_writes_session_conf(spark, monkeypatch):
     assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
     assert "spark.sql.shuffle.partitions" not in written
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_components_loop_reads_but_never_writes_session_conf(spark, monkeypatch):
+    """The check above with the round loop forced: its 11 edges size to
+    one partition against the session's 8, so the loop compacts its edge
+    cache — reading the shuffle partition setting once beside the
+    check's own two reads — and still writes nothing."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    read = []
+    real_get = RuntimeConfig.get
+
+    def recording_get(self, key, *args, **kwargs):
+        read.append(key)
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", recording_get)
+    monkeypatch.setattr(_LIMIT, 0)
+    test_components_never_writes_session_conf(spark, monkeypatch)
+    assert read.count("spark.sql.shuffle.partitions") == 3, read
 
 
 def test_pagerank_matches_python_integer_reference(spark):
@@ -1076,7 +1153,7 @@ def test_distance_ops_match_python_reference_on_seeded_random_graphs(spark):
 def test_cc_round_pin_bookkeeping_is_per_dataframe_not_global(spark):
     """Regression for the round-15 gate race: connected_components frees
     its superseded round pins by the EXACT RDD id of its own checkpoint
-    (operators.components.checkpointed_rdd_ids), never by diffing the
+    (kafka_workers_spark.cache.checkpointed_rdd_ids), never by diffing the
     session-global getPersistentRDDs() set — the diff attributed a
     concurrent thread's lazy localCheckpoint to the loop and unpersisted
     it, resetting the victim's storage level to NONE so its later
@@ -1117,3 +1194,10 @@ def test_cc_round_pin_bookkeeping_is_per_dataframe_not_global(spark):
         chain_fut = pool.submit(lazy_chain)
         assert cc_fut.result() > 0
         assert chain_fut.result() == 200  # raised pre-fix when the race hit
+
+
+def test_cc_round_pin_bookkeeping_on_the_loop(spark, monkeypatch):
+    """The race above with the round loop forced: its 20-pair graph fits
+    the local path, which makes no round checkpoints to race."""
+    monkeypatch.setattr(_LIMIT, 0)
+    test_cc_round_pin_bookkeeping_is_per_dataframe_not_global(spark)

@@ -310,6 +310,61 @@ def test_dedup_index_crash_heal_and_compact(spark, tmp_path):
         assert labels[r.doc_id] == labels.get(orig, orig), r.doc_id
 
 
+#: Spark jobs of one first-batch dedup_index_fold over the sf0.001
+#: documents (session defaults of the test fixture, AQE on); 51 when the
+#: fold re-derived its pairs and CC ran its round loop on them
+_FIRST_FOLD_JOBS = 19
+
+
+def test_dedup_index_fold_releases_its_holds(spark, tmp_path, monkeypatch):
+    """A fold holds the batch's band rows and pairs for its own actions
+    only: after one first-batch call the session's persistent RDDs and
+    the cache registry are back where they started, also when the
+    components fold raises. The call's job count is pinned."""
+    from kafka_workers_spark import cache
+    from kafka_workers_spark.sources.files import load_table
+    from kafka_workers_spark.streaming import dedup_index
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    sc = spark.sparkContext
+
+    def cache_state():
+        rdds = set(sc._jsc.getPersistentRDDs().keySet().toArray())  # noqa: SLF001
+        gens = {k: [id(f) for _, f in v] for k, v in cache._GENERATIONS.items()}
+        return rdds, gens
+
+    rdds0, gens0 = cache_state()
+    fold = dedup_index.dedup_index_fold(
+        spark, str(tmp_path / "idx"), str(tmp_path / "cc"), lineage="H"
+    )
+    sc.setJobGroup("dedup-fold-jobs", "one first-batch fold")
+    try:
+        fold(docs, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup-fold-jobs"))
+    rdds1, gens1 = cache_state()
+    assert rdds1 <= rdds0 and gens1 == gens0
+    assert jobs == _FIRST_FOLD_JOBS, jobs
+
+    def failing_components_fold(*args, **kwargs):
+        def ccfold(pairs, batch_id):
+            pairs.count()
+            raise RuntimeError("injected components fold failure")
+
+        return ccfold
+
+    monkeypatch.setattr(dedup_index, "components_fold", failing_components_fold)
+    fold = dedup_index.dedup_index_fold(
+        spark, str(tmp_path / "idx2"), str(tmp_path / "cc2"), lineage="H"
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        fold(docs, 0)
+    rdds2, gens2 = cache_state()
+    assert rdds2 <= rdds0 and gens2 == gens0
+
+
 def test_streaming_dedup_ingest_with_restart_equals_one_shot(spark, tmp_path):
     """The live wrapper: document batches stream through foreachBatch
     with a checkpoint restart mid-corpus; both stores (band index +
