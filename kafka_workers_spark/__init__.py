@@ -14,7 +14,9 @@ partitions and scales to a multi-executor cluster even though tests run on
 local[N].
 """
 
-from kafka_workers_spark.session import WorkersConfig, build_session
+from kafka_workers_spark.session import WorkersConfig, _install_zip_stat_check, build_session
+
+_install_zip_stat_check()
 
 __version__ = "0.1.0"
 

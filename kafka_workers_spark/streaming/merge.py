@@ -189,6 +189,13 @@ def merge_ordered_stream(
     )
 
 
+def _emit(group: str, cols: list[str], key: tuple, recs: list[dict]) -> pd.DataFrame:
+    # module-level, so the pickled handler references this module and a
+    # Python worker that unpickles it imports the package (whose __init__
+    # installs session._install_zip_stat_check)
+    return pd.DataFrame({group: [key[0]] * len(recs), **{c: [r[c] for r in recs] for c in cols}})
+
+
 def _merge_handler(
     group: str,
     ts: str,
@@ -203,11 +210,6 @@ def _merge_handler(
     frontier to max(seen), and once ALL ``n_sides`` frontiers are known
     emit buffered rows with ts <= min(frontiers) in (ts, side) order."""
 
-    def _emit(key: tuple, recs: list[dict]) -> pd.DataFrame:
-        return pd.DataFrame(
-            {group: [key[0]] * len(recs), **{c: [r[c] for r in recs] for c in cols}}
-        )
-
     def handle(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             st = json.loads(state.get[0])
@@ -218,7 +220,7 @@ def _merge_handler(
             leftovers = sorted(st["buf"], key=lambda r: (r[ts], r[side_col]))
             state.remove()
             if leftovers:
-                yield _emit(key, leftovers)
+                yield _emit(group, cols, key, leftovers)
             return
         for pdf in pdfs:
             # to_dict keeps arbitrary column names (itertuples mangles
@@ -238,7 +240,7 @@ def _merge_handler(
             )
             st["buf"] = [r for r in st["buf"] if r[ts] > low]
             if ready:
-                yield _emit(key, ready)
+                yield _emit(group, cols, key, ready)
         state.update((json.dumps(st),))
         if state_ttl_ms:
             state.setTimeoutDuration(state_ttl_ms)

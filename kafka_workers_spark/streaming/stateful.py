@@ -8,9 +8,10 @@ WorkerTask.java:11-70; punctuation impl/task/WorkerThread.java:87-102,
 impl/punctuator/PunctuatorThread.java:14-47; README.md:64 mutual-exclusion
 guarantee).
 
-Spark mapping: ``applyInPandasWithState`` keyed by the sub-partition id,
-not Spark 4's ``transformWithStateInPandas``, because the latter's Python
-runner needs ``google.protobuf`` at query runtime.
+Spark mapping: ``applyInPandasWithState`` keyed by the caller's ``keys``
+columns (the funnel keys by ``user_id``), not Spark 4's
+``transformWithStateInPandas``, because the latter's Python runner needs
+``google.protobuf`` at query runtime.
 Spark gives the same per-key mutual exclusion (state callbacks for one key
 are serialized) and *more* than the reference: state survives restarts via
 the checkpointed state store, where the reference's task state is volatile
@@ -32,6 +33,15 @@ ever seen.
 
 At 100 TB: state is partitioned by key across executors (RocksDB-backed
 state store in production configs); no driver-side state, no collect.
+
+Cost model: each stateful task (one per state partition per micro-batch)
+opens two Python worker invocations when a timer is configured
+(``punctuate_interval_ms`` or ``idle_timeout_ms``) — the data pass over
+the batch's key groups, then the timeout pass over keys whose timer
+expired — and each pays the worker's per-task setup before the handler
+runs. On CPython 3.11 that setup's zip-directory re-reads dominated a
+small funnel batch until ``session._install_zip_stat_check``
+(ARCHITECTURE.md §6).
 
 Batch twin: :func:`replay_worker_task` runs the same task over each key's
 whole history in one grouped-map pass — the cross-plan oracles compare

@@ -253,6 +253,79 @@ def probe_row():
             print(f"{time.perf_counter()-t0:8.2f}s  {name}", flush=True)
 
 
+def probe_workers(passes=3):
+    """Python-worker setup, the cost every worker task pays before its UDF
+    runs. Per pass of a library grouped-map over one key group per core:
+    each worker process's pid, its zip-importer count, the ms of one
+    ``importlib.invalidate_caches()`` (the call worker setup makes), and
+    the ms of the interpreter's own re-read of every zip importer (what
+    that call costs without session._install_zip_stat_check; '-' where the
+    interpreter invalidates lazily and nothing is installed). Then two
+    drains of the benchmark's funnel backlog (perfbench StatefulStream)
+    with one shuffle partition per core, as the benchmark's session has,
+    per-batch ``triggerExecution``."""
+    import shutil
+    import tempfile
+
+    import pandas as pd
+
+    from kafka_workers_spark.session import default_parallelism
+    from kafka_workers_spark.streaming.stateful import WorkerTask, replay_worker_task
+    from perfbench.workloads import Ctx, StatefulStream
+
+    def process(key, pdf, st):
+        import importlib
+        import zipimport
+
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1e3
+        zips = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+        reread = getattr(zipimport.zipimporter.invalidate_caches, "__wrapped__", None)
+        raw = None
+        if reread is not None:
+            files, cache = [f._files for f in zips], dict(zipimport._zip_directory_cache)
+            t0 = time.perf_counter()
+            for f in zips:
+                reread(f)
+            raw = (time.perf_counter() - t0) * 1e3
+            # put back what the wrapper last read, so the next call does
+            # not time freeing these fresh directories
+            for f, fs in zip(zips, files):
+                f._files = fs
+            zipimport._zip_directory_cache.update(cache)
+        return pd.DataFrame({"pid": [os.getpid()], "zips": [len(zips)], "ms": [ms], "raw_ms": [raw]}), st
+
+    n = default_parallelism()
+    df = spark.range(4 * n).selectExpr(f"id % {n} AS k").repartition(n, "k")
+    task = WorkerTask(process=process)
+    for i in range(passes):
+        rows = replay_worker_task(df, ["k"], task, "pid long, zips long, ms double, raw_ms double").toPandas()
+        print(f"pass {i}:", flush=True)
+        for pid, g in rows.groupby("pid"):
+            raw = "-" if g["raw_ms"].isna().all() else f"{g['raw_ms'].median():.1f}"
+            print(f"   pid {pid}  zip importers {g['zips'].max()}  invalidate_caches "
+                  f"{g['ms'].median():.1f} ms  unwrapped re-read {raw} ms  ({len(g)} calls)",
+                  flush=True)
+
+    work = tempfile.mkdtemp(prefix="kw_probe_workers_")
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        ctx = Ctx(spark, work, seed=2)
+        stream = StatefulStream()
+        stream.land(ctx)
+        stream.expected = stream.reference(ctx)
+        for i in range(2):
+            u = stream.unit(ctx, f"drain{i}")
+            batches = " ".join(f"{ms:.0f}" for ms in u.items_ms)
+            print(f"funnel drain {i}: {u.wall_s:.2f}s  correct {u.failed == 0}  "
+                  f"triggerExecution ms per batch: {batches}", flush=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        shutil.rmtree(work, ignore_errors=True)
+
+
 PROBES = {
     "cc": probe_cc,
     "ccrow": probe_cc_row,
@@ -262,6 +335,7 @@ PROBES = {
     "setsim": probe_setsim_ratio,
     "cluster": probe_cluster,
     "row": probe_row,
+    "workers": probe_workers,
 }
 
 
