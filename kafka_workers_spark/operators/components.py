@@ -486,15 +486,13 @@ def dedup_groups(
     id_col: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Attach ``group_id`` (component minimum — the canonical survivor's
     id) and ``is_canonical`` to every document. Documents in no pair are
     their own singleton group. The exact-resolution alternative to
     ``pipeline.near_dedup_lsh``'s greedy rule: a doc bridging two clusters
-    merges them instead of deleting both tails. ``max_rounds`` passes
-    through to :func:`connected_components`."""
-    comp = connected_components(pairs, src=src, dst=dst, max_rounds=max_rounds)
+    merges them instead of deleting both tails."""
+    comp = connected_components(pairs, src=src, dst=dst)
     return (
         docs.join(comp, docs[id_col] == comp["node"], "left")
         .select(
@@ -788,31 +786,26 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    orient: str = "id",
 ) -> DataFrame:
     """Exact per-node triangle counts by ordered edge orientation
-    (Schank & Wagner SEA 2005; Suri & Vassilvitskii, "Counting
-    triangles and the curse of the last reducer", WWW 2011): normalize
-    to undirected distinct edges, orient every edge from the
-    lower-ordered endpoint to the higher, build wedges as the self-join
-    ``out(a→b) ⋈ out(b→c)`` and close them against ``out(a→c)`` — each
-    triangle materializes EXACTLY once, at its lowest-ordered vertex.
-    Returns ``(node, n_triangles)`` for every node in at least one
-    triangle (the local clustering numerator; near-dup use: triangles
-    separate tight duplicate cliques from chance pair collisions).
+    (Schank & Wagner SEA 2005): normalize to undirected distinct edges,
+    orient every edge from the lower node id to the higher, build wedges
+    as the self-join ``out(a→b) ⋈ out(b→c)`` and close them against
+    ``out(a→c)`` — each triangle materializes EXACTLY once, at its
+    lowest-id vertex. Returns ``(node, n_triangles)`` for every node in
+    at least one triangle (the local clustering numerator; near-dup use:
+    triangles separate tight duplicate cliques from chance pair
+    collisions).
 
-    ``orient="id"`` orders by node id — the oracle-replayable default.
-    ``orient="degree"`` orders by (degree, id): the WW'11 fix for the
-    last-reducer curse — every wedge pivot then has out-degree
-    O(sqrt(m)), so a star hub generates NO wedges instead of deg²
-    (identical counts, pinned by test; the shape to use at 100 TB).
+    Limitation (Suri & Vassilvitskii, "Counting triangles and the curse
+    of the last reducer", WWW 2011): id order bounds no pivot's
+    out-degree, so a hot vertex with a low id pivots deg² wedges, all
+    keyed to one join task — the last reducer. Ordering by (degree, id)
+    would bound every pivot at O(sqrt(m)) out-edges.
 
     Shape: two equi-joins over slim oriented-edge rows + one explode of
     the 3-node triangle rows into a count aggregate; never an
-    all-pairs, no windows. Degree mode adds one counts aggregate whose
-    output joins back edge-keyed."""
-    if orient not in ("id", "degree"):
-        raise ValueError(f"orient ({orient!r}) must be 'id' or 'degree'")
+    all-pairs, no windows."""
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -821,26 +814,10 @@ def triangle_counts(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    if orient == "degree":
-        deg = (
-            und.select(F.col("u").alias("n"))
-            .unionByName(und.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
-        )
-        ranked = (
-            und.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
-            .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
-        )
-        ku = F.struct(F.col("du").alias("d"), F.col("u").alias("n"))
-        kv = F.struct(F.col("dv").alias("d"), F.col("v").alias("n"))
-        oriented = ranked.select(
-            F.when(ku < kv, F.col("u")).otherwise(F.col("v")).alias("lo"),
-            F.when(ku < kv, F.col("v")).otherwise(F.col("u")).alias("hi"),
-        )
-    else:
-        oriented = und.select(F.col("u").alias("lo"), F.col("v").alias("hi"))
-    oriented = pin(oriented, "components.triangle_counts.oriented")
+    oriented = pin(
+        und.select(F.col("u").alias("lo"), F.col("v").alias("hi")),
+        "components.triangle_counts.oriented",
+    )
     wedges = (
         oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
         .join(
@@ -1327,7 +1304,6 @@ def components_merge(
     dst: str = "doc_b",
     node_col: str = "node",
     comp_col: str = "comp",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Incremental closure on append (the ann_append_index analog for
     components): fold a batch of NEW candidate pairs into a stored
@@ -1341,10 +1317,10 @@ def components_merge(
     connected through its minimum — so one :func:`connected_components`
     run over |nodes| + |new pairs| edges (converging in ~2-3 rounds on
     the contracted topology) replaces the full pair regeneration.
-    ``src``/``dst``/``max_rounds`` pass through to
+    ``src``/``dst`` pass through to
     :func:`connected_components`. Returns the same (node, comp) shape,
     ready for :func:`components_write` with the new snapshot's
     fingerprint."""
     star = stored.select(F.col(node_col).alias(src), F.col(comp_col).alias(dst))
     edges = star.unionByName(new_pairs.select(src, dst))
-    return connected_components(edges, src=src, dst=dst, max_rounds=max_rounds)
+    return connected_components(edges, src=src, dst=dst)

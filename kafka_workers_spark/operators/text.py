@@ -1206,7 +1206,6 @@ def bigram_lm_score(
     text_col: str = "text",
     alpha: float = 1.0,
     vocab_size: int | None = None,
-    broadcast_model: bool = False,
 ):
     """CCNet-style statistical language-model quality scoring (Wenzek et
     al. 2020, "CCNet: Extracting High Quality Monolingual Datasets from
@@ -1242,23 +1241,14 @@ def bigram_lm_score(
     ships SLIM (id, prev, cur) rows against the counts tables, and the
     per-document aggregate is keyed by ``id_col``. No document payloads
     shuffle. The scoring join keys on raw tokens, so natural-language
-    Zipf skew concentrates on a few hot keys ("the"-row fan-out):
+    Zipf skew concentrates on a few hot keys ("the"-row fan-out); both
+    joins are unhinted and RELY ON AQE's skew-join split for the hot keys
+    (the engine default keeps AQE on; the hot key's probe rows are split
+    across tasks, the discipline dedup_substrings documents for hot
+    window hashes), which stays correct for reference corpora whose
+    counts tables outgrow executor memory.
 
-    - ``broadcast_model=False`` (default) leaves both joins unhinted and
-      RELIES ON AQE's skew-join split for the hot keys (the engine
-      default keeps AQE on; the hot key's probe rows are split across
-      tasks, same discipline dedup_substrings documents for hot window
-      hashes). Correct for unbounded reference corpora where the counts
-      tables can outgrow executor memory.
-    - ``broadcast_model=True`` broadcasts ``cb``/``cc``: a bigram model
-      over a bounded vocabulary is small (entries ≲ observed bigrams,
-      NOT corpus size — counts saturate), so shipping it to every
-      executor removes the scoring shuffle AND the skew with it; the
-      hot "the" rows never leave their scan tasks. Measured on the
-      Zipf-skewed stress rep (scripts/stress_dedup.py --lm, numbers in
-      PLANS.md). This is the 100 TB default whenever the model fits the
-      broadcast budget — at web scale a pruned vocab (CCNet trains on
-      Wikipedia, not the crawl) keeps it a few hundred MB. Returns one row per input document:
+    Returns one row per input document:
     ``id_col, n_bigrams, n_unseen, sum_bigram_count, sum_context_count,
     avg_logprob, ppl`` — the first five are exact integers (the
     DuckDB-oracle surface; ln() differs across engines in the last ulp,
@@ -1295,13 +1285,9 @@ def bigram_lm_score(
             F.broadcast(v_row)
         )
         v_col = F.col("__v")
-    if broadcast_model:
-        cb_j, cc_j = F.broadcast(cb), F.broadcast(cc)
-    else:
-        cb_j, cc_j = cb, cc
     joined = (
-        scored_base.join(cc_j, "__prev", "left")
-        .join(cb_j, ["__prev", "__cur"], "left")
+        scored_base.join(cc, "__prev", "left")
+        .join(cb, ["__prev", "__cur"], "left")
         .select(
             id_col,
             F.coalesce("__cb", F.lit(0)).cast("bigint").alias("__cb"),
@@ -1346,7 +1332,6 @@ def kneser_ney_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     discount: tuple[int, int] = (3, 4),
-    broadcast_model: bool = False,
 ):
     """Interpolated Kneser-Ney bigram LM scoring (Kneser & Ney, "Improved
     backing-off for m-gram language modeling", ICASSP 1995; formulation
@@ -1384,10 +1369,9 @@ def kneser_ney_score(
 
     Shape at scale: identical to :func:`bigram_lm_score` — the model is
     three vocab-bounded count tables plus a one-row T broadcast, built
-    job-free from one bigram aggregate; ``broadcast_model=True`` ships
-    all three and removes the token-keyed scoring shuffle and its Zipf
-    skew (the measured LM discipline), the default relies on AQE skew
-    splits. Returns one row per input document: ``id_col, n_bigrams,
+    job-free from one bigram aggregate; the token-keyed scoring joins are
+    unhinted and rely on AQE's skew-join split for the Zipf-hot keys.
+    Returns one row per input document: ``id_col, n_bigrams,
     n_unseen_context, n_unseen_bigram, sum_p9, avg_logprob, ppl``.
     """
     from kafka_workers_spark.operators.dedup import barrier
@@ -1424,15 +1408,11 @@ def kneser_ney_score(
     scored = (
         transition_pairs(docs, id_col, text_col) if ref_docs is not None else ref
     )
-    if broadcast_model:
-        cb_j, ctx_j, cont_j = F.broadcast(cb), F.broadcast(ctx), F.broadcast(cont)
-    else:
-        cb_j, ctx_j, cont_j = cb, ctx, cont
     d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     joined = (
-        scored.join(ctx_j, "__prev", "left")
-        .join(cb_j, ["__prev", "__cur"], "left")
-        .join(cont_j, "__cur", "left")
+        scored.join(ctx, "__prev", "left")
+        .join(cb, ["__prev", "__cur"], "left")
+        .join(cont, "__cur", "left")
         .crossJoin(F.broadcast(t_row))
         .select(
             id_col,
@@ -2006,7 +1986,6 @@ def phrase_scores(
     delta: int = 3,
     threshold: tuple[int, int] = (1, 10_000),
     min_count: int = 1,
-    broadcast_vocab: bool = False,
 ):
     """word2phrase collocation mining (Mikolov et al., "Distributed
     Representations of Words and Phrases and their Compositionality",
@@ -2036,11 +2015,9 @@ def phrase_scores(
     Shape at scale: build is JOB-FREE — unigram and pair counts are two
     partial-aggregatable token-keyed shuffles, N derives in-plan from
     the unigram table as a one-row broadcast. The scoring joins key the
-    pair table against the unigram table on lhs/rhs: vocab-bounded, so
-    ``broadcast_vocab=True`` ships the unigram counts to every executor
-    and removes both shuffles AND their Zipf hot keys ("the"-row
-    fan-out) — the :func:`bigram_lm_score` broadcast_model discipline;
-    the default relies on AQE's skew split for unbounded vocabularies.
+    pair table against the unigram table on lhs/rhs; both are unhinted
+    and rely on AQE's skew-join split for their Zipf hot keys ("the"-row
+    fan-out), as :func:`bigram_lm_score`'s scoring joins do.
 
     Reference parity: vocabulary construction lives in user task code in
     the reference (WorkerTask.java:50); this is the phrase-vocab stage
@@ -2079,11 +2056,10 @@ def phrase_scores(
         .agg(F.count("*").alias("pair_cnt"))
         .filter(F.col("pair_cnt") >= min_count)
     )
-    uni_j = F.broadcast(uni) if broadcast_vocab else uni
     d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     joined = (
-        pair_cnt.join(uni_j.select(F.col("__t").alias("lhs"), F.col("__c").alias("lhs_cnt")), "lhs")
-        .join(uni_j.select(F.col("__t").alias("rhs"), F.col("__c").alias("rhs_cnt")), "rhs")
+        pair_cnt.join(uni.select(F.col("__t").alias("lhs"), F.col("__c").alias("lhs_cnt")), "lhs")
+        .join(uni.select(F.col("__t").alias("rhs"), F.col("__c").alias("rhs_cnt")), "rhs")
         .crossJoin(F.broadcast(n_row))
     )
     lift_num = d38(F.col("pair_cnt") - F.lit(delta)) * d38(F.col("__n")) * d38(F.lit(den))

@@ -286,9 +286,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup candidate graph (operators.components.triangle_counts,
     Schank-Wagner ordered orientation): triangles separate tight
     duplicate CLIQUES from chance pairwise collisions — the local
-    clustering numerator of the dedup graph. id orientation here (the
-    oracle-replayable arm); the degree-ordered arm — the WW'11
-    last-reducer fix, identical counts — is pinned by unit test."""
+    clustering numerator of the dedup graph, oriented by node id (the
+    oracle-replayable order)."""
     from kafka_workers_spark.operators.components import triangle_counts
     from kafka_workers_spark.operators.text import shingle_stage, tokenize_stage
 

@@ -1027,9 +1027,8 @@ def text_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate.
 
     Scale shape: job-free build — two token-keyed partial-aggregate
-    shuffles; N a one-row broadcast; scoring joins vocab-bounded (the
-    broadcast_vocab escape hatch removes them entirely at 100 TB,
-    bigram_lm_score's broadcast_model discipline)."""
+    shuffles; N a one-row broadcast; scoring joins vocab-bounded and
+    unhinted, their Zipf hot keys split by AQE's skew join."""
     from kafka_workers_spark.operators.text import phrase_scores
 
     d = load_table(spark, sf_dir, "documents").select("text")

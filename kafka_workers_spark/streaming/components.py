@@ -45,14 +45,12 @@ def components_fold(
     src: str = "doc_a",
     dst: str = "doc_b",
     lineage: str | None = None,
-    max_rounds: int = 50,
 ) -> Callable[[DataFrame, int], None]:
     """The per-batch fold, exposed so tests and backfills can drive it
     directly (the scd2_fold shape): first batch closes over its own
     pairs, every later batch star-merges into the stored labeling and
     republishes the full (node, comp) mapping with one atomic swap.
-    ``src``/``dst``/``max_rounds`` pass through to
-    :func:`connected_components`.
+    ``src``/``dst`` pass through to :func:`connected_components`.
 
     The published store is the components_write layout (``mapping`` +
     version-checked ``meta``) plus the store.py batch marker
@@ -66,13 +64,11 @@ def components_fold(
     billions, the bucketed-store pattern (streaming/maintenance.py)
     applies verbatim since the mapping is key-hashed like any table."""
 
-    loop = dict(src=src, dst=dst, max_rounds=max_rounds)
-
     def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
         pairs = batch.select(src, dst)
         if stored is None:
-            return connected_components(pairs, **loop)
-        return components_merge(stored, pairs, **loop)
+            return connected_components(pairs, src=src, dst=dst)
+        return components_merge(stored, pairs, src=src, dst=dst)
 
     def write(merged: DataFrame, tmp: str) -> None:
         components_write(merged, tmp, mode="overwrite", fingerprint=lineage or "")
@@ -105,13 +101,10 @@ def streaming_components_maintenance(
     checkpoint: str,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_rounds: int = 50,
 ) -> StreamingQuery:
     """Run the components store live: every micro-batch of candidate
     pairs folds into ``store_dir``; restarting from the same checkpoint
     resumes exactly where it stopped; a DIFFERENT checkpoint pointed at
     the same store fails loudly at the first batch (the lineage
     contract all maintenance folds share)."""
-    return store.live_fold(
-        pairs, checkpoint, components_fold, store_dir, src=src, dst=dst, max_rounds=max_rounds
-    )
+    return store.live_fold(pairs, checkpoint, components_fold, store_dir, src=src, dst=dst)

@@ -278,7 +278,6 @@ def dedup_index_fold(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     lineage: str | None = None,
-    max_rounds: int = 50,
     compact_every: int | None = 16,
 ) -> Callable[[DataFrame, int], None]:
     """The per-batch ingest fold for the FULL incremental dedup loop,
@@ -302,12 +301,7 @@ def dedup_index_fold(
     if compact_every is not None and compact_every < 1:
         raise ValueError(f"compact_every ({compact_every}) must be >= 1 or None")
     params = _index_params(id_col, k, n_bands, rows_per_band, shingle_n)
-    ccfold = components_fold(
-        spark,
-        cc_store_dir,
-        lineage=lineage,
-        max_rounds=max_rounds,
-    )
+    ccfold = components_fold(spark, cc_store_dir, lineage=lineage)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         with _index_lock(index_dir):
@@ -414,7 +408,6 @@ def streaming_dedup_ingest(
     n_bands: int = 4,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    max_rounds: int = 50,
     compact_every: int | None = 16,
 ) -> StreamingQuery:
     """Run the incremental dedup loop LIVE: each micro-batch of
@@ -436,6 +429,5 @@ def streaming_dedup_ingest(
         n_bands=n_bands,
         rows_per_band=rows_per_band,
         shingle_n=shingle_n,
-        max_rounds=max_rounds,
         compact_every=compact_every,
     )

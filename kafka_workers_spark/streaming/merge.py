@@ -46,7 +46,6 @@ def merge_ordered(
     group: str,
     ts: str,
     side_col: str = "side",
-    single_scan: bool = False,
 ) -> DataFrame:
     """Batch ordered merge of a stream PAIR — the reference's exact shape;
     see :func:`merge_ordered_many` for the N-way generalization this
@@ -61,25 +60,13 @@ def merge_ordered(
     the deterministic tiebreak). The streaming form emits in that order
     per batch by construction.
 
-    Scan strategy — two shapes, both audited in ``tests/test_merge.py``:
-
-    - default (``single_scan=False``): the union is consumed twice
-      (frontier aggregate + release join), but the frontier subtree's scan
-      is column-pruned to (group, side, ts) and its shuffle is a tiny
-      partial aggregate; the broadcast join never shuffles the payload.
-      Right when payload bytes dominate (wide rows): the "second scan"
-      reads three narrow columns.
-    - ``single_scan=True``: per-side frontiers computed as window maxima
-      over ``partitionBy(group)`` — ONE scan per input, ONE full-data
-      exchange, no join. Right for narrow rows where a second scan costs
-      as much as the shuffle (ReusedExchange cannot fire on the join
-      shape: the release side's ``ts <= watermark`` condition pushes an
-      ``isnotnull(ts)`` filter the frontier subtree lacks, so the two
-      exchanges are never structurally identical).
+    Scan shape (audited in ``tests/test_merge.py``): the union is
+    consumed twice (frontier aggregate + release join), but the frontier
+    subtree's scan is column-pruned to (group, side, ts) and its shuffle
+    is a tiny partial aggregate; the broadcast join never shuffles the
+    payload, so the "second scan" reads three narrow columns.
     """
-    return merge_ordered_many(
-        {"left": left, "right": right}, group, ts, side_col=side_col, single_scan=single_scan
-    )
+    return merge_ordered_many({"left": left, "right": right}, group, ts, side_col=side_col)
 
 
 def merge_ordered_many(
@@ -87,17 +74,16 @@ def merge_ordered_many(
     group: str,
     ts: str,
     side_col: str = "side",
-    single_scan: bool = False,
 ) -> DataFrame:
     """N-way batch ordered merge: release rows up to the group's low
     watermark ``min over sides of max(seen ts)``, with EVERY side's
     frontier known (a side with no rows — or all-NULL timestamps — holds
     the whole group back, the reference's accept()-while-sibling-unknown
     rule generalized from 2 to N feeds). ``streams`` maps side name →
-    DataFrame; all sides must share a schema. Same scan strategies and
+    DataFrame; all sides must share a schema. Same scan shape and
     release semantics as :func:`merge_ordered` (its docstring is the
     contract); frontier state is one row per (group, side) — tiny at any
-    scale — and the payload is never shuffled on the default path.
+    scale — and the payload is never shuffled.
     """
     if len(streams) < 2:
         raise ValueError(f"merge needs >= 2 streams, got {list(streams)}")
@@ -106,23 +92,6 @@ def merge_ordered_many(
     for t in tagged[1:]:
         unioned = unioned.unionByName(t)
     n_sides = len(streams)
-    if single_scan:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(group)
-        maxes = [
-            F.max(F.when(F.col(side_col) == name, F.col(ts))).over(w) for name in streams
-        ]
-        all_present = maxes[0].isNotNull()
-        for m in maxes[1:]:
-            all_present = all_present & m.isNotNull()
-        # F.least skips NULLs, so the all_present guard (not least itself)
-        # is what holds a group back while any side's frontier is unknown
-        return (
-            unioned.withColumn("__lw", F.when(all_present, F.least(*maxes)))
-            .filter(F.col(ts) <= F.col("__lw"))
-            .drop("__lw")
-        )
     frontiers = (
         unioned.groupBy(group, side_col)
         .agg(F.max(ts).alias("__max_ts"))
@@ -130,8 +99,7 @@ def merge_ordered_many(
         # count NON-NULL frontiers: a side whose ts values are all NULL has
         # an unknown frontier (max ignores nulls) and must buffer its
         # siblings, exactly like a side with no rows — matching the
-        # single_scan branch's isNotNull guard and the reference's accept()
-        # while timestamps.get(otherPartition) == null
+        # reference's accept() while timestamps.get(otherPartition) == null
         .agg(F.min("__max_ts").alias("__low_watermark"), F.count("__max_ts").alias("__n_sides"))
     )
     released = (
@@ -140,8 +108,7 @@ def merge_ordered_many(
         .filter((F.col("__n_sides") >= n_sides) & (F.col(ts) <= F.col("__low_watermark")))
         .drop("__low_watermark", "__n_sides")
         # join(group) moves the group column first; restore the union's
-        # column order so both scan strategies yield one schema shape
-        # (positional consumers: union by position, insertInto)
+        # column order (positional consumers: union by position, insertInto)
         .select(*unioned.columns)
     )
     return released

@@ -92,6 +92,16 @@ def _coerce_to_schema(row: pd.DataFrame, schema_obj: StructType) -> pd.DataFrame
     return out
 
 
+def _apply_each(
+    fn: Callable[[pd.DataFrame], pd.DataFrame], batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    # module-level, so the pickled runner references this module and a
+    # Python worker that unpickles it imports the package (whose __init__
+    # installs session._install_zip_stat_check)
+    for pdf in batches:
+        yield fn(pdf)
+
+
 def transform_batches(
     df: DataFrame,
     fn: Callable[[pd.DataFrame], pd.DataFrame],
@@ -120,9 +130,7 @@ def transform_batches(
     if guarantee == AT_LEAST_ONCE:
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = fn(pdf)
-                yield out
+            return _apply_each(fn, batches)
 
         return df.mapInPandas(run, schema)
 

@@ -398,9 +398,8 @@ def run_lm_stress(replicas: int) -> int:
     # Zipfian, so the scoring join's __prev key is skewed by construction.
     # Build a corpus with the skew cranked: token ids ~ floor(1/u) capped,
     # u deterministic-uniform — P(t1) = 50%, so the (t1, t1) bigram is
-    # ~25% of ALL transitions, one brutal hot key. Compare the default
-    # shuffle join (AQE skew split) against broadcast_model=True, which
-    # removes the by-key shuffle (and therefore the skew) entirely.
+    # ~25% of ALL transitions, one brutal hot key, which the unhinted
+    # scoring joins leave to AQE's skew split.
     import duckdb
 
     zipf_dir = "/tmp/kws_zipf"
@@ -424,36 +423,30 @@ def run_lm_stress(replicas: int) -> int:
     con.close()
     zdocs = load_table(spark, zipf_dir, "documents").select("doc_id", "text")
     zdocs.count()
-    outcomes = {}
-    for bcast in (False, True):
-        tag = "zipf-broadcast" if bcast else "zipf-shuffle"
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        t0 = time.perf_counter()
-        stats = (
-            bigram_lm_score(zdocs, broadcast_model=bcast)
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("n_bigrams").alias("transitions"),
-                F.sum("n_unseen").alias("unseen"),
-                F.sum("sum_bigram_count").alias("sbc"),
-                F.sum("sum_context_count").alias("scc"),
-            )
-            .first()
+    tag = "zipf-shuffle"
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    t0 = time.perf_counter()
+    stats = (
+        bigram_lm_score(zdocs)
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum("n_bigrams").alias("transitions"),
+            F.sum("sum_bigram_count").alias("sbc"),
+            F.sum("sum_context_count").alias("scc"),
         )
-        wall = time.perf_counter() - t0
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        worst = _max_task_ms(spark, tag)
-        outcomes[tag] = tuple(stats)
-        print(
-            f"bigram_lm_score {tag:14s} wall={wall:6.2f}s max_task="
-            f"{'n/a' if worst is None else f'{worst / 1000.0:.2f}s'} "
-            f"docs={stats.rows} transitions={stats.transitions} "
-            f"sbc={stats.sbc} scc={stats.scc}",
-            flush=True,
-        )
-    a, b = outcomes.values()
-    assert a == b, f"broadcast path diverged from shuffle path: {outcomes}"
+        .first()
+    )
+    wall = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    worst = _max_task_ms(spark, tag)
+    print(
+        f"bigram_lm_score {tag:14s} wall={wall:6.2f}s max_task="
+        f"{'n/a' if worst is None else f'{worst / 1000.0:.2f}s'} "
+        f"docs={stats.rows} transitions={stats.transitions} "
+        f"sbc={stats.sbc} scc={stats.scc}",
+        flush=True,
+    )
     spark.stop()
     return 0
 
@@ -546,10 +539,9 @@ def run_phrase_stress() -> int:
     """Zipf-skew rep for phrase_scores: the same deterministic Zipf
     corpus as the --lm rep (P(t1) = 50%, the (t1, t1) pair ~25% of all
     adjacent pairs), so the unigram scoring joins carry one brutal hot
-    lhs/rhs key. Compares the default shuffle path (AQE skew split)
-    against broadcast_vocab=True (no token-keyed join at all) and
-    asserts bit-identical outputs — the bigram_lm_score stress shape
-    applied to the collocation miner."""
+    lhs/rhs key, which the unhinted scoring joins leave to AQE's skew
+    split — the bigram_lm_score stress shape applied to the collocation
+    miner."""
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -590,36 +582,29 @@ def run_phrase_stress() -> int:
     con.close()
     zdocs = load_table(spark, zipf_dir, "documents").select("doc_id", "text")
     zdocs.count()
-    outcomes = {}
-    for bcast in (False, True):
-        tag = "phr-broadcast" if bcast else "phr-shuffle"
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        t0 = time.perf_counter()
-        stats = (
-            phrase_scores(zdocs, delta=2, threshold=(11, 10), broadcast_vocab=bcast)
-            .agg(
-                F.count("*").alias("pairs"),
-                F.sum("pair_cnt").alias("occurrences"),
-                F.sum(F.col("is_phrase").cast("bigint")).alias("phrases"),
-                F.sum("lhs_cnt").alias("slc"),
-                F.sum("rhs_cnt").alias("src_"),
-            )
-            .first()
+    tag = "phr-shuffle"
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    t0 = time.perf_counter()
+    stats = (
+        phrase_scores(zdocs, delta=2, threshold=(11, 10))
+        .agg(
+            F.count("*").alias("pairs"),
+            F.sum("pair_cnt").alias("occurrences"),
+            F.sum(F.col("is_phrase").cast("bigint")).alias("phrases"),
         )
-        wall = time.perf_counter() - t0
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        worst = _max_task_ms(spark, tag)
-        outcomes[tag] = tuple(stats)
-        print(
-            f"phrase_scores {tag:14s} wall={wall:6.2f}s max_task="
-            f"{'n/a' if worst is None else f'{worst / 1000.0:.2f}s'} "
-            f"pairs={stats.pairs} occurrences={stats.occurrences} "
-            f"phrases={stats.phrases}",
-            flush=True,
-        )
-    a, b = outcomes.values()
-    assert a == b, f"broadcast path diverged from shuffle path: {outcomes}"
+        .first()
+    )
+    wall = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    worst = _max_task_ms(spark, tag)
+    print(
+        f"phrase_scores {tag:14s} wall={wall:6.2f}s max_task="
+        f"{'n/a' if worst is None else f'{worst / 1000.0:.2f}s'} "
+        f"pairs={stats.pairs} occurrences={stats.occurrences} "
+        f"phrases={stats.phrases}",
+        flush=True,
+    )
     spark.stop()
     return 0
 

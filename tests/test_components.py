@@ -8,6 +8,7 @@ range algebra: semantic model as test oracle, SURVEY.md §5).
 
 from __future__ import annotations
 
+import itertools
 import random
 
 import pytest
@@ -498,8 +499,9 @@ def test_sorted_neighborhood_window_and_payloads(spark):
 
 def test_triangle_counts_known_answers_and_degree_orientation(spark):
     """K4 (every node in 3 triangles), a path and a star (none), a
-    bridge of two triangles; degree orientation == id orientation on
-    random graphs (the WW'11 claim)."""
+    bridge of two triangles; a random graph matches a brute-force count
+    over all node triples. (The name predates the removal of the
+    degree-ordered arm.)"""
     from kafka_workers_spark.operators.components import triangle_counts
 
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
@@ -518,11 +520,14 @@ def test_triangle_counts_known_answers_and_degree_orientation(spark):
     rng = random.Random(13)
     edges = list({(rng.randint(0, 30), rng.randint(0, 30)) for _ in range(120)})
     df = spark.createDataFrame(edges, "src long, dst long")
-    by_id = sorted((r.node, r.n_triangles) for r in triangle_counts(df, orient="id").collect())
-    by_deg = sorted((r.node, r.n_triangles) for r in triangle_counts(df, orient="degree").collect())
-    assert by_id == by_deg and by_id
-    with pytest.raises(ValueError, match="orient"):
-        triangle_counts(df, orient="nope")
+    adj = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    want: dict[int, int] = {}
+    for a, b, c in itertools.combinations(sorted({n for e in adj for n in e}), 3):
+        if (a, b) in adj and (b, c) in adj and (a, c) in adj:
+            for n in (a, b, c):
+                want[n] = want.get(n, 0) + 1
+    got = {r.node: r.n_triangles for r in triangle_counts(df).collect()}
+    assert got == want and want
 
 
 def test_pagerank_weighted_matches_python_and_degenerates_to_uniform(spark):

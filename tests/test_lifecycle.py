@@ -7,6 +7,9 @@ option semantics (README.md:105-283)."""
 
 from __future__ import annotations
 
+import dataclasses
+import typing
+
 import pytest
 
 from kafka_workers_spark.session import WorkersConfig
@@ -204,6 +207,40 @@ def test_kafka_options_guarantee_none_tolerates_loss():
 def test_kafka_options_require_topics():
     with pytest.raises(ValueError):
         kafka_options(WorkersConfig())
+
+
+#: probe values for fields whose valid settings are constrained; every
+#: other field is probed by its annotated type (int -> 7, str -> "7")
+_PROBE = {
+    "master": "spark://h:7077",
+    "topics": ["u"],
+    "guarantee": "none",
+    "state_store": "rocksdb",
+    "extra_confs": {"spark.k": "v"},
+}
+#: settings a field is only meaningful with, applied to both sides
+_WITH = {"max_trigger_delay": {"min_offsets_per_trigger": 100}}
+
+
+@pytest.mark.parametrize(
+    "name", [f.name for f in dataclasses.fields(WorkersConfig) if f.name != "app_name"]
+)
+def test_every_workers_config_field_changes_the_engine(name):
+    """A WorkersConfig field that neither ``spark_confs()`` nor
+    ``kafka_options`` reads is a dead knob: setting it to a non-default
+    value must change one of the two."""
+    if name in _PROBE:
+        value = _PROBE[name]
+    else:
+        hint = typing.get_type_hints(WorkersConfig)[name]
+        kind = next(t for t in typing.get_args(hint) or (hint,) if t is not type(None))
+        value = {int: 7, str: "7"}[kind]
+
+    def engine(**kw):
+        cfg = WorkersConfig(**{"topics": ["t"], **_WITH.get(name, {}), **kw})
+        return cfg.spark_confs(), kafka_options(cfg)
+
+    assert engine(**{name: value}) != engine(), f"WorkersConfig.{name} is read by nothing"
 
 
 def test_kafka_sink_options():

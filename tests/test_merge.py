@@ -34,6 +34,9 @@ def _sides(spark):
 def test_merge_golden_sequence(spark):
     one, two = _sides(spark)
     released = merge_ordered(one, two, group="pair", ts="ts")
+    # the union's column order (positional consumers: union by position,
+    # insertInto), not the join's group-first order
+    assert released.columns == ["pair", "ts", "side"]
     p0 = [r.ts for r in released.filter("pair = 0").orderBy("ts", "side").collect()]
     assert p0 == EXPECTED_P0
 
@@ -184,29 +187,6 @@ def test_merge_streaming_carries_payload_columns(spark, tmp_path):
     ], got
 
 
-def test_merge_single_scan_plans_one_exchange(spark):
-    """VERDICT r01 #10: single_scan=True plans each input ONE scan and ONE
-    full-data exchange (window frontier), no join — vs the default's two
-    consumptions of the union."""
-    from kafka_workers_spark.plans import audit
-
-    one, two = _sides(spark)
-    released = merge_ordered(one, two, group="pair", ts="ts", single_scan=True)
-    # ADVICE r02: both scan strategies must expose the same column ORDER
-    # (positional consumers: union by position, insertInto)
-    assert released.columns == merge_ordered(one, two, group="pair", ts="ts").columns
-    a = audit(released)
-    assert a.exchanges == 1, a.text[:1200]
-    assert a.broadcast_joins == 0 and a.sortmerge_joins == 0
-    import re
-
-    assert len(re.findall(r"^\(\d+\) Scan ExistingRDD", a.text, re.MULTILINE)) == 2, a.text[:1200]
-    # and the semantics are unchanged
-    p0 = [r.ts for r in released.filter("pair = 0").orderBy("ts", "side").collect()]
-    assert p0 == EXPECTED_P0
-    assert released.filter("pair = 1").count() == 0
-
-
 @pytest.mark.slow
 def test_merge_stream_ttl_flushes_buffer(spark, tmp_path):
     """ADVICE r01: state TTL must FLUSH the unreleased tail (at-least-once),
@@ -261,8 +241,7 @@ def test_merge_stream_ttl_flushes_buffer(spark, tmp_path):
 def test_merge_release_rule_property(spark):
     """Property (hypothesis-driven data, one Spark round-trip): for random
     two-sided inputs, the released set is EXACTLY the rows at or below
-    their group's low watermark min(max_left, max_right) — and the
-    single_scan plan releases the identical set with the identical schema.
+    their group's low watermark min(max_left, max_right).
 
     Spark jobs are too slow for per-example hypothesis runs, so examples
     are generated up front and checked in one union job."""
@@ -288,10 +267,6 @@ def test_merge_release_rule_property(spark):
             (r.pair, r.side, r.ts)
             for r in merge_ordered(one, two, group="pair", ts="ts").collect()
         }
-        got_ss = {
-            (r.pair, r.side, r.ts)
-            for r in merge_ordered(one, two, group="pair", ts="ts", single_scan=True).collect()
-        }
         # oracle: pure-python release rule
         lmax, rmax = {}, {}
         for g, t in (left or [(99, 0)]):
@@ -303,23 +278,20 @@ def test_merge_release_rule_property(spark):
             for g, t in data:
                 if g in lmax and g in rmax and t <= min(lmax[g], rmax[g]):
                     want.add((g, side, t))
-        assert got == want, f"case {case}: default path"
-        assert got_ss == want, f"case {case}: single_scan path"
+        assert got == want, f"case {case}"
 
 
 def test_merge_null_frontier_side_buffers_sibling(spark):
     """A side whose ts values are all NULL has an UNKNOWN frontier: both
-    scan strategies must release nothing (the default join branch used to
-    treat the null frontier as caught-up and release the sibling)."""
+    merge must release nothing (the join used to treat the null frontier
+    as caught-up and release the sibling)."""
     from kafka_workers_spark.streaming.merge import merge_ordered
 
     left = spark.createDataFrame(
         [(1, None), (1, None)], "pair int, ts long"
     )
     right = spark.createDataFrame([(1, 3), (1, 5)], "pair int, ts long")
-    for single_scan in (False, True):
-        out = merge_ordered(left, right, "pair", "ts", single_scan=single_scan)
-        assert out.count() == 0, f"single_scan={single_scan} released rows"
+    assert merge_ordered(left, right, "pair", "ts").count() == 0
 
 
 def test_merge_ordered_many_three_way(spark):
@@ -334,14 +306,11 @@ def test_merge_ordered_many_three_way(spark):
     # group 0 frontiers: a=40, b=35, c=30 -> low watermark 30:
     # released = {a:10, b:20, c:30}; a:40 and b:35 buffered.
     # group 1 exists only on side a -> nothing released.
-    for single_scan in (False, True):
-        out = sorted(
-            (r.g, r.t, r.side)
-            for r in merge_ordered_many(
-                {"a": a, "b": b, "c": c}, "g", "t", single_scan=single_scan
-            ).collect()
-        )
-        assert out == [(0, 10, "a"), (0, 20, "b"), (0, 30, "c")], (single_scan, out)
+    out = sorted(
+        (r.g, r.t, r.side)
+        for r in merge_ordered_many({"a": a, "b": b, "c": c}, "g", "t").collect()
+    )
+    assert out == [(0, 10, "a"), (0, 20, "b"), (0, 30, "c")], out
 
     import pytest
 
@@ -499,8 +468,7 @@ def test_merge_ordered_many_nway_release_rule_property(spark):
     """Property (hypothesis-generated data, batched Spark round-trips):
     the N-way BATCH merge releases exactly the rows at or below their
     group's min-over-all-sides frontier, with NULL-ts and absent sides
-    holding the whole group — on both scan strategies (VERDICT r04 #7's
-    batch arm; generalizes test_merge_release_rule_property to N>2 and
+    holding the whole group (VERDICT r04 #7's batch arm; generalizes test_merge_release_rule_property to N>2 and
     NULL frontiers)."""
     from hypothesis import strategies as st
 
@@ -539,11 +507,8 @@ def test_merge_ordered_many_nway_release_rule_property(spark):
                 fronts = [fr.get((g, m)) for m in names]
                 if all(f is not None for f in fronts) and t <= min(fronts):
                     want.add((g, n, t))
-        for single_scan in (False, True):
-            got = {
-                (r.pair, r.side, r.ts)
-                for r in merge_ordered_many(
-                    frames, group="pair", ts="ts", single_scan=single_scan
-                ).collect()
-            }
-            assert got == want, f"case {case}, single_scan={single_scan}"
+        got = {
+            (r.pair, r.side, r.ts)
+            for r in merge_ordered_many(frames, group="pair", ts="ts").collect()
+        }
+        assert got == want, f"case {case}"

@@ -691,29 +691,6 @@ def test_dedup_substrings_rejects_degenerate_k(spark):
             dedup_substrings(docs, k=bad)
 
 
-def test_bigram_lm_broadcast_model_identical_and_plan_shuffle_free(spark):
-    """broadcast_model=True must be output-identical to the default
-    shuffle path (it is ONLY a physical-plan choice), and its scoring
-    joins must actually broadcast — no SortMergeJoin over the token keys
-    in the plan."""
-    from kafka_workers_spark.operators.text import bigram_lm_score
-    from kafka_workers_spark.sources.files import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    base = bigram_lm_score(docs)
-    bcast = bigram_lm_score(docs, broadcast_model=True)
-    ints = ["doc_id", "n_bigrams", "n_unseen", "sum_bigram_count", "sum_context_count"]
-    assert sorted(map(tuple, base.select(ints).collect())) == sorted(
-        map(tuple, bcast.select(ints).collect())
-    )
-    plan = bcast._jdf.queryExecution().executedPlan().toString()
-    # the scoring joins (on __prev / __prev+__cur) are broadcast-hash;
-    # the final docs-side left join on doc_id may still sort-merge
-    assert "BroadcastHashJoin" in plan
-
-
 def _py_dsir_reference(rows, target_mod=10, n_buckets=4096, alpha=1.0):
     """Plain-Python DSIR reference model (Xie et al. 2023): hashed
     unigram+bigram counts, add-alpha smoothed target/background bucket
@@ -977,24 +954,6 @@ def test_phrase_scores_known_answer(spark):
     assert cs.score == 0.0 and not cs.is_phrase
 
 
-def test_phrase_scores_broadcast_vocab_identical_and_plan(spark):
-    """broadcast_vocab=True is ONLY a physical-plan choice: identical
-    rows, and the unigram joins become broadcast-hash (the
-    bigram_lm_score broadcast_model contract)."""
-    from kafka_workers_spark.operators.text import phrase_scores
-    from kafka_workers_spark.sources.files import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select("text")
-    base = phrase_scores(docs, min_count=2)
-    bcast = phrase_scores(docs, min_count=2, broadcast_vocab=True)
-    cols = ["lhs", "rhs", "pair_cnt", "lhs_cnt", "rhs_cnt", "is_phrase"]
-    assert sorted(map(tuple, base.select(cols).collect())) == sorted(
-        map(tuple, bcast.select(cols).collect())
-    )
-    plan = bcast._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_phrase_scores_rejects_bad_params(spark):
     from kafka_workers_spark.operators.text import phrase_scores
 
@@ -1234,20 +1193,6 @@ def test_kneser_ney_matches_python_reference_with_unseen_paths(spark):
     assert got == _kn_python_reference(corpus, ref_ids)
     # the unseen paths actually fired
     assert got[4][2] > 0 and got[5][1] > 0
-
-
-def test_kneser_ney_broadcast_model_identical(spark):
-    from kafka_workers_spark.operators.text import kneser_ney_score
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma t{i} alpha beta") for i in range(20)],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, kneser_ney_score(docs).select(
-        "doc_id", "sum_p9").collect()))
-    b = sorted(map(tuple, kneser_ney_score(docs, broadcast_model=True).select(
-        "doc_id", "sum_p9").collect()))
-    assert a == b
 
 
 def test_kneser_ney_guards(spark):

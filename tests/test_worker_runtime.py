@@ -19,11 +19,13 @@ import zipimport
 
 import pandas as pd
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_workers_spark.session import _install_zip_stat_check
 from kafka_workers_spark.streaming.gate import _gate_handler
 from kafka_workers_spark.streaming.merge import _merge_handler
 from kafka_workers_spark.streaming.stateful import WorkerTask, _task_handler, replay_worker_task
+from kafka_workers_spark.streaming.tasks import AT_LEAST_ONCE, NONE, transform_batches
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -202,6 +204,22 @@ def test_reused_worker_skips_unchanged_archives(spark):
     assert (second["reads"] == 0).all(), second.to_string()
 
 
+def _imports_package_when_unpickled(fn) -> bool:
+    """Whether a fresh interpreter that unpickles ``fn`` (as a worker
+    does) has imported ``kafka_workers_spark``."""
+    from pyspark import cloudpickle
+
+    probe = (
+        "import pickle, sys; sys.path.insert(0, sys.argv[1]); "
+        "pickle.loads(sys.stdin.buffer.read()); print('kafka_workers_spark' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe, _REPO], input=cloudpickle.dumps(fn),
+        capture_output=True, check=True,
+    )
+    return out.stdout.decode().strip() == "True"
+
+
 @pytest.mark.parametrize(
     "handler",
     [
@@ -215,14 +233,20 @@ def test_live_stateful_handler_imports_the_package_when_unpickled(handler):
     """A worker installs the wrapper when it unpickles a library UDF: the
     live stateful handlers' pickles must reference a library module, so a
     fresh interpreter that loads one has imported ``kafka_workers_spark``."""
-    from pyspark import cloudpickle
+    assert _imports_package_when_unpickled(handler())
 
-    probe = (
-        "import pickle, sys; sys.path.insert(0, sys.argv[1]); "
-        "pickle.loads(sys.stdin.buffer.read()); print('kafka_workers_spark' in sys.modules)"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", probe, _REPO], input=cloudpickle.dumps(handler()),
-        capture_output=True, check=True,
-    )
-    assert out.stdout.decode().strip() == "True"
+
+@pytest.mark.parametrize("guarantee", [AT_LEAST_ONCE, NONE])
+def test_transform_batches_function_imports_the_package_when_unpickled(guarantee):
+    """The stateless task runner's ``mapInPandas`` function, for both
+    guarantees, references a library module even when the user transform
+    references none, so its worker installs the wrapper too."""
+
+    class Capture:
+        def mapInPandas(self, func, schema):  # noqa: N802
+            self.func = func
+
+    df = Capture()
+    schema = StructType([StructField("x", LongType()), StructField("__error", StringType())])
+    transform_batches(df, lambda pdf: pdf, schema, guarantee=guarantee)
+    assert _imports_package_when_unpickled(df.func)
