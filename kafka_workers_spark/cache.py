@@ -12,7 +12,7 @@
 Every pin is a lineage-preserving ``MEMORY_AND_DISK`` persist, so freeing
 a frame under a concurrent in-flight consumer degrades to recompute,
 never to failure. Lineage-truncating checkpoints stay at the loops that
-need them (connected_components, bpe_train_plan, kcenter_coreset); only
+need them (connected_components, the BPE trainers, kcenter_coreset); only
 their freeing comes through here.
 """
 

@@ -15,8 +15,11 @@ double expressions — all bit-identical across engines.
 
 from __future__ import annotations
 
+import functools
+import heapq
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -1768,8 +1771,8 @@ def _bpe_apply_merge_cols(symbols: Column, left: Column, right: Column) -> Colum
     pair merges, the new symbol's string (left||right, never empty on
     the right) differs from ``left``, so the fold cannot re-consume it.
     ``left``/``right`` are COLUMNS so the rule can come off a broadcast
-    1-row argmax frame (bpe_train_plan) as well as a Python literal
-    (bpe_train)."""
+    1-row argmax frame (bpe_train_plan) as well as a literal
+    (bpe_train). :func:`_bpe_merge_pair` is the same rule in Python."""
     merged = F.concat(left, right)
     return F.aggregate(
         symbols,
@@ -1781,10 +1784,133 @@ def _bpe_apply_merge_cols(symbols: Column, left: Column, right: Column) -> Colum
     )
 
 
-def _bpe_apply_merge(symbols: Column, left: str, right: str) -> Column:
-    """Literal-rule form of :func:`_bpe_apply_merge_cols` (the driver
-    loop's path, where the argmax was collected to Python)."""
-    return _bpe_apply_merge_cols(symbols, F.lit(left), F.lit(right))
+def _bpe_merge_pair(syms: list[str], left: str, right: str) -> list[str]:
+    """:func:`_bpe_apply_merge_cols`'s rule over a Python symbol list:
+    every (left, right) occurrence, scanned left to right, becomes
+    ``left + right``; an overlap resolves left-first. The one Python
+    form of the rule, shared by training (:func:`_bpe_merges`) and
+    encoding (:func:`_bpe_encode_word`)."""
+    out, i, n = [], 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _bpe_merges(
+    words: list[str], counts: list[int], n_merges: int, min_pair_count: int = 1
+) -> list[tuple[str, str, int]]:
+    """Sennrich's loop over a ``(word, count)`` vocabulary in one place:
+    up to ``n_merges`` ``(left, right, cnt)`` rules, each the most
+    frequent adjacent pair weighted by word count, ties to the smallest
+    ``(left, right)`` in code-point order (Spark's and DuckDB's string
+    order), merged everywhere with :func:`_bpe_merge_pair`. Stops early
+    when no pair is left or the best count is below ``min_pair_count``.
+    Words split into code points (``list(word)``, as Spark's
+    ``split(word, '')``); counts are Python ints, so they cannot wrap.
+
+    Pair counts are kept incrementally: a merge rewrites only the words
+    holding its pair (a pair → word-index map) and re-counts their
+    pairs; the argmax is a heap of ``(-cnt, left, right)`` whose stale
+    entries (count since changed) are skipped when they surface."""
+    vocab = [list(w) for w in words]
+    pairs: dict[tuple[str, str], int] = {}
+    where: dict[tuple[str, str], set[int]] = {}
+    for wi, syms in enumerate(vocab):
+        for p in zip(syms, syms[1:]):
+            pairs[p] = pairs.get(p, 0) + counts[wi]
+            where.setdefault(p, set()).add(wi)
+    heap = [(-c, l, r) for (l, r), c in pairs.items()]
+    heapq.heapify(heap)
+    merges: list[tuple[str, str, int]] = []
+    while len(merges) < n_merges:
+        while heap and pairs.get(heap[0][1:]) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap or -heap[0][0] < min_pair_count:
+            break
+        neg, left, right = heapq.heappop(heap)
+        merges.append((left, right, -neg))
+        changed: set[tuple[str, str]] = set()
+        for wi in where.pop((left, right)):
+            old = vocab[wi]
+            new = _bpe_merge_pair(old, left, right)
+            vocab[wi] = new
+            n = counts[wi]
+            for p in zip(old, old[1:]):
+                pairs[p] -= n
+                changed.add(p)
+            for p in zip(new, new[1:]):
+                pairs[p] = pairs.get(p, 0) + n
+                changed.add(p)
+            olds = set(zip(old, old[1:]))
+            news = set(zip(new, new[1:]))
+            for p in olds - news:
+                if p in where:
+                    where[p].discard(wi)
+            for p in news - olds:
+                where.setdefault(p, set()).add(wi)
+        for p in changed:
+            c = pairs[p]
+            if c:
+                heapq.heappush(heap, (-c, *p))
+            else:
+                del pairs[p]
+                where.pop(p, None)
+    return merges
+
+
+_BPE_MERGE_TABLE = pa.schema([
+    ("merge_rank", pa.int32()),
+    ("lhs", pa.string()),
+    ("rhs", pa.string()),
+    ("merged", pa.string()),
+    ("cnt", pa.int64()),
+])
+
+
+def _bpe_train_task(n_merges: int, batches):
+    """``mapInArrow`` body of :func:`bpe_train_plan`'s one-task path:
+    the partition's ``(word, n)`` rows in, the merge table out.
+    Module-level, so the pickled task references this module and the
+    Python worker that unpickles it imports the package (whose
+    ``__init__`` installs ``session._install_zip_stat_check``)."""
+    words: list[str] = []
+    counts: list[int] = []
+    for b in batches:
+        words += b.column("word").to_pylist()
+        counts += b.column("n").to_pylist()
+    merges = _bpe_merges(words, counts, n_merges)
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(1, len(merges) + 1), pa.int32()),
+            pa.array([m[0] for m in merges], pa.string()),
+            pa.array([m[1] for m in merges], pa.string()),
+            pa.array([m[0] + m[1] for m in merges], pa.string()),
+            pa.array([m[2] for m in merges], pa.int64()),
+        ],
+        schema=_BPE_MERGE_TABLE,
+    )
+
+
+#: Word-count tables (distinct pre-tokens) up to this many rows are
+#: trained in one place — one Python task (:func:`bpe_train_plan`) or
+#: the driver (:func:`bpe_train`) — instead of one Spark round per
+#: merge. Measured with ``bpe_train_plan(n_merges=8)`` plus a collect on
+#: generated corpora (random 3–10 letter words, Zipf-like repeats;
+#: local[3] on 4 cores, 3 shuffle partitions, 3 GB driver, 1-min load
+#: 2–3; one-task vs loop, cold then warm rep):
+#:   V = 10^4     0.8-4.5 s vs  6.1-9.6 s
+#:   V = 10^5     1.2 s     vs 16.4-17.6 s
+#:   V = 2.8·10^5 2.6-2.9 s vs 18.4-20.9 s
+#:   V = 8.8·10^5 7.5-7.6 s vs 48-60 s
+#: No crossover; the limit sits under the largest size measured, where
+#: the task's Python heap peaked at 511 MB (tracemalloc, 7.9·10^5
+#: words; the arrow input was 14 MB).
+_LOCAL_MAX_WORDS = 800_000
 
 
 def bpe_train(
@@ -1799,28 +1925,55 @@ def bpe_train(
     frequent pair everywhere, repeats. Ties break lexicographically on
     (left, right) — deterministic across runs, partitionings, and
     engines (the registered ``text_bpe_pairs`` query oracle-checks the
-    pair-count table; the merge loop itself is differential-tested
-    against a plain-Python reference, the bigram-LM float discipline
-    applied to control flow).
+    pair-count table; the merge rules are differential-tested against a
+    plain-Python reference and against the forced Spark loop).
 
-    This is the package's one ITERATIVE driver loop (like no other
-    operator here), and what it buys over the lazily-unrolled
-    :func:`bpe_train_plan` is data-dependent CONTROL FLOW: early stop
-    at ``min_pair_count`` and rule counts in the tens of thousands
-    (where an unrolled plan tree would be absurd) — one small 1-row
-    action per merge is the honest cost, and it is the standard
-    cost: every published BPE trainer iterates. Scale shape: the corpus
-    is touched ONCE (the word-count aggregate); all ``n_merges``
-    iterations then run on the persisted vocab-sized symbol frame
-    (Zipf-bounded), each a codegen'd pair count + a 1-row argmax
-    collect + an in-plan fold rewrite. Stops early when no pair reaches
-    ``min_pair_count``. Returns the ordered merge list — persist it as
-    a table and feed :func:`bpe_encode`. For a FIXED small rule count
-    (dashboards, the oracle-checked query) see :func:`bpe_train_plan`,
-    which expresses the same rounds as one collect-free Spark plan."""
+    EAGER, and what it buys over the lazy :func:`bpe_train_plan` is
+    data-dependent CONTROL FLOW: early stop at ``min_pair_count`` and
+    rule counts in the tens of thousands. The corpus is touched ONCE
+    (the word-count aggregate, checkpointed and counted). A vocabulary of at
+    most ``_LOCAL_MAX_WORDS`` words is collected and trained on the
+    driver by :func:`_bpe_merges` — no Spark job per merge. A larger one
+    runs one round per merge on a held vocab-sized symbol frame: a
+    codegen'd pair count + a 1-row argmax collect + an in-plan fold
+    rewrite (:func:`_bpe_apply_merge_cols` with the rule as literals).
+    Stops early when no pair reaches ``min_pair_count``. Returns the
+    ordered merge list — persist it as a table and feed
+    :func:`bpe_encode`."""
+    from kafka_workers_spark.cache import release
+
+    wc = bpe_word_counts(docs, text_col).localCheckpoint(eager=False)
+    try:
+        if _count_in_one_job(wc) <= _LOCAL_MAX_WORDS:
+            t = wc.toArrow()
+            merges = _bpe_merges(
+                t.column("word").to_pylist(), t.column("n").to_pylist(),
+                n_merges, min_pair_count,
+            )
+            return [(left, right) for left, right, _ in merges]
+        return _bpe_train_loop(wc, n_merges, min_pair_count)
+    finally:
+        release(wc)
+
+
+def _count_in_one_job(df) -> int:
+    """Row count of a lazily checkpointed frame in ONE Spark job, the one
+    that materializes the checkpoint: a count over the executed plan's
+    rows. ``df.count()`` adds a second job for its global aggregate's
+    exchange, and a pinned (persisted) frame a third, for AQE's
+    table-cache stage. Spark Connect has no executed plan to count, so
+    it falls back to ``count()``."""
+    try:
+        return df._jdf.queryExecution().toRdd().count()  # noqa: SLF001
+    except AttributeError:
+        return df.count()
+
+
+def _bpe_train_loop(wc, n_merges: int, min_pair_count: int) -> list[tuple[str, str]]:
+    """:func:`bpe_train`'s round loop over the checkpointed word counts
+    ``wc``; the caller releases ``wc``."""
     from kafka_workers_spark.cache import hold, release
 
-    wc = bpe_word_counts(docs, text_col)
     syms = hold(wc.select(F.split("word", "").alias("symbols"), "n"))
     merges: list[tuple[str, str]] = []
     try:
@@ -1835,9 +1988,9 @@ def bpe_train(
             merges.append((top.left, top.right))
             nxt = hold(
                 syms.select(
-                    _bpe_apply_merge(F.col("symbols"), top.left, top.right).alias(
-                        "symbols"
-                    ),
+                    _bpe_apply_merge_cols(
+                        F.col("symbols"), F.lit(top.left), F.lit(top.right)
+                    ).alias("symbols"),
                     "n",
                 )
             )
@@ -1850,32 +2003,39 @@ def bpe_train(
 
 
 def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
-    """Fixed-round BPE training as ONE lazy Spark plan — zero driver
-    collects: round k's argmax pair is a 1-row ``orderBy(cnt DESC,
-    left, right).limit(1)`` frame (TakeOrderedAndProject), broadcast
-    cross-joined onto the vocab-sized symbol frame so the merge rule is
-    applied as COLUMNS inside the codegen'd fold. The data-dependent
-    part of Sennrich's Algorithm 1 is only WHICH pair each round picks,
-    and a broadcast 1-row join expresses exactly that without ever
-    surfacing the pair to the driver — the same move the kmeans chains
-    use for data-dependent centroids.
+    """Fixed-round BPE training (no early stop) returning the merge
+    table ``(merge_rank, lhs, rhs, merged, cnt)``, one row per round.
 
-    Returns ``(merge_rank, lhs, rhs, merged, cnt)`` — the ordered merge
-    table, one row per round. Plan shape: round k+1 references round
-    k's symbols BOTH directly and through its argmax, so the naive
-    lazy tree doubles per round (measured: ~28 s of pure driver-side
-    analysis at 8 rounds) — exactly the connected_components case, and
-    it gets the same cut: a LAZY localCheckpoint per round truncates
-    lineage at the vocab-sized symbol frame (Zipf-bounded — the one
-    frame here that is small by construction), making build and
-    execution linear in rounds while keeping the zero-collect
-    property. Production rule counts use :func:`bpe_train`'s driver
-    loop."""
-    wc = bpe_word_counts(docs, text_col)
-    # round 1 references syms twice (argmax broadcast + merge fold); the
-    # lazy pin stops the corpus word count re-deriving per reference
+    The word-count table is lazily checkpointed and counted at call
+    time, in the one job the build runs (:func:`_count_in_one_job`; it
+    also materializes the checkpoint), and the count picks the plan:
+
+    - At most ``_LOCAL_MAX_WORDS`` words: the table is coalesced
+      to one partition and one ``mapInArrow`` task runs Sennrich's loop
+      over it (:func:`_bpe_merges`, the same solver :func:`bpe_train`
+      uses on the driver). No round is a Spark job.
+    - More: one collect-free Spark plan unrolls the rounds. Round k's
+      argmax pair is a 1-row ``orderBy(cnt DESC, left, right).limit(1)``
+      frame (TakeOrderedAndProject), broadcast cross-joined onto the
+      vocab-sized symbol frame, so the merge rule is applied as COLUMNS
+      inside the codegen'd fold (:func:`_bpe_apply_merge_cols`). Round
+      k+1 references round k's symbols both directly and through its
+      argmax, so the naive lazy tree doubles per round (measured: ~28 s
+      of driver-side analysis at 8 rounds); a LAZY localCheckpoint per
+      round truncates lineage at the vocab-sized symbol frame, making
+      build and execution linear in rounds.
+
+    Both plans stop when no pair is left, so the table can be shorter
+    than ``n_merges``; they learn identical tables (pinned by
+    tests/test_text_quality.py against the loop forced by a negative
+    limit)."""
+    wc = bpe_word_counts(docs, text_col).localCheckpoint(eager=False)
+    if _count_in_one_job(wc) <= _LOCAL_MAX_WORDS:
+        return wc.coalesce(1).mapInArrow(
+            functools.partial(_bpe_train_task, n_merges),
+            "merge_rank int, lhs string, rhs string, merged string, cnt bigint",
+        )
     syms = wc.select(F.split("word", "").alias("symbols"), "n")
-    syms = syms.localCheckpoint(eager=False)
     rounds = []
     for k in range(1, n_merges + 1):
         top = (
@@ -1907,6 +2067,35 @@ def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
     return out
 
 
+def _bpe_encode_word(word: str, rank: dict, memo: dict) -> list[str]:
+    """One pre-token through the learned merges in RANK order: while some
+    adjacent pair has a rank, the lowest-ranked one is applied everywhere
+    (:func:`_bpe_merge_pair`). ``memo`` caches the words already seen."""
+    got = memo.get(word)
+    if got is not None:
+        return got
+    s = list(word)
+    while len(s) > 1:
+        ranked = [(rank[p], p) for p in zip(s, s[1:]) if p in rank]
+        if not ranked:
+            break
+        s = _bpe_merge_pair(s, *min(ranked)[1])
+    memo[word] = s
+    return s
+
+
+def _bpe_encode_batches(rank: dict, splitter, text_col: str, out_col: str, batches):
+    """``mapInPandas`` body of :func:`bpe_encode`, module-level for the
+    reason :func:`_bpe_train_task` gives."""
+    for pdf in batches:
+        memo: dict = {}
+        pdf[out_col] = [
+            [t for w in splitter.findall(x or "") for t in _bpe_encode_word(w, rank, memo)]
+            for x in pdf[text_col]
+        ]
+        yield pdf
+
+
 def bpe_encode(
     docs,
     merges: list[tuple[str, str]],
@@ -1916,8 +2105,8 @@ def bpe_encode(
     """Tokenize with learned merges: pre-tokenize with ``BPE_SPLIT_RE``,
     split each pre-token to characters, apply the merges IN LEARNED
     ORDER (the BPE encode contract — rank order, not greedy-longest).
-    The merge table is closure-captured (tokenizers are small — 50k
-    rules ≈ 1 MB); application is a vectorized Arrow-batched pass
+    The merge table travels in the pickled task (tokenizers are small —
+    50k rules ≈ 1 MB); application is a vectorized Arrow-batched pass
     (mapInPandas): per batch, a dict-driven loop over pre-tokens with a
     per-batch memo — each DISTINCT pre-token in a batch is encoded once,
     so Zipf repetition makes the amortized cost per row tiny. A pure
@@ -1926,57 +2115,17 @@ def bpe_encode(
     UDF-is-justified case, same as operators/scoring.py.
 
     Returns ``docs`` plus ``out_col: array<string>``."""
-    import pandas as pd
+    import re as _re
 
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    import re as _re
-
     rank = {pair: i for i, pair in enumerate(merges)}
-    splitter = _re.compile(BPE_SPLIT_RE)
-
-    def encode_word(word: str, memo: dict) -> list[str]:
-        got = memo.get(word)
-        if got is not None:
-            return got
-        s = list(word)
-        while len(s) > 1:
-            best, best_rank = None, None
-            for i in range(len(s) - 1):
-                r = rank.get((s[i], s[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best, best_rank = i, r
-            if best is None:
-                break
-            # replace ALL occurrences of this pair left-to-right (one
-            # merge rule application, Sennrich Algorithm 1 semantics —
-            # matches _bpe_apply_merge's fold)
-            l, r = s[best], s[best + 1]
-            out, i = [], 0
-            while i < len(s):
-                if i < len(s) - 1 and s[i] == l and s[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            s = out
-        memo[word] = s
-        return s
-
     schema = StructType(
         docs.schema.fields + [StructField(out_col, ArrayType(StringType()))]
     )
-
-    def run(batches):
-        for pdf in batches:
-            memo: dict = {}
-            pdf[out_col] = [
-                [t for w in splitter.findall(x or "") for t in encode_word(w, memo)]
-                for x in pdf[text_col]
-            ]
-            yield pdf
-
+    run = functools.partial(
+        _bpe_encode_batches, rank, _re.compile(BPE_SPLIT_RE), text_col, out_col
+    )
     return docs.mapInPandas(run, schema=schema)
 
 

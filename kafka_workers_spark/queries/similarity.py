@@ -626,7 +626,10 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     trains all m), encode the corpus as m codes per vector, then score
     every candidate as a sum of m broadcast-LUT lookups and take the
     top-k by exact integer ADC distance. The oracle replays the entire
-    chain — training, encoding, LUT, scoring — bit-identically.
+    chain — training, encoding, LUT, scoring — bit-identically. The
+    training sample is under ``_LOCAL_MAX_TRAIN`` rows, so its Lloyd
+    steps run in ONE Python task (operators.similarity._lloyd); only the
+    final encode pass over the corpus is a distributed map.
 
     Scale shape (10⁹ vectors): the corpus side of the search never reads
     the vectors, only m small codes per vector (m·log2(k) bits at rest);

@@ -951,13 +951,15 @@ def _sql_bpe_ctes(n_merges: int) -> str:
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE merge LOOP, oracle-checked (operators.text.bpe_train_plan,
     Sennrich et al. ACL 2016 Algorithm 1): {_BPE_MERGES} merge rounds
-    learned from the corpus as ONE collect-free Spark plan — each
-    round's argmax pair is a broadcast 1-row TakeOrderedAndProject
-    frame applied as columns inside the codegen'd greedy fold, and the
-    oracle unrolls the identical rounds as CTEs, replaying the greedy
-    left-to-right scan statelessly via run parity (overlapping matches
-    exist only for l = r, where the scan provably merges the
-    even-offset positions of each run). Pure integer counts +
+    learned from the corpus. The test corpora's vocabularies are far
+    under ``_LOCAL_MAX_WORDS``, so the rounds run inside ONE Python task
+    over the checkpointed word counts; a larger vocabulary unrolls them
+    as a Spark plan (each round's argmax a broadcast 1-row
+    TakeOrderedAndProject frame applied as columns inside the codegen'd
+    greedy fold). The oracle unrolls the identical rounds as CTEs,
+    replaying the greedy left-to-right scan statelessly via run parity
+    (overlapping matches exist only for l = r, where the scan provably
+    merges the even-offset positions of each run). Pure integer counts +
     lexicographic tie-breaks end to end, so the learned merge TABLE —
     rule order, spellings, and corpus-weighted counts — matches
     bit-for-bit. Scale shape: the corpus is touched once (the word

@@ -4,6 +4,8 @@ but the free optimizations must be verified, not assumed)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kafka_workers_spark.plans import audit
@@ -455,14 +457,39 @@ def _shape(a):
         ("ann_ivf_topk", (19, 7, 0, 0, 3, 0, 0)),
     ],
 )
-def test_quantizer_plan_shape_pinned(spark, name, want):
+def test_quantizer_plan_shape_pinned(spark, monkeypatch, name, want):
     """Cold-plan pins for the two rows built on the shared exact-integer
     Lloyd loop (operators/similarity.py ``_lloyd``): a change to the
     loop's shape shows up here as a changed tuple. clearCache first, for
-    the reason test_pagerank_plan_shape_pinned gives."""
+    the reason test_pagerank_plan_shape_pinned gives. The loop is forced
+    (a negative ``_LOCAL_MAX_TRAIN``): these small training sets take
+    the one-task path by default, pinned below."""
+    monkeypatch.setattr("kafka_workers_spark.operators.similarity._LOCAL_MAX_TRAIN", -1)
     spark.catalog.clearCache()
     a = audit(POOL[name].fn(spark, SF))
     assert _shape(a) == want, (_shape(a), a.text[:800])
+
+
+def _map_in_arrow(a) -> int:
+    return len(re.findall(r"^\(\d+\) MapInArrow\b", a.text, re.MULTILINE))
+
+
+@pytest.mark.parametrize(
+    "name, want",
+    [
+        ("ann_pq_adc_topk", ((9, 2, 0, 0, 3, 0, 0), 1)),
+        ("ann_ivf_topk", ((13, 6, 0, 0, 1, 0, 0), 1)),
+    ],
+)
+def test_quantizer_one_task_plan_shape_pinned(spark, name, want):
+    """The default shape of the same two rows: their training sets are
+    under ``_LOCAL_MAX_TRAIN``, so the Lloyd steps are ONE MapInArrow
+    task over the pinned wide training rows (its codewords pinned too)
+    and no step appears in the plan; the final assignment is the loop's
+    own broadcast map pass."""
+    spark.catalog.clearCache()
+    a = audit(POOL[name].fn(spark, SF))
+    assert (_shape(a), _map_in_arrow(a)) == want, (_shape(a), _map_in_arrow(a), a.text[:800])
 
 
 def test_ingest_encoders_are_one_map_pass(spark):
@@ -501,7 +528,7 @@ def test_cusum_plans_one_window_chain_no_loop(spark):
     assert a.broadcast_joins >= 1, a.text[:800]
 
 
-def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark):
+def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark, monkeypatch):
     """The unrolled BPE trainer's design claims (rotated INTO the
     driver window round 15): each round's argmax pair compiles to a
     1-row TakeOrderedAndProject (per-partition top-1 + driver merge of
@@ -510,7 +537,10 @@ def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark):
     word-count base (rewrite chains hide behind the per-round lazy
     checkpoint cut), and the whole chain stays JVM-side. Since r16 the
     word-count base itself sits behind the round-0 lazy checkpoint, so
-    its exchange leaves the visible plan too."""
+    its exchange leaves the visible plan too. The round loop is forced
+    (a negative ``_LOCAL_MAX_WORDS``): the test corpus takes the
+    one-task path by default, pinned below."""
+    monkeypatch.setattr("kafka_workers_spark.operators.text._LOCAL_MAX_WORDS", -1)
     spark.catalog.clearCache()
     a = audit(REG["text_bpe_train"].fn(spark, SF))
     assert "TakeOrderedAndProject" in a.text, a.text[:800]
@@ -518,6 +548,37 @@ def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark):
     assert a.sortmerge_joins == 0, a.text[:800]
     expected = 8  # one per round; the word count hides behind the round-0 pin
     assert a.exchanges == expected, (a.exchanges, a.text[:800])
+
+
+def test_bpe_train_plan_one_task_shape(spark):
+    """The default BPE plan on a vocabulary under ``_LOCAL_MAX_WORDS``:
+    one MapInArrow task over the checkpointed word counts (coalesced to
+    one partition), so no round, argmax, join or exchange is left in the
+    plan."""
+    spark.catalog.clearCache()
+    a = audit(REG["text_bpe_train"].fn(spark, SF))
+    assert _map_in_arrow(a) == 1, a.text[:800]
+    assert "TakeOrderedAndProject" not in a.text, a.text[:800]
+    got = (a.exchanges, a.broadcast_joins, a.nested_loop_joins, a.cartesian_products)
+    assert got == (0, 0, 0, 0), (got, a.text[:800])
+
+
+@pytest.mark.parametrize("name, most", [("text_bpe_train", 4), ("ann_pq_adc_topk", 16)])
+def test_small_trainers_run_few_spark_jobs(spark, name, most):
+    """A load-independent pin of what the one-task trainers save: the
+    Spark jobs of building and collecting the row, counted from the
+    status tracker under a job group (27 and 29 jobs when every BPE round
+    and Lloyd step was its own Spark stage)."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = f"small-trainer-jobs-{name}"
+    sc.setJobGroup(group, "count the row's Spark jobs")
+    try:
+        POOL[name].fn(spark, SF).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= most, jobs
 
 
 def test_bfs_reach_plan_shape(spark):

@@ -1272,3 +1272,149 @@ def test_kcenter_coreset_matches_python_greedy_replay(spark):
         assert got == expect, f"trial {trial}: {got} != {expect}"
         radii = [r2 for _, _, r2 in got[1:]]
         assert all(a >= b for a, b in zip(radii, radii[1:])), radii
+
+
+# ---------------------------------------------------------------------------
+# _lloyd's one-task path against the forced Spark loop
+# ---------------------------------------------------------------------------
+
+_TRAIN_LIMIT = "kafka_workers_spark.operators.similarity._LOCAL_MAX_TRAIN"
+
+
+def _long_frame(spark, vecs: dict):
+    """``{vec_id: [x, ...]}`` → long ``(vec_id, i, x)`` rows."""
+    return spark.createDataFrame(
+        [(v, i, x) for v, xs in vecs.items() for i, x in enumerate(xs)],
+        "vec_id long, i int, x long",
+    )
+
+
+def _random_vecs(seed: int, n: int, dim: int, lo: int, hi: int) -> dict:
+    import random
+
+    rng = random.Random(seed)
+    vecs = {v: [rng.randint(lo, hi) for _ in range(dim)] for v in rng.sample(range(10 * n), n)}
+    first, second = sorted(vecs)[:2]
+    vecs[second] = list(vecs[first])  # a duplicated seed: its cluster empties
+    return vecs
+
+
+def _train_both(monkeypatch, fn):
+    """``fn()`` → frames, collected on the one-task path and on the
+    forced loop: (schema, sorted rows) per frame, or the error text."""
+
+    def run():
+        try:
+            return [(f.schema.simpleString(), sorted(map(tuple, f.collect()))) for f in fn()]
+        except Exception as e:  # noqa: BLE001 — compared across paths
+            return ("raised", type(e).__name__)
+
+    local = run()
+    with monkeypatch.context() as m:
+        m.setattr(_TRAIN_LIMIT, -1)
+        loop = run()
+    return local, loop
+
+
+_VEC_SETS = {
+    "small_negative": (11, 30, 6, -7, 3),
+    "wide_range": (12, 60, 8, -10**6, 10**6),
+    "large_but_exact": (13, 25, 4, -10**8, 10**8),
+}
+
+
+@pytest.mark.parametrize("iters", [0, 1, 3])
+@pytest.mark.parametrize("vec_set", sorted(_VEC_SETS))
+def test_lloyd_one_task_path_matches_forced_loop(spark, monkeypatch, vec_set, iters):
+    """kmeans_fixed and pq_train train bit-identical codebooks and
+    assignments (values and column types) on the one-task path and on the
+    Spark loop: floor-divided means of negative sums, lowest-code ties,
+    a duplicated seed whose cluster empties and drops out, per-subspace
+    codebooks, a training sample, and ``iters`` 0."""
+    from kafka_workers_spark.operators.similarity import kmeans_fixed, pq_train
+    from kafka_workers_spark.plans import audit
+
+    vecs = _random_vecs(*_VEC_SETS[vec_set])
+    dim = len(next(iter(vecs.values())))
+    comp = _long_frame(spark, vecs)
+    train = comp.filter(F.col("vec_id") % 3 != 1)
+    cents, _ = kmeans_fixed(comp, k=5, iters=iters)
+    assert "MapInArrow" in audit(cents).text  # the default really is one task
+    for fn in (
+        lambda: kmeans_fixed(comp, k=5, iters=iters),
+        lambda: kmeans_fixed(comp, k=4, iters=iters, train=train),
+        lambda: pq_train(comp, m=2, dim=dim, k=3, iters=iters),
+        lambda: pq_train(comp, m=dim // 2, dim=dim, k=4, iters=iters, train=train),
+    ):
+        local, loop = _train_both(monkeypatch, fn)
+        assert local == loop
+
+
+def test_lloyd_paths_agree_on_bad_and_edge_input(spark, monkeypatch):
+    """Input the one-task path does not take — an empty guarded training
+    frame, ragged dims, widths that differ between ids, NULL components,
+    bigint overflow — raises the loop's own error (or gives the loop's
+    result) whatever the limit; an empty corpus trains empty codebooks
+    on both paths."""
+    from kafka_workers_spark.operators.similarity import kmeans_fixed, pq_train
+
+    from kafka_workers_spark.operators.dedup import embedding_fixed, explode_fixed
+
+    comp = _long_frame(spark, _random_vecs(5, 12, 4, -9, 9))
+    empty = comp.filter(F.lit(False))
+    emb = load_table(spark, SF, "embeddings").filter(F.col("vec_id") < 20)
+    table = explode_fixed(
+        emb.select("vec_id", embedding_fixed(F.col("embedding")).alias("v6")), ["vec_id"]
+    )
+    cases = {
+        "empty_train": (lambda: pq_train(
+            table, m=4, dim=64, k=3, iters=1, train=table.filter(F.lit(False))),
+            "training frame is empty"),
+        "ragged": (lambda: kmeans_fixed(spark.createDataFrame(
+            [(1, 0, 5), (1, 1, 7), (2, 1, 9), (2, 2, 100)], "vec_id long, i int, x long"), k=1, iters=1),
+            "width mismatch"),
+        "widths": (lambda: kmeans_fixed(spark.createDataFrame(
+            [(1, 0, 5), (1, 1, 7), (2, 0, 9)], "vec_id long, i int, x long"), k=1, iters=1),
+            "vector/centroid width mismatch"),
+        "overflow": (lambda: kmeans_fixed(_long_frame(
+            spark, {1: [3 * 10**18, 0], 2: [3 * 10**18, 1], 3: [-3 * 10**18, 2]}), k=1, iters=1),
+            "(?i)overflow"),
+    }
+    for name, (fn, msg) in cases.items():
+        for limit in (None, -1):
+            with monkeypatch.context() as m:
+                if limit is not None:
+                    m.setattr(_TRAIN_LIMIT, limit)
+                cents, assign = fn()  # construction never raises
+                with pytest.raises(Exception, match=msg):
+                    cents.collect()
+                    assign.collect()
+    nulls = spark.createDataFrame(
+        [(1, 0, 5), (1, 1, None), (2, 0, 9), (2, 1, 4), (3, 0, -2), (3, 1, 1)],
+        "vec_id long, i int, x long",
+    )
+    for fn in (lambda: kmeans_fixed(nulls, k=2, iters=2), lambda: kmeans_fixed(empty, k=3, iters=2)):
+        local, loop = _train_both(monkeypatch, fn)
+        assert local == loop
+    assert _train_both(monkeypatch, lambda: kmeans_fixed(empty, k=3, iters=2))[0][0][1] == []
+
+
+def test_lloyd_solver_refuses_what_could_overflow():
+    """The numpy solver never wraps: rows whose squared distances or
+    cluster sums could leave bigint raise before any arithmetic, and the
+    path choice's bound sends them to the loop (whose ANSI arithmetic
+    raises on a real overflow)."""
+    import math
+
+    import numpy as np
+
+    from kafka_workers_spark.operators.similarity import _int64_exact, _lloyd_solve
+
+    xs = np.array([[3 * 10**18, 0], [-3 * 10**18, 1]], dtype=np.int64)
+    with pytest.raises(OverflowError, match="kmeans_fixed"):
+        _lloyd_solve(xs, np.array([0]), np.array([0]), 1, "kmeans_fixed")
+    assert not _int64_exact(2, 2, -3 * 10**18, 3 * 10**18)
+    assert _int64_exact(10**6, 64, -10**6, 10**6)
+    # the distance bound is exact at its edge: (2m)² ≤ 2⁶³−1 < (2(m+1))²
+    m = math.isqrt((2**63 - 1) // 4)
+    assert _int64_exact(1, 1, 0, m) and not _int64_exact(1, 1, 0, m + 1)

@@ -914,6 +914,130 @@ def test_bpe_train_plan_run_parity_overlap(spark):
         assert got == expected, (n, got, expected)
 
 
+_WORDS_LIMIT = "kafka_workers_spark.operators.text._LOCAL_MAX_WORDS"
+
+
+def _seeded_corpus(seed: int, n_docs: int = 40) -> list[str | None]:
+    """Documents over a small alphabet (so pair counts tie often), with
+    digit runs, punctuation, NULL texts and non-BMP characters."""
+    import random
+
+    rng = random.Random(seed)
+    alphabet = "aab" + "cd" * seed + "\U0001F600\u00e9"
+    docs = []
+    for _ in range(n_docs):
+        if rng.random() < 0.1:
+            docs.append(None)
+            continue
+        words = [
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 7)))
+            for _ in range(rng.randint(0, 8))
+        ]
+        docs.append(" ".join(words) + rng.choice(["", " 123", "!", " x9"]))
+    return docs
+
+
+_BPE_CORPORA = {
+    "seed1": _seeded_corpus(1),
+    "seed2": _seeded_corpus(2),
+    "seed3": _seeded_corpus(3),
+    "runs": ["aaaa aaa aaaaa", "aaaaaa baab", None],
+    "ties": ["ab cd ef", "ab cd ef", "gh"],
+    "non_bmp": ["\U0001F600\U0001F600 a\U0001F600b", "\U00010348x \U00010348\U00010348"],
+    "null_only": [None, None],
+    "empty": [],
+}
+
+
+def _bpe_both(spark, monkeypatch, texts, fn):
+    """``fn(docs)`` on the one-task path, then on the forced Spark loop."""
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    local = fn(df)
+    with monkeypatch.context() as m:
+        m.setattr(_WORDS_LIMIT, -1)
+        loop = fn(df)
+    return local, loop
+
+
+@pytest.mark.parametrize("corpus", sorted(_BPE_CORPORA))
+def test_bpe_one_task_path_matches_forced_loop(spark, monkeypatch, corpus):
+    """The one-task solver and the Spark round loop learn bit-identical
+    merge tables — ranks, spellings and counts, at every depth up to
+    exhaustion — and the eager form agrees with its own loop, early stop
+    included. Corpora: seeded tie-heavy vocabularies, l == r runs, exact
+    count ties, NULL texts, an empty corpus and non-BMP characters
+    (Spark's ``split(word, '')`` and Python's ``list(word)`` both split
+    by code point)."""
+    from kafka_workers_spark.operators.text import bpe_train, bpe_train_plan
+
+    texts = _BPE_CORPORA[corpus]
+    for n in (1, 4, 30):
+        local, loop = _bpe_both(
+            spark, monkeypatch, texts,
+            lambda d: [tuple(r) for r in bpe_train_plan(d, n).orderBy("merge_rank").collect()],
+        )
+        assert local == loop, (corpus, n, local, loop)
+        assert [r[0] for r in local] == list(range(1, len(local) + 1))
+    for min_count in (1, 2, 3):
+        local, loop = _bpe_both(
+            spark, monkeypatch, texts, lambda d: bpe_train(d, 12, min_pair_count=min_count)
+        )
+        assert local == loop, (corpus, min_count, local, loop)
+
+
+def test_bpe_one_task_path_learns_the_full_table_and_stops(spark):
+    """The default (one-task) plan on a corpus with few pairs: every
+    merge is learned, then the table ends when no pair is left — a
+    30-round request returns the exhaustive table, same as the Python
+    reference."""
+    from kafka_workers_spark.operators.text import bpe_train_plan
+
+    texts = ["abc abc ab", "bcd"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = bpe_train_plan(df, 30).orderBy("merge_rank").collect()
+    assert [(r.lhs, r.rhs) for r in rows] == [("a", "b"), ("ab", "c"), ("b", "c"), ("bc", "d")]
+    assert [r.cnt for r in rows] == [3, 2, 1, 1]
+    assert [r.merged for r in rows] == ["ab", "abc", "bc", "bcd"]
+
+
+def test_bpe_merges_solver_matches_brute_force_recount():
+    """The incremental solver (heap + pair-to-word index) against a
+    recount-everything reference on random vocabularies: same rules and
+    counts, including code-point tie order across non-BMP symbols."""
+    import random
+    from collections import Counter
+
+    from kafka_workers_spark.operators.text import _bpe_merge_pair, _bpe_merges
+
+    def brute(words, counts, n, min_count):
+        vocab = [list(w) for w in words]
+        out = []
+        for _ in range(n):
+            pairs = Counter()
+            for syms, c in zip(vocab, counts):
+                for p in zip(syms, syms[1:]):
+                    pairs[p] += c
+            if not pairs:
+                break
+            (l, r), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+            if c < min_count:
+                break
+            out.append((l, r, c))
+            vocab = [_bpe_merge_pair(s, l, r) for s in vocab]
+        return out
+
+    for seed in range(25):
+        rng = random.Random(seed)
+        alphabet = rng.sample("abcde\U0001F600\U00010348\u00e9z", rng.randint(2, 6))
+        words = list({
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 9)))
+            for _ in range(rng.randint(0, 60))
+        })
+        counts = [rng.randint(1, 5) for _ in words]
+        for n, min_count in ((40, 1), (10, 2)):
+            assert _bpe_merges(words, counts, n, min_count) == brute(words, counts, n, min_count), seed
+
+
 def test_bpe_encode_applies_merges_in_learned_order(spark):
     """Rank order, not positional greed: on 'abc' with merges
     [(b,c), (a,b)], rank 0 is (b,c), so the encode must produce

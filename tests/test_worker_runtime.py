@@ -250,3 +250,47 @@ def test_transform_batches_function_imports_the_package_when_unpickled(guarantee
     schema = StructType([StructField("x", LongType()), StructField("__error", StringType())])
     transform_batches(df, lambda pdf: pdf, schema, guarantee=guarantee)
     assert _imports_package_when_unpickled(df.func)
+
+
+def _bpe_train_plan_site(spark):
+    from kafka_workers_spark.operators.text import bpe_train_plan
+
+    bpe_train_plan(spark.createDataFrame([("ab ab",)], "text string"), 2)
+
+
+def _lloyd_site(spark):
+    from kafka_workers_spark.operators.similarity import kmeans_fixed
+
+    comp = spark.createDataFrame([(1, 0, 5), (2, 0, 7)], "vec_id long, i int, x long")
+    kmeans_fixed(comp, k=1, iters=1)
+
+
+def _bpe_encode_site(spark):
+    from kafka_workers_spark.operators.text import bpe_encode
+
+    bpe_encode(spark.createDataFrame([("ab ab",)], "text string"), [("a", "b")])
+
+
+@pytest.mark.parametrize(
+    "site", [_bpe_train_plan_site, _lloyd_site, _bpe_encode_site],
+    ids=["bpe_train_plan", "lloyd", "bpe_encode"],
+)
+def test_library_map_task_imports_the_package_when_unpickled(spark, monkeypatch, site):
+    """The Python tasks of the one-task trainers (BPE's merge solver,
+    the Lloyd solver) and of bpe_encode are module-level library
+    functions, so the worker that unpickles one imports the package and
+    installs the wrapper. The function is captured where the operator
+    hands it to ``mapInArrow``/``mapInPandas``."""
+    cls = type(spark.range(1))
+    seen = []
+    for name in ("mapInArrow", "mapInPandas"):
+        orig = getattr(cls, name)
+
+        def capture(self, func, *args, _orig=orig, **kwargs):
+            seen.append(func)
+            return _orig(self, func, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, capture)
+    site(spark)
+    assert len(seen) == 1
+    assert _imports_package_when_unpickled(seen[0])
