@@ -4,10 +4,11 @@ codebooks, plus the embedding dedup, storage and search around them.
 One exact-integer quantizer core serves both quantizers. Training
 (:func:`kmeans_fixed`; :func:`pq_train`, keyed by subspace) is the one
 Lloyd trainer :func:`_lloyd` — one Python task for a training set of at
-most ``_LOCAL_MAX_TRAIN`` rows, a Spark pass per step above; ingest
-(:func:`assign_lists`, :func:`pq_encode`) is one map pass over the batch. Both use one codebook
-row (:func:`_codebook`) and one nearest-codeword rule (:func:`_nearest`:
-exact integer squared L2, ties to the lowest code). So ingest reproduces
+most ``_LOCAL_MAX_TRAIN`` cells (rows × width), a Spark pass per step
+above; ingest (:func:`assign_lists`, :func:`pq_encode`) is one map pass
+over the batch. Both use one codebook row (:func:`_codebook`) and one
+nearest-codeword rule (:func:`_nearest`: exact integer squared L2, ties
+to the lowest code). So ingest reproduces
 training's labels bit for bit, and the DuckDB oracles of the registered
 queries (queries/similarity.py) replay the whole chain.
 :func:`train_ivf` (pyspark.ml KMeans) is the float trainer whose init
@@ -26,7 +27,8 @@ import functools
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -75,6 +77,8 @@ def kmeans_fixed(
     iters: int = 2,
     id_col: str = "vec_id",
     train: DataFrame | None = None,
+    *,
+    _lazy: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic Lloyd's KMeans over long-format fixed-point vectors —
     the oracle-checkable trained quantizer behind the registered
@@ -98,9 +102,14 @@ def kmeans_fixed(
     (sites ``similarity.kmeans_fixed.cents`` / ``.assign``): every
     caller reads them more than once, and the operator owns the pins.
 
+    Building it runs ONE Spark job: the aggregate that pins and sizes
+    the training vectors (ARCHITECTURE.md §4 rule 8). The private
+    ``_lazy`` skips it and always builds the loop below, for callers
+    whose construction must run no job (:func:`semantic_dedup`).
+
     Scale shape: the shared :func:`_lloyd` trainer — vectors collapse
-    ONCE to dense arrays, pinned and sized by one aggregate at call
-    time. At most ``_LOCAL_MAX_TRAIN`` of them train in one Python task;
+    ONCE to dense arrays. A training set of at most ``_LOCAL_MAX_TRAIN``
+    cells (vectors × dims) trains in one Python task;
     above that, centroids ride one broadcast codebook row,
     nearest-centroid assignment (:func:`_nearest`) is a pure map pass,
     and each Lloyd pass costs exactly ONE shuffle (the (list, dim) mean
@@ -115,24 +124,30 @@ def kmeans_fixed(
     """
     cents, assign = _lloyd(
         exploded, train, k, iters, id_col,
-        op="kmeans_fixed", code="list_id", idx="i", dense_codes=False,
+        op="kmeans_fixed", code="list_id", idx="i", dense_codes=False, lazy=_lazy,
     )
     return cents, pin(assign, "similarity.kmeans_fixed.assign")
 
 
-#: Widened training sets (one row per id, or per (id, key)) up to this
-#: many rows are trained in one Python task (:func:`_lloyd_task`)
-#: instead of one Spark pass per Lloyd step. Measured with
-#: ``pq_train(m=4, dim=64, k=8, iters=2)`` plus a collect of the
-#: codebooks on generated vectors (components in ±10^6; local[3] on 4
-#: cores, 3 shuffle partitions, 3 GB driver, 1-min load 2–3; one-task vs
-#: loop, cold then warm rep; rows = 4 per vector):
+#: Widened training sets (one row per id, or per (id, key)) of up to
+#: this many cells (rows × width) are trained in one Python task
+#: (:func:`_lloyd_task`) instead of one Spark pass per Lloyd step.
+#: Measured with ``pq_train(m=4, dim=64, k=8, iters=2)`` plus a collect
+#: of the codebooks on generated vectors (components in ±10^6; local[3]
+#: on 4 cores, 3 shuffle partitions, 3 GB driver, 1-min load 2–3;
+#: one-task vs loop, cold then warm rep; 4 rows of width 16 per vector):
 #:   4·10^4 rows  2.4-7.3 s  vs  3.9-6.1 s
 #:   2·10^5 rows  3.0-3.6 s  vs  9.3-9.7 s
 #:   8·10^5 rows  8.7-10.8 s vs 33-44 s
-#: Warm, no crossover; the limit is the largest size measured, where the
-#: task's Python heap peaked at 232 MB (tracemalloc; 113 MB of input).
-_LOCAL_MAX_TRAIN = 800_000
+#: Warm, no crossover; the limit is the largest size measured, 1.28·10^7
+#: cells. The task's memory follows cells, not rows: at 1.28·10^7 cells
+#: the solver alone (``_lloyd_task``, k=8, iters=2, no Spark) peaked at
+#:   8·10^5 rows × 16 (4 keys)  Python heap 141 MB, Arrow 106 MB, 2.6 s
+#:   2·10^5 rows × 64           Python heap 142 MB, Arrow 103 MB, 1.1 s
+#:   1.7·10^4 rows × 768        Python heap 106 MB, Arrow 102 MB, 0.7 s
+#: (tracemalloc and Arrow's pool high-water mark, one process on a
+#: 4-core box; ~100 MB of Arrow input in each case).
+_LOCAL_MAX_TRAIN = 12_800_000
 
 _INT64_MAX = 2**63 - 1
 
@@ -194,20 +209,16 @@ def _lloyd_task(k: int, iters: int, dense: bool, op: str, id_col: str,
     key matches no codeword, so its rows are never assigned and only
     its seeds survive, at ``iters == 0``. Module-level, so the pickled
     task imports the package in its worker (see operators/text.py
-    ``_bpe_train_task``)."""
-    batches = list(batches)
-    if not batches:
-        return
-    t = pa.Table.from_batches(batches)
+    ``_bpe_train_task``). :func:`_fits_one_task` has checked the rows:
+    at least one, all of one width, no NULL component."""
+    t = pa.Table.from_batches(list(batches))
     ids = t.column(id_col).to_pylist()
     seeds = sorted({i for i in ids if i is not None})
     seeds = ([None] if None in ids else []) + seeds
     rank = {s: r for r, s in enumerate(seeds[:k]) if s is not None}
     rows = t.column("__xs").combine_chunks()
-    width = len(rows[0]) if len(rows) else 0
-    if pc.any(pc.not_equal(pc.list_value_length(rows), width)).as_py():
-        raise ValueError(f"{op}: vector/centroid width mismatch — dims must be dense")
-    xs = rows.flatten().to_numpy().astype(np.int64).reshape(len(ids), width)
+    width = len(rows[0])
+    xs = rows.flatten().to_numpy().astype(np.int64, copy=False).reshape(len(ids), width)
     groups = t.column(key).to_pylist() if key else [0] * len(ids)
     by_key: dict = {}
     for r, g in enumerate(groups):
@@ -225,7 +236,7 @@ def _lloyd_task(k: int, iters: int, dense: bool, op: str, id_col: str,
             [c if dense else seeds[c] for c, _ in seeded], dtype=np.int64
         )
         seed_rows = np.array([j for _, j in seeded], dtype=np.int64)
-        sub = xs[members]
+        sub = xs if len(members) == len(ids) else xs[members]
         if g is None:
             if iters:
                 continue
@@ -271,14 +282,14 @@ def _lloyd(
 
     Unless ``lazy``, the wide rows are generation-pinned and sized by
     ONE aggregate at call time (rows, widths, component range, NULLs).
-    A set of at most ``_LOCAL_MAX_TRAIN`` rows of one width, without
-    NULL components and inside :func:`_int64_exact`'s bound, is trained
-    in ONE Python task (:func:`_lloyd_task`): no Spark pass per step.
-    Anything else — an empty set, and any input whose sizing aggregate
-    raises, e.g. a ragged one — runs the Spark loop below,
-    which raises at the caller's first action as it always has.
-    ``lazy`` (semantic_dedup's job-free construction) always runs the
-    loop.
+    Rows of one width, at most ``_LOCAL_MAX_TRAIN`` cells in all,
+    without NULL components and inside :func:`_int64_exact`'s bound,
+    are trained in ONE Python task (:func:`_lloyd_task`): no Spark pass
+    per step. Anything else — an empty set, and any input whose sizing
+    aggregate raises in-plan, e.g. a ragged one — runs the Spark loop
+    below, which raises at the caller's first action as it always has.
+    ``lazy`` (semantic_dedup's job-free construction, through
+    :func:`kmeans_fixed`'s ``_lazy``) always runs the loop.
 
     The loop: each pass assigns with :func:`_nearest` against the
     broadcast :func:`_codebook` row — a map pass — and the (key, code,
@@ -356,12 +367,13 @@ def _lloyd(
 
 def _fits_one_task(wide: DataFrame, id_col: str) -> bool:
     """:func:`_lloyd`'s path choice, from one aggregate over the pinned
-    wide training rows (it materializes the pin); integral ids only, and
-    no aggregate at all under a negative limit, which no size meets.
-    False when the aggregate raises or counts no row: the loop plan then
-    gives the loop's own outcome — for a ragged or a guarded empty
-    training frame, the raise at the caller's first action."""
-    if _LOCAL_MAX_TRAIN < 0 or not isinstance(wide.schema[id_col].dataType, IntegralType):
+    wide training rows (it materializes the pin); integral ids only.
+    False when the aggregate counts no row, or raises in-plan (a guard's
+    or :func:`_widen_dense`'s ``raise_error``): the loop plan then gives
+    the loop's own outcome — for a ragged or a guarded empty training
+    frame, the raise at the caller's first action. Any other failure
+    propagates."""
+    if not isinstance(wide.schema[id_col].dataType, IntegralType):
         return False
     xs = F.col("__xs")
     try:
@@ -370,11 +382,15 @@ def _fits_one_task(wide: DataFrame, id_col: str) -> bool:
             F.min(F.array_min(xs)), F.max(F.array_max(xs)),
             F.bool_or(F.exists(xs, lambda x: x.isNull())),
         ).first()
-    except Exception:  # noqa: BLE001 — an in-plan raise_error, re-raised lazily by the loop
+    except (PySparkException, Py4JJavaError) as e:
+        # raise_error's condition; a guard's raise inside a broadcast
+        # arrives wrapped in the broadcast future's ExecutionException
+        if "[USER_RAISED_EXCEPTION]" not in str(e):
+            raise
         return False
-    if not 0 < n <= _LOCAL_MAX_TRAIN or nulls:
+    if not n or nulls or w_lo != w_hi or n * w_hi > _LOCAL_MAX_TRAIN:
         return False
-    return w_lo == w_hi and _int64_exact(n, w_hi, lo, hi)
+    return _int64_exact(n, w_hi, lo, hi)
 
 
 def _codebook(
@@ -881,13 +897,8 @@ def semantic_dedup(
             f"semantic_dedup: no id satisfies id % {train_mod} == 0 — the "
             "training sample is empty; pass a different train_mod or None",
         )
-    # the loop plan as it stands: construction runs no Spark job, so no
-    # sizing action for kmeans_fixed's one-task path
-    _, assign = _lloyd(
-        comp, train, k, iters, id_col,
-        op="kmeans_fixed", code="list_id", idx="i", dense_codes=False, lazy=True,
-    )
-    assign = pin(assign, "similarity.kmeans_fixed.assign")
+    # construction runs no Spark job, so no sizing action: the Lloyd loop
+    _, assign = kmeans_fixed(comp, k=k, iters=iters, id_col=id_col, train=train, _lazy=True)
     a, b = assign.alias("a"), assign.alias("b")
     cand = (
         a.join(
@@ -1152,6 +1163,9 @@ def pq_train(
     :func:`pq_encode` would have nothing to encode against, the
     silent-no-op failure mode this package guards against everywhere.
 
+    Building it runs ONE Spark job: the aggregate that pins and sizes
+    the training rows (ARCHITECTURE.md §4 rule 8).
+
     Returns ``(cents, codes)``: ``(sub, code, j, c6)`` integer codebooks
     (generation-pinned at ``similarity.pq_train.cents``) and ``(id_col,
     sub, code)`` — m small codes per vector, the at-rest representation
@@ -1160,8 +1174,8 @@ def pq_train(
     searchable without decompression via :func:`pq_adc_topk`).
 
     Scale shape (10⁹ vectors): the shared :func:`_lloyd` trainer keyed
-    by ``sub`` — a training set of at most ``_LOCAL_MAX_TRAIN`` (id, sub)
-    rows trains in one Python task (sized at call time); above that each
+    by ``sub`` — a training set of at most ``_LOCAL_MAX_TRAIN`` cells
+    ((id, sub) rows × dsub) trains in one Python task; above that each
     pass is one map assignment against the broadcast m·k-codeword row
     plus one (sub, code, j) mean shuffle. Pass ``train``
     (a deterministic id-mod sample) so Lloyd passes touch a fraction of

@@ -20,9 +20,10 @@ import heapq
 from typing import NamedTuple
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from kafka_workers_spark import store
 
@@ -1896,21 +1897,27 @@ def _bpe_train_task(n_merges: int, batches):
     )
 
 
-#: Word-count tables (distinct pre-tokens) up to this many rows are
-#: trained in one place — one Python task (:func:`bpe_train_plan`) or
-#: the driver (:func:`bpe_train`) — instead of one Spark round per
-#: merge. Measured with ``bpe_train_plan(n_merges=8)`` plus a collect on
-#: generated corpora (random 3–10 letter words, Zipf-like repeats;
-#: local[3] on 4 cores, 3 shuffle partitions, 3 GB driver, 1-min load
-#: 2–3; one-task vs loop, cold then warm rep):
+#: Word-count tables (distinct pre-tokens) of up to this many
+#: characters in all are trained in one place — one Python task
+#: (:func:`bpe_train_plan`) or the driver (:func:`bpe_train`) — instead
+#: of one Spark round per merge. Time, measured with
+#: ``bpe_train_plan(n_merges=8)`` plus a collect on generated corpora
+#: (random 3–10 letter words, Zipf-like repeats; local[3] on 4 cores, 3
+#: shuffle partitions, 3 GB driver, 1-min load 2–3; one-task vs loop,
+#: cold then warm rep; V words ≈ 6.5·V characters):
 #:   V = 10^4     0.8-4.5 s vs  6.1-9.6 s
 #:   V = 10^5     1.2 s     vs 16.4-17.6 s
 #:   V = 2.8·10^5 2.6-2.9 s vs 18.4-20.9 s
 #:   V = 8.8·10^5 7.5-7.6 s vs 48-60 s
-#: No crossover; the limit sits under the largest size measured, where
-#: the task's Python heap peaked at 511 MB (tracemalloc, 7.9·10^5
-#: words; the arrow input was 14 MB).
-_LOCAL_MAX_WORDS = 800_000
+#: No crossover. The task's memory follows characters, not words: the
+#: solver alone (:func:`_bpe_merges`, 8 merges, no Spark; tracemalloc)
+#: peaked at
+#:   7.7·10^5 words of 3–5 letters,   3.5·10^6 chars  197 MB, 3.9 s
+#:   7.1·10^5 words of 3–10 letters,  4.9·10^6 chars  465 MB, 6.1 s
+#:   2·10^5   words of 20–32 letters, 5.2·10^6 chars  420 MB, 5.1 s
+#:   10^5     words of 40–64 letters, 5.2·10^6 chars  413 MB, 5.7 s
+#: so the limit bounds characters, at the largest size measured.
+_LOCAL_MAX_CHARS = 5_200_000
 
 
 def bpe_train(
@@ -1931,9 +1938,10 @@ def bpe_train(
     EAGER, and what it buys over the lazy :func:`bpe_train_plan` is
     data-dependent CONTROL FLOW: early stop at ``min_pair_count`` and
     rule counts in the tens of thousands. The corpus is touched ONCE
-    (the word-count aggregate, checkpointed and counted). A vocabulary of at
-    most ``_LOCAL_MAX_WORDS`` words is collected and trained on the
-    driver by :func:`_bpe_merges` — no Spark job per merge. A larger one
+    (the word-count aggregate, checkpointed and sized in one job). A
+    vocabulary of at most ``_LOCAL_MAX_CHARS`` characters is collected
+    and trained on the driver by :func:`_bpe_merges` — no Spark job per
+    merge (ARCHITECTURE.md §4 rule 8). A larger one
     runs one round per merge on a held vocab-sized symbol frame: a
     codegen'd pair count + a 1-row argmax collect + an in-plan fold
     rewrite (:func:`_bpe_apply_merge_cols` with the rule as literals).
@@ -1944,7 +1952,7 @@ def bpe_train(
 
     wc = bpe_word_counts(docs, text_col).localCheckpoint(eager=False)
     try:
-        if _count_in_one_job(wc) <= _LOCAL_MAX_WORDS:
+        if _chars_in_one_job(wc) <= _LOCAL_MAX_CHARS:
             t = wc.toArrow()
             merges = _bpe_merges(
                 t.column("word").to_pylist(), t.column("n").to_pylist(),
@@ -1956,17 +1964,15 @@ def bpe_train(
         release(wc)
 
 
-def _count_in_one_job(df) -> int:
-    """Row count of a lazily checkpointed frame in ONE Spark job, the one
-    that materializes the checkpoint: a count over the executed plan's
-    rows. ``df.count()`` adds a second job for its global aggregate's
-    exchange, and a pinned (persisted) frame a third, for AQE's
-    table-cache stage. Spark Connect has no executed plan to count, so
-    it falls back to ``count()``."""
-    try:
-        return df._jdf.queryExecution().toRdd().count()  # noqa: SLF001
-    except AttributeError:
-        return df.count()
+def _chars_in_one_job(wc: DataFrame) -> int:
+    """Total characters of a lazily checkpointed word-count table, in
+    ONE Spark job, the one that materializes the checkpoint: metrics
+    observed on a no-op write. An aggregate action would add a second
+    job for its exchange."""
+    obs = Observation()
+    chars = F.coalesce(F.sum(F.length("word")), F.lit(0)).alias("chars")
+    wc.observe(obs, chars).write.format("noop").mode("overwrite").save()
+    return obs.get["chars"]
 
 
 def _bpe_train_loop(wc, n_merges: int, min_pair_count: int) -> list[tuple[str, str]]:
@@ -2006,11 +2012,12 @@ def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
     """Fixed-round BPE training (no early stop) returning the merge
     table ``(merge_rank, lhs, rhs, merged, cnt)``, one row per round.
 
-    The word-count table is lazily checkpointed and counted at call
-    time, in the one job the build runs (:func:`_count_in_one_job`; it
-    also materializes the checkpoint), and the count picks the plan:
+    Building it runs ONE Spark job (ARCHITECTURE.md §4 rule 8): the
+    word-count table is lazily checkpointed and sized at call time
+    (:func:`_chars_in_one_job`, which also materializes the checkpoint),
+    and its size picks the plan:
 
-    - At most ``_LOCAL_MAX_WORDS`` words: the table is coalesced
+    - At most ``_LOCAL_MAX_CHARS`` characters: the table is coalesced
       to one partition and one ``mapInArrow`` task runs Sennrich's loop
       over it (:func:`_bpe_merges`, the same solver :func:`bpe_train`
       uses on the driver). No round is a Spark job.
@@ -2030,10 +2037,10 @@ def bpe_train_plan(docs, n_merges: int = 8, text_col: str = "text"):
     tests/test_text_quality.py against the loop forced by a negative
     limit)."""
     wc = bpe_word_counts(docs, text_col).localCheckpoint(eager=False)
-    if _count_in_one_job(wc) <= _LOCAL_MAX_WORDS:
+    if _chars_in_one_job(wc) <= _LOCAL_MAX_CHARS:
         return wc.coalesce(1).mapInArrow(
             functools.partial(_bpe_train_task, n_merges),
-            "merge_rank int, lhs string, rhs string, merged string, cnt bigint",
+            from_arrow_schema(_BPE_MERGE_TABLE),
         )
     syms = wc.select(F.split("word", "").alias("symbols"), "n")
     rounds = []

@@ -627,7 +627,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every candidate as a sum of m broadcast-LUT lookups and take the
     top-k by exact integer ADC distance. The oracle replays the entire
     chain — training, encoding, LUT, scoring — bit-identically. The
-    training sample is under ``_LOCAL_MAX_TRAIN`` rows, so its Lloyd
+    training sample is under ``_LOCAL_MAX_TRAIN`` cells, so its Lloyd
     steps run in ONE Python task (operators.similarity._lloyd); only the
     final encode pass over the corpus is a distributed map.
 

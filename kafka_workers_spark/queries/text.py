@@ -952,7 +952,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE merge LOOP, oracle-checked (operators.text.bpe_train_plan,
     Sennrich et al. ACL 2016 Algorithm 1): {_BPE_MERGES} merge rounds
     learned from the corpus. The test corpora's vocabularies are far
-    under ``_LOCAL_MAX_WORDS``, so the rounds run inside ONE Python task
+    under ``_LOCAL_MAX_CHARS``, so the rounds run inside ONE Python task
     over the checkpointed word counts; a larger vocabulary unrolls them
     as a Spark plan (each round's argmax a broadcast 1-row
     TakeOrderedAndProject frame applied as columns inside the codegen'd

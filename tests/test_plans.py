@@ -452,8 +452,12 @@ def _shape(a):
     "name, want",
     [
         # PQ seeds its codebook from the pinned wide training frame: one
-        # pass over the long training rows fewer than a long-format seed
-        ("ann_pq_adc_topk", (16, 3, 0, 0, 5, 0, 0)),
+        # pass over the long training rows fewer than a long-format seed.
+        # The sizing aggregate has already run that pin, so the audit
+        # prints the cached plan's final and initial forms: one exchange
+        # and one nested-loop join (the empty-train guard) more than the
+        # unsized loop's (16, 3, 0, 0, 5, 0, 0)
+        ("ann_pq_adc_topk", (17, 3, 0, 0, 6, 0, 0)),
         ("ann_ivf_topk", (19, 7, 0, 0, 3, 0, 0)),
     ],
 )
@@ -462,8 +466,9 @@ def test_quantizer_plan_shape_pinned(spark, monkeypatch, name, want):
     Lloyd loop (operators/similarity.py ``_lloyd``): a change to the
     loop's shape shows up here as a changed tuple. clearCache first, for
     the reason test_pagerank_plan_shape_pinned gives. The loop is forced
-    (a negative ``_LOCAL_MAX_TRAIN``): these small training sets take
-    the one-task path by default, pinned below."""
+    (a negative ``_LOCAL_MAX_TRAIN``, so the sizing aggregate still runs
+    and chooses the loop): these small training sets take the one-task
+    path by default, pinned below."""
     monkeypatch.setattr("kafka_workers_spark.operators.similarity._LOCAL_MAX_TRAIN", -1)
     spark.catalog.clearCache()
     a = audit(POOL[name].fn(spark, SF))
@@ -538,9 +543,9 @@ def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark, monkey
     checkpoint cut), and the whole chain stays JVM-side. Since r16 the
     word-count base itself sits behind the round-0 lazy checkpoint, so
     its exchange leaves the visible plan too. The round loop is forced
-    (a negative ``_LOCAL_MAX_WORDS``): the test corpus takes the
+    (a negative ``_LOCAL_MAX_CHARS``): the test corpus takes the
     one-task path by default, pinned below."""
-    monkeypatch.setattr("kafka_workers_spark.operators.text._LOCAL_MAX_WORDS", -1)
+    monkeypatch.setattr("kafka_workers_spark.operators.text._LOCAL_MAX_CHARS", -1)
     spark.catalog.clearCache()
     a = audit(REG["text_bpe_train"].fn(spark, SF))
     assert "TakeOrderedAndProject" in a.text, a.text[:800]
@@ -551,7 +556,7 @@ def test_bpe_train_plan_argmax_take_ordered_one_exchange_per_round(spark, monkey
 
 
 def test_bpe_train_plan_one_task_shape(spark):
-    """The default BPE plan on a vocabulary under ``_LOCAL_MAX_WORDS``:
+    """The default BPE plan on a vocabulary under ``_LOCAL_MAX_CHARS``:
     one MapInArrow task over the checkpointed word counts (coalesced to
     one partition), so no round, argmax, join or exchange is left in the
     plan."""

@@ -1399,6 +1399,20 @@ def test_lloyd_paths_agree_on_bad_and_edge_input(spark, monkeypatch):
     assert _train_both(monkeypatch, lambda: kmeans_fixed(empty, k=3, iters=2))[0][0][1] == []
 
 
+def test_lloyd_sizing_falls_back_only_on_in_plan_raises(spark):
+    """The path choice turns an in-plan ``raise_error`` (a guard's, or
+    a ragged widen's) into the loop, which re-raises it lazily; any
+    other failure of the sizing job propagates at once."""
+    from kafka_workers_spark.operators.similarity import _fits_one_task
+
+    ids = spark.range(3).select(F.col("id").alias("vec_id"))
+    raised = ids.select("vec_id", F.array(F.raise_error(F.lit("guard")).cast("long")).alias("__xs"))
+    assert _fits_one_task(raised, "vec_id") is False
+    broken = ids.select("vec_id", F.array(F.expr("vec_id div 0")).alias("__xs"))
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _fits_one_task(broken, "vec_id")
+
+
 def test_lloyd_solver_refuses_what_could_overflow():
     """The numpy solver never wraps: rows whose squared distances or
     cluster sums could leave bigint raise before any arithmetic, and the

@@ -914,7 +914,7 @@ def test_bpe_train_plan_run_parity_overlap(spark):
         assert got == expected, (n, got, expected)
 
 
-_WORDS_LIMIT = "kafka_workers_spark.operators.text._LOCAL_MAX_WORDS"
+_CHARS_LIMIT = "kafka_workers_spark.operators.text._LOCAL_MAX_CHARS"
 
 
 def _seeded_corpus(seed: int, n_docs: int = 40) -> list[str | None]:
@@ -954,7 +954,7 @@ def _bpe_both(spark, monkeypatch, texts, fn):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     local = fn(df)
     with monkeypatch.context() as m:
-        m.setattr(_WORDS_LIMIT, -1)
+        m.setattr(_CHARS_LIMIT, -1)
         loop = fn(df)
     return local, loop
 
